@@ -750,6 +750,9 @@ def read_hive_acid(
     keep_identity: bool = False,
     max_writeid: int | None = None,
     valid_writeids: "ValidWriteIdList | None" = None,
+    partition_col: str | None = None,
+    partition_type: str = "string",
+    partition_values=None,
 ) -> DataFrame:
     """AcidUtils directory election + distributed per-file Arrow
     decode + the delete anti-join on (originalTransaction, bucket,
@@ -757,23 +760,37 @@ def read_hive_acid(
     verdict task 8), parameterized on the payload schema so it reads
     BOTH the hand-built fixture and layouts export_hive_acid emits.
 
-    One decode task per ORC file — or per ORC STRIPE when the
+    ``partition_col`` None reads an unpartitioned table: ONE implicit
+    partition whose directory is ``root``. Otherwise every first-level
+    ``root/<col>=<value>`` dir is a partition; each runs its own
+    election (getAcidState per partition), the partition column is
+    synthesized from the dir name (Hive never stores it in the files)
+    and cast to ``partition_type``, and NULL round-trips through
+    ``__HIVE_DEFAULT_PARTITION__``. ``partition_values`` (an iterable
+    of values; None = all) prunes driver-side, before any file is
+    listed — the decode manifest simply does not contain pruned
+    partitions' files (pinned by tests).
+
+    All partitions share ONE file manifest and ONE distributed decode
+    job: one decode task per ORC file — or per ORC STRIPE when the
     elected file count starves the session's parallelism
     (_decode_units: the post-compaction steady state at scale is one
     multi-GB base file per bucket, and stripes are Hive's own ACID
     split granularity); delete deltas are tiny by nature →
-    broadcast anti-join. ``keep_identity`` surfaces the row-id triple
-    alongside the payload (the compactor needs it to PRESERVE
-    identities — Hive's invariant that delete events committed after
-    a compaction still find their rows).
+    broadcast anti-join, keyed on (partition, otid, bucket, rid)
+    because row identities are unique only WITHIN a partition dir.
+    ``keep_identity`` surfaces the row-id triple alongside the payload
+    (the compactor needs it to PRESERVE identities — Hive's invariant
+    that delete events committed after a compaction still find their
+    rows).
 
-    ORIGINAL files (flat pre-conversion bucket files at the table
-    root — the ALTER TABLE SET transactional=true upgrade-in-place
+    ORIGINAL files (flat pre-conversion bucket files at a partition
+    dir — the ALTER TABLE SET transactional=true upgrade-in-place
     path) read with SYNTHESIZED identities, Hive's rule for rows that
     predate the ACID struct: originalTransaction 0, bucket from the
     filename (000000_0 → 0), rowId = the row's ordinal within its
-    bucket file — so post-conversion delete_delta events can target
-    rows Hive never rewrote.
+    bucket — so post-conversion delete_delta events can target rows
+    Hive never rewrote.
 
     ``valid_writeids`` (r10 verdict task 2) is the metastore's
     transaction state: its high watermark tightens ``max_writeid``
@@ -782,34 +799,70 @@ def read_hive_acid(
     dirs at decode."""
     import glob as _glob
 
+    names = [n for n, _ in payload_schema]
+    if partition_col in names:
+        raise ValueError(
+            f"partition column '{partition_col}' must not appear in "
+            "the payload schema (Hive stores it only in the dir name)"
+        )
     max_writeid, invalid = _effective_bounds(max_writeid, valid_writeids)
     invalid_list = sorted(invalid)  # closure-shipped to decode tasks
-    data_dirs, delete_dirs, original_files, bounds = _elect_dirs(
-        root, max_writeid, invalid
-    )
-
-    def files_df(dirs: list[str], split_stripes: bool = False) -> DataFrame:
+    if partition_col is None:
+        parts = [("", root)]
+    else:
+        wanted = (
+            None
+            if partition_values is None
+            else {
+                HIVE_DEFAULT_PARTITION if v is None else str(v)
+                for v in partition_values
+            }
+        )
+        parts = [
+            (v, d)
+            for v, d in partition_dirs(root, partition_col)
+            if wanted is None or v in wanted
+        ]
+    data_units: list[tuple] = []  # (path, min_ctid, max_ctid, pval)
+    del_units: list[tuple] = []
+    orig_units: list[tuple] = []  # (path, rid_offset, pval)
+    for pval, pdir in parts:
+        data_dirs, delete_dirs, original_files, bounds = _elect_dirs(
+            pdir, max_writeid, invalid
+        )
         # each file carries its dir's VALID writeid window — min =
         # base_n + 1 for a base-straddling merged delta (events below
         # are already in the base), max = the watermark for a
         # watermark-straddling one (events above are not yet visible)
         # — the per-event half of AcidUtils' ValidWriteIdList
-        paths = [
-            (f, *bounds.get(d, (0, _MAX_WRITEID)))
-            for d in dirs
-            for f in sorted(_glob.glob(os.path.join(d, "bucket_*")))
+        for dirs, units in ((data_dirs, data_units), (delete_dirs, del_units)):
+            for d in dirs:
+                lo, hi = bounds.get(d, (0, _MAX_WRITEID))
+                for f in sorted(_glob.glob(os.path.join(d, "bucket_*"))):
+                    units.append((f, lo, hi, pval))
+        # _copy_N: a bucket may hold SEVERAL original files (each
+        # pre-conversion INSERT appended bucket_N_copy_M); Hive
+        # synthesizes rowIds that CONTINUE across a bucket's files in
+        # filename order `[upstream: Hive ql/io/AcidUtils
+        # getAcidState originals, OrcRawRecordMerger
+        # OriginalReaderPair]`. Offsets need footer row counts ONLY
+        # when a bucket holds several files — a transitional state the
+        # first compaction folds — and they are read driver-side: the
+        # footers are metadata-sized, and a distributed footer job
+        # would cost one more Spark job per read.
+        buckets = [
+            int(os.path.basename(p).split("_")[0]) for p in original_files
         ]
-        units = _decode_units(
-            paths,
-            spark.sparkContext.defaultParallelism if split_stripes else 0,
-        )
-        return _manifest_frame(
-            spark,
-            units,
-            "path string, min_ctid long, max_ctid long, stripe int",
-        )
+        multi_copy = len(set(buckets)) != len(buckets)
+        next_rid: dict[int, int] = {}
+        for p in sorted(original_files, key=os.path.basename):
+            b = int(os.path.basename(p).split("_")[0])
+            orig_units.append((p, next_rid.get(b, 0), pval))
+            if multi_copy:
+                from pyarrow import orc as pa_orc
 
-    names = [n for n, _ in payload_schema]
+                next_rid[b] = next_rid.get(b, 0) + pa_orc.ORCFile(p).nrows
+
     unbounded = _MAX_WRITEID  # closure-local: shipped by value
 
     def _ctid_filter(flat, min_ctid, max_ctid):
@@ -827,8 +880,12 @@ def read_hive_acid(
         from pyarrow import orc as pa_orc
 
         for pdf in it:
-            for path, min_ctid, max_ctid, stripe in zip(
-                pdf["path"], pdf["min_ctid"], pdf["max_ctid"], pdf["stripe"]
+            for path, min_ctid, max_ctid, pval, stripe in zip(
+                pdf["path"],
+                pdf["min_ctid"],
+                pdf["max_ctid"],
+                pdf["pval"],
+                pdf["stripe"],
             ):
                 f = pa_orc.ORCFile(path)
                 t = (
@@ -844,35 +901,41 @@ def read_hive_acid(
                 }
                 for n in names:
                     out[n] = flat[f"row.{n}"]
-                yield pd.DataFrame(out)
+                frame = pd.DataFrame(out)
+                frame["__pval"] = pval
+                yield frame
 
     def read_deletes(it):
         import pandas as pd
         from pyarrow import orc as pa_orc
 
         for pdf in it:
-            for path, min_ctid, max_ctid in zip(
-                pdf["path"], pdf["min_ctid"], pdf["max_ctid"]
+            for path, min_ctid, max_ctid, pval in zip(
+                pdf["path"], pdf["min_ctid"], pdf["max_ctid"], pdf["pval"]
             ):
                 t = _ctid_filter(
                     pa_orc.ORCFile(path).read().to_pandas(),
                     min_ctid,
                     max_ctid,
                 )
-                yield pd.DataFrame(
+                frame = pd.DataFrame(
                     {
                         "otid": t["originalTransaction"],
                         "bucket": t["bucket"],
                         "rid": t["rowId"],
                     }
                 )
+                frame["__pval"] = pval
+                yield frame
 
     def read_originals(it):
         import pandas as pd
         from pyarrow import orc as pa_orc
 
         for pdf in it:
-            for path, off in zip(pdf["path"], pdf["rid_offset"]):
+            for path, off, pval in zip(
+                pdf["path"], pdf["rid_offset"], pdf["pval"]
+            ):
                 t = pa_orc.ORCFile(path).read().to_pandas()
                 out = {
                     "otid": [0] * len(t),
@@ -884,75 +947,58 @@ def read_hive_acid(
                 }
                 for n in names:
                     out[n] = t[n]
-                yield pd.DataFrame(out)
+                frame = pd.DataFrame(out)
+                frame["__pval"] = pval
+                yield frame
 
     payload_ddl = ", ".join(f"{n} {t}" for n, t in payload_schema)
-    acid_ddl = f"otid long, bucket int, rid long, {payload_ddl}"
-    live = files_df(data_dirs, split_stripes=True).mapInPandas(
-        read_data, acid_ddl
+    acid_ddl = (
+        f"otid long, bucket int, rid long, {payload_ddl}, __pval string"
     )
-    if original_files:
-        # _copy_N: a bucket may hold SEVERAL flat files (each
-        # pre-conversion INSERT appended bucket_N_copy_M); Hive
-        # synthesizes rowIds that CONTINUE across a bucket's files in
-        # filename order `[upstream: Hive ql/io/AcidUtils
-        # getAcidState originals, OrcRawRecordMerger
-        # OriginalReaderPair]`. Offsets need each file's row count —
-        # footer nrows only, read distributedly (one metadata task
-        # per file) and collected as O(n_files) manifest rows, the
-        # same metadata-sized collect class as the bucket manifests.
-        def footer_counts(it):
-            import pandas as pd
-            from pyarrow import orc as pa_orc
-
-            for pdf in it:
-                for path in pdf["path"]:
-                    yield pd.DataFrame(
-                        {
-                            "path": [path],
-                            "n": [pa_orc.ORCFile(path).nrows],
-                        }
-                    )
-
-        buckets = [
-            int(os.path.basename(p).split("_")[0]) for p in original_files
-        ]
-        if len(set(buckets)) == len(buckets):
-            # one file per bucket (the common converted-table shape):
-            # every offset is 0 — skip the footer-count job entirely
-            offsets = [(p, 0) for p in original_files]
-        else:
-            counts = {
-                r["path"]: r["n"]
-                for r in _manifest_frame(
-                    spark, [(p,) for p in original_files], "path string"
-                )
-                .mapInPandas(footer_counts, "path string, n long")
-                .collect()
-            }
-            offsets = []
-            next_rid: dict[int, int] = {}
-            for p in sorted(original_files, key=os.path.basename):
-                b = int(os.path.basename(p).split("_")[0])
-                offsets.append((p, next_rid.get(b, 0)))
-                next_rid[b] = next_rid.get(b, 0) + counts[p]
-        orig = _manifest_frame(
-            spark, offsets, "path string, rid_offset long"
-        ).mapInPandas(read_originals, acid_ddl)
-        live = live.unionByName(orig)
-    if delete_dirs:
-        dels = files_df(delete_dirs).mapInPandas(
-            read_deletes, "otid long, bucket int, rid long"
+    live = _manifest_frame(
+        spark,
+        _decode_units(data_units, spark.sparkContext.defaultParallelism),
+        "path string, min_ctid long, max_ctid long, pval string, "
+        "stripe int",
+    ).mapInPandas(read_data, acid_ddl)
+    if orig_units:
+        live = live.unionByName(
+            _manifest_frame(
+                spark,
+                orig_units,
+                "path string, rid_offset long, pval string",
+            ).mapInPandas(read_originals, acid_ddl)
+        )
+    if del_units:
+        dels = _manifest_frame(
+            spark,
+            del_units,
+            "path string, min_ctid long, max_ctid long, pval string",
+        ).mapInPandas(
+            read_deletes,
+            "otid long, bucket int, rid long, __pval string",
         )
         merged = live.join(
-            F.broadcast(dels), ["otid", "bucket", "rid"], "left_anti"
+            F.broadcast(dels),
+            ["otid", "bucket", "rid", "__pval"],
+            "left_anti",
         )
     else:
         # no delete_delta elected (pure-insert history / post-
         # compaction steady state): skip the delete-side decode job
         # and the anti-join outright (r13 optimization)
         merged = live
-    return merged if keep_identity else merged.select(*names)
+    if partition_col is None:
+        out = merged.drop("__pval")
+    else:
+        out = merged.withColumn(
+            partition_col,
+            F.when(
+                F.col("__pval") == HIVE_DEFAULT_PARTITION, F.lit(None)
+            ).otherwise(F.col("__pval")).cast(partition_type),
+        ).drop("__pval")
+        names = [*names, partition_col]
+    return out if keep_identity else out.select(*names)
 
 
 def compact_hive_acid(
@@ -1978,38 +2024,16 @@ def append_delta(
     stmt × 2^40, same collision-freedom, raw-bucket storage model.
     Returns the final dir path, or None when ``df`` is empty (Hive
     writes no dir for an empty statement)."""
-    os.makedirs(root, exist_ok=True)
-    names = [n for n, _ in payload_schema]
-    bucket_col = bucket_col or names[0]
-    aligned = df
-    for n, t in payload_schema:
-        aligned = aligned.withColumn(n, F.col(n).cast(t))
-    aligned = aligned.select(*names)
-    rid_offset = (stmt or 0) << 40
-    events = (
-        aligned.withColumn(
-            "__bucket",
-            F.pmod(F.hash(bucket_col), F.lit(n_buckets)).cast("int"),
-        )
-        # __rid NULL: the write task assigns write-order ordinals per
-        # bucket group (synth_rid) — the rowId window was a separate
-        # shuffle+sort pass before the write shuffle (r13, guide §2.4)
-        .withColumn("__rid", F.lit(None).cast("long"))
-        .withColumn("__otid", F.lit(writeid).cast("long"))
-        .withColumn("__ctid", F.lit(writeid).cast("long"))
-        .withColumn("__op", F.lit(_OP_INSERT))
-        .withColumn("__pkey", F.lit(""))
-    )
-    suffix = f"_{stmt:04d}" if stmt is not None else ""
-    final = os.path.join(root, f"delta_{writeid:07d}_{writeid:07d}{suffix}")
-    scratch = os.path.join(root, f".scratch_delta_{writeid:07d}{suffix}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    written = _write_acid_dirs_one_job(
-        _union_insert_delete(events, None, payload_schema),
-        lambda pkey, is_del: scratch,
-        lambda pkey, is_del: final,
+    written = _write_acid_events(
+        root,
+        None,
+        df,
+        payload_schema,
         payload_fields,
-        synth_rid=(bucket_col, rid_offset),
+        writeid,
+        stmt=stmt,
+        n_buckets=n_buckets,
+        bucket_col=bucket_col,
     )
     return written[0] if written else None
 
@@ -2372,59 +2396,7 @@ class HiveWriteIdLedger:
 # --- row-level DML writers: split-update + overwrite (r12 tasks 1+2) --------
 
 
-def append_delete_delta(
-    spark: SparkSession,
-    root: str,
-    ids_df: DataFrame,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    stmt: int | None = None,
-) -> str | None:
-    """One transaction's (or statement's) delete events as a
-    ``delete_delta_W_W[_ssss]`` dir: ``ids_df`` carries the TARGET
-    identities (otid, bucket, rid) — the rows being deleted keep
-    their ORIGINAL transaction ids, only currentTransaction is the
-    deleting writeid `[upstream: hive OrcRecordUpdater delete events,
-    HIVE-14035]`. Scratch-write + atomic rename; None for an empty
-    statement (Hive writes no dir)."""
-    dels = (
-        ids_df.select(
-            F.col("otid").cast("long").alias("__otid"),
-            F.col("bucket").cast("int").alias("__bucket"),
-            F.col("rid").cast("long").alias("__rid"),
-        )
-        .withColumn("__op", F.lit(_OP_DELETE))
-        .withColumn("__ctid", F.lit(writeid).cast("long"))
-    )
-    payload_ddl = ", ".join(f"{n} {t}" for n, t in payload_schema)
-    empty_events = spark.createDataFrame(
-        [],
-        "__op int, __otid long, __bucket int, __rid long, __ctid long, "
-        + payload_ddl,
-    )
-    suffix = f"_{stmt:04d}" if stmt is not None else ""
-    final = os.path.join(
-        root, f"delete_delta_{writeid:07d}_{writeid:07d}{suffix}"
-    )
-    scratch_data = os.path.join(
-        root, f".scratch_dd_data_{writeid:07d}{suffix}"
-    )
-    scratch_del = os.path.join(root, f".scratch_dd_{writeid:07d}{suffix}")
-    shutil.rmtree(scratch_data, ignore_errors=True)
-    shutil.rmtree(scratch_del, ignore_errors=True)
-    _write_version_dirs(
-        empty_events, dels, scratch_data, scratch_del, payload_fields
-    )
-    shutil.rmtree(scratch_data, ignore_errors=True)  # always empty
-    if not os.path.isdir(scratch_del):
-        return None
-    os.rename(scratch_del, final)
-    return final
-
-
-def _split_update_one_job(
-    spark: SparkSession,
+def _write_acid_events(
     root: str,
     ids_df: DataFrame | None,
     new_img: DataFrame | None,
@@ -2434,34 +2406,41 @@ def _split_update_one_job(
     stmt: int | None = None,
     n_buckets: int = 4,
     bucket_col: str | None = None,
+    kind: str = "delta",
+    replace_final: bool = False,
     guard: DataFrame | None = None,
-) -> tuple[str | None, str | None]:
-    """One UNPARTITIONED writeid's delete events (``ids_df``: the old
-    identities) plus insert events (``new_img``: the new images) in a
-    SINGLE distributed job — the split-update pair used to pay one
-    full job per dir (append_delete_delta + append_delta); guide §2.4.
-    Identity assignment, sorted-run layout, scratch + atomic rename
-    and empty-side behavior (no dir) are byte-identical to the
-    two-job path. ``guard`` (one column, any name): rows that must
-    NOT exist — unioned into the write frame under _CARD_SENTINEL so
-    the check rides the same job; any surviving row fails the
-    statement before renames (the MERGE cardinality rule). Returns
-    (delete_delta_path, delta_path)."""
+    partition_col: str | None = None,
+) -> list[str]:
+    """One writeid's delete events (``ids_df``: the old identities
+    otid/bucket/rid, plus the partition column on a partitioned table)
+    and insert events (``new_img``: payload, plus the partition
+    column) across EVERY touched partition in a SINGLE distributed
+    job — a per-dir write loop paid one full Spark job per
+    (partition, kind) dir (guide §2.4). Tasks group on (partition
+    token, kind, bucket); rowIds are write-order ordinals per
+    (partition, bucket), offset by stmt × 2^40 for statement dirs.
+    ``kind`` names the insert dir family (``delta`` | ``base`` for
+    INSERT OVERWRITE, with ``replace_final``). ``guard`` (one column,
+    any name): rows that must NOT exist — unioned into the write frame
+    under _CARD_SENTINEL so the check rides the same job; any
+    surviving row fails the statement before renames (the MERGE
+    cardinality rule). Touched partitions come from the write
+    manifest; an empty side writes no dir. Returns the written final
+    dirs, delete_delta before delta per partition, partitions sorted
+    by token."""
     names = [n for n, _ in payload_schema]
     bucket_col = bucket_col or names[0]
-    os.makedirs(root, exist_ok=True)
     rid_offset = (stmt or 0) << 40
+    pkey = F.lit("") if partition_col is None else _pkey_col(partition_col)
     dels = None
     if ids_df is not None:
-        dels = (
-            ids_df.select(
-                F.col("otid").cast("long").alias("__otid"),
-                F.col("bucket").cast("int").alias("__bucket"),
-                F.col("rid").cast("long").alias("__rid"),
-            )
-            .withColumn("__op", F.lit(_OP_DELETE))
-            .withColumn("__ctid", F.lit(writeid).cast("long"))
-            .withColumn("__pkey", F.lit(""))
+        dels = ids_df.select(
+            pkey.alias("__pkey"),
+            F.col("otid").cast("long").alias("__otid"),
+            F.col("bucket").cast("int").alias("__bucket"),
+            F.col("rid").cast("long").alias("__rid"),
+        ).withColumn("__op", F.lit(_OP_DELETE)).withColumn(
+            "__ctid", F.lit(writeid).cast("long")
         )
     events = None
     if new_img is not None:
@@ -2469,62 +2448,178 @@ def _split_update_one_job(
         for n, t in payload_schema:
             aligned = aligned.withColumn(n, F.col(n).cast(t))
         events = (
-            aligned.select(*names)
+            aligned.select(pkey.alias("__pkey"), *names)
             .withColumn(
                 "__bucket",
                 F.pmod(F.hash(bucket_col), F.lit(n_buckets)).cast("int"),
             )
             # __rid NULL: the write task assigns write-order ordinals
-            # per bucket group (synth_rid) — no separate window pass
+            # per (partition, bucket) group — no separate window pass
             .withColumn("__rid", F.lit(None).cast("long"))
             .withColumn("__otid", F.lit(writeid).cast("long"))
             .withColumn("__ctid", F.lit(writeid).cast("long"))
             .withColumn("__op", F.lit(_OP_INSERT))
-            .withColumn("__pkey", F.lit(""))
         )
     sfx = f"_{stmt:04d}" if stmt is not None else ""
+    del_scratch = f".scratch_dd_{writeid:07d}{sfx}"
+    ins_scratch = f".scratch_{kind}_{writeid:07d}{sfx}"
+    ins_final = (
+        f"base_{writeid:07d}"
+        if kind == "base"
+        else f"delta_{writeid:07d}_{writeid:07d}{sfx}"
+    )
+
+    def part_dir(pkey: str) -> str:
+        if partition_col is None:
+            return root
+        return os.path.join(root, f"{partition_col}={pkey}")
 
     def scratch_of(pkey: str, is_del: bool) -> str:
-        kind = "dd" if is_del else "delta"
-        return os.path.join(root, f".scratch_{kind}_{writeid:07d}{sfx}")
+        return os.path.join(
+            part_dir(pkey), del_scratch if is_del else ins_scratch
+        )
 
     def final_of(pkey: str, is_del: bool) -> str:
-        kind = "delete_delta" if is_del else "delta"
-        return os.path.join(
-            root, f"{kind}_{writeid:07d}_{writeid:07d}{sfx}"
+        name = (
+            f"delete_delta_{writeid:07d}_{writeid:07d}{sfx}"
+            if is_del
+            else ins_final
         )
+        return os.path.join(part_dir(pkey), name)
 
-    for is_del in (False, True):
-        shutil.rmtree(scratch_of("", is_del), ignore_errors=True)
+    # stale-scratch hygiene: existing partition dirs only — new
+    # partitions can't hold debris
+    os.makedirs(root, exist_ok=True)
+    existing = (
+        [root]
+        if partition_col is None
+        else [d for _v, d in partition_dirs(root, partition_col)]
+    )
+    for pdir in existing:
+        for name in (del_scratch, ins_scratch):
+            shutil.rmtree(os.path.join(pdir, name), ignore_errors=True)
     unioned = _union_insert_delete(events, dels, payload_schema)
     if guard is not None:
-        unioned = unioned.unionByName(
-            _guard_rows(guard, payload_schema)
-        )
-    written = _write_acid_dirs_one_job(
+        unioned = unioned.unionByName(_guard_rows(guard, payload_schema))
+    return _write_acid_dirs_one_job(
         unioned,
         scratch_of,
         final_of,
         payload_fields,
+        replace_final=replace_final,
         synth_rid=(bucket_col, rid_offset),
     )
-    del_path = next(
-        (
-            p
-            for p in written
-            if os.path.basename(p).startswith("delete_delta_")
-        ),
-        None,
+
+
+def hive_acid_insert(
+    spark: SparkSession,
+    root: str,
+    df: DataFrame,
+    payload_schema: list[tuple[str, str]],
+    payload_fields,
+    writeid: int,
+    stmt: int | None = None,
+    n_buckets: int = 4,
+    bucket_col: str | None = None,
+    overwrite: bool = False,
+    partition_col: str | None = None,
+    static_value=None,
+) -> list[str]:
+    """``INSERT [OVERWRITE] … [PARTITION (col=value)]`` under one
+    TABLE-level writeid:
+
+    * **one partition** (``partition_col`` None, or ``static_value``
+      given): ``df`` carries the payload columns only; every row
+      lands in that one dir — the table root, or Hive's
+      ``PARTITION (p='v') SELECT payload…`` form;
+    * **dynamic** (``static_value`` None on a partitioned table):
+      ``df`` additionally carries ``partition_col``; rows split by its
+      value (NULL → ``__HIVE_DEFAULT_PARTITION__``, Hive's spelling)
+      and each touched partition gets its own dir under the SAME
+      writeid, all in one job.
+
+    ``overwrite=True`` writes a ``base_W`` instead of a delta — per
+    touched partition for a dynamic IOW, so it overwrites exactly the
+    partitions present in the output (Hive's nonstrict dynamic-
+    overwrite rule). Returns the written dir paths."""
+    if partition_col is not None and static_value is None:
+        if partition_col not in df.columns:
+            raise ValueError(
+                f"dynamic partitioned INSERT needs '{partition_col}' "
+                "in the SELECT output (Hive's last-column rule)"
+            )
+        return _write_acid_events(
+            root,
+            None,
+            df,
+            payload_schema,
+            payload_fields,
+            writeid,
+            stmt=None if overwrite else stmt,
+            n_buckets=n_buckets,
+            bucket_col=bucket_col,
+            kind="base" if overwrite else "delta",
+            replace_final=overwrite,
+            partition_col=partition_col,
+        )
+    if partition_col is not None:
+        root = partition_subdir(root, partition_col, static_value)
+    if overwrite:
+        return [
+            hive_acid_overwrite(
+                spark,
+                root,
+                df,
+                payload_schema,
+                payload_fields,
+                writeid,
+                n_buckets=n_buckets,
+                bucket_col=bucket_col,
+            )
+        ]
+    p = append_delta(
+        spark,
+        root,
+        df,
+        payload_schema,
+        payload_fields,
+        writeid,
+        stmt=stmt,
+        n_buckets=n_buckets,
+        bucket_col=bucket_col,
     )
-    ins_path = next(
-        (
-            p
-            for p in written
-            if not os.path.basename(p).startswith("delete_delta_")
-        ),
-        None,
+    return [p] if p is not None else []
+
+
+def _target_snapshot(
+    spark: SparkSession,
+    root: str,
+    payload_schema: list[tuple[str, str]],
+    valid_writeids: "ValidWriteIdList | None",
+    partition_col: str | None,
+    partition_type: str,
+) -> DataFrame:
+    """A DML statement's own identity-carrying election read of its
+    target, for callers that pass no shared ``snapshot``. Lazy
+    checkpoint: the manifest is pinned at frame build, the decode
+    runs inside the statement's one write job, and every consumer of
+    the frame (split-update's two sides, MERGE's join) reuses it."""
+    return read_hive_acid(
+        spark,
+        root,
+        payload_schema,
+        keep_identity=True,
+        valid_writeids=valid_writeids,
+        partition_col=partition_col,
+        partition_type=partition_type,
+    ).localCheckpoint(eager=False)
+
+
+def _ident_cols(partition_col: str | None) -> list[str]:
+    """A row's identity: (otid, bucket, rid) within its partition."""
+    return ["otid", "bucket", "rid"] + (
+        [partition_col] if partition_col is not None else []
     )
-    return del_path, ins_path
 
 
 def hive_acid_delete(
@@ -2537,28 +2632,34 @@ def hive_acid_delete(
     valid_writeids: "ValidWriteIdList | None" = None,
     stmt: int | None = None,
     snapshot: DataFrame | None = None,
-) -> str | None:
+    partition_col: str | None = None,
+    partition_type: str = "string",
+) -> list[str]:
     """Row-level ``DELETE FROM t [WHERE pred]`` on an AcidUtils
     layout: the election read (with identities) finds the target
-    rows, and their identity triples land as one delete_delta under
-    the deleting writeid — Hive 3's headline ACID verb `[upstream:
-    hive ql/parse/UpdateDeleteSemanticAnalyzer, HIVE-14035]`.
-    ``pred`` is a SQL boolean over the payload columns (NULL = no
-    match, DELETE's three-valued WHERE). Cost: one election read of
-    the table + one delete_delta write sized to the HIT set — no
-    rewrite of surviving rows (the split-update economy).
-    ``snapshot`` (an identity-carrying frame the caller already
-    materialized — the per-transaction shared snapshot) skips the
-    election read entirely."""
+    rows, and their identity triples land as one
+    ``delete_delta_W_W[_ssss]`` per TOUCHED partition under the
+    deleting writeid — Hive 3's headline ACID verb `[upstream: hive
+    ql/parse/UpdateDeleteSemanticAnalyzer, HIVE-14035]`. The rows
+    being deleted keep their ORIGINAL transaction ids; only
+    currentTransaction is the deleting writeid. ``pred`` is a SQL
+    boolean over the payload (and partition) columns (NULL = no
+    match, DELETE's three-valued WHERE); a predicate on the partition
+    column prunes the event dirs like a read. Cost: one election read
+    + one delete_delta write sized to the HIT set — no rewrite of
+    surviving rows (the split-update economy). ``snapshot`` (an
+    identity-carrying frame the caller already materialized — the
+    per-transaction shared snapshot) skips the election read."""
     snap = (
         snapshot
         if snapshot is not None
-        else read_hive_acid(
+        else _target_snapshot(
             spark,
             root,
             payload_schema,
-            keep_identity=True,
-            valid_writeids=valid_writeids,
+            valid_writeids,
+            partition_col,
+            partition_type,
         )
     )
     hits = (
@@ -2566,14 +2667,15 @@ def hive_acid_delete(
         if pred is not None
         else snap
     )
-    return append_delete_delta(
-        spark,
+    return _write_acid_events(
         root,
-        hits.select("otid", "bucket", "rid"),
+        hits.select(*_ident_cols(partition_col)),
+        None,
         payload_schema,
         payload_fields,
         writeid,
         stmt=stmt,
+        partition_col=partition_col,
     )
 
 
@@ -2590,58 +2692,65 @@ def hive_acid_update(
     valid_writeids: "ValidWriteIdList | None" = None,
     stmt: int | None = None,
     snapshot: DataFrame | None = None,
-) -> tuple[str | None, str | None]:
+    partition_col: str | None = None,
+    partition_type: str = "string",
+) -> list[str]:
     """Row-level ``UPDATE t SET c = e, ... [WHERE pred]`` as Hive 3's
     SPLIT-UPDATE `[upstream: hive UpdateDeleteSemanticAnalyzer,
-    HIVE-14035]`: one delete_delta event on each hit row's OLD
-    identity plus an insert delta carrying the new image under the
-    updating writeid with FRESH identities (bucket re-derived from
-    the bucket column — an update may move a row between buckets).
+    HIVE-14035]`: per touched partition, one delete_delta event on
+    each hit row's OLD identity plus an insert delta carrying the new
+    image under the updating writeid with FRESH identities (bucket
+    re-derived from the bucket column — an update may move a row
+    between buckets, never between partitions: SET of the partition
+    column is refused, as Hive refuses it).
 
-    Both event dirs are written by ONE distributed job
-    (_split_update_one_job) whose renames land only after the job
-    completes, so every event observes the same pre-update election
-    by construction (the file manifest is pinned at plan time); the
-    hit set is lazily checkpointed so the election decode runs once
-    inside that job, not once per consumer. A caller passing
-    ``snapshot`` (already materialized — the per-transaction shared
-    snapshot) skips the election read. Returns
-    (delete_delta_path, delta_path)."""
+    Both event dirs are written by ONE distributed job whose renames
+    land only after the job completes, so every event observes the
+    same pre-update election by construction (the file manifest is
+    pinned at plan time). A caller passing ``snapshot`` (already
+    materialized — the per-transaction shared snapshot) skips the
+    election read."""
     names = [n for n, _ in payload_schema]
     set_map = dict(set_exprs)
+    if partition_col is not None and partition_col in set_map:
+        raise ValueError(
+            f"UPDATE may not SET partition column '{partition_col}' "
+            "(Hive refuses; DELETE + INSERT moves rows)"
+        )
     unknown = set(set_map) - set(names)
     if unknown:
         raise ValueError(
             f"UPDATE SET references unknown columns {sorted(unknown)}"
         )
-    hit = (
-        F.coalesce(F.expr(pred), F.lit(False))
-        if pred is not None
-        else F.lit(True)
-    )
-    if snapshot is not None:
-        hits = snapshot.filter(hit)
-    else:
-        snap = read_hive_acid(
+    snap = (
+        snapshot
+        if snapshot is not None
+        else _target_snapshot(
             spark,
             root,
             payload_schema,
-            keep_identity=True,
-            valid_writeids=valid_writeids,
+            valid_writeids,
+            partition_col,
+            partition_type,
         )
-        hits = snap.filter(hit).localCheckpoint(eager=False)
+    )
+    hits = (
+        snap.filter(F.coalesce(F.expr(pred), F.lit(False)))
+        if pred is not None
+        else snap
+    )
     new_img = hits.select(
         *[
             F.expr(set_map[n]).cast(t).alias(n)
             if n in set_map
             else F.col(n)
             for n, t in payload_schema
-        ]
+        ],
+        *([partition_col] if partition_col is not None else []),
     )
-    return _split_update_one_job(
-        spark,
+    return _write_acid_events(
         root,
-        hits.select("otid", "bucket", "rid"),
+        hits.select(*_ident_cols(partition_col)),
         new_img,
         payload_schema,
         payload_fields,
@@ -2649,6 +2758,7 @@ def hive_acid_update(
         stmt=stmt,
         n_buckets=n_buckets,
         bucket_col=bucket_col,
+        partition_col=partition_col,
     )
 
 
@@ -2697,10 +2807,9 @@ def _merge_event_frames(
         eager=False
     )
     matched = joined.filter(F.col(t).isNotNull())
-    ident_cols = ["otid", "bucket", "rid"] + (
-        [partition_col] if partition_col is not None else []
-    )
-    ident = [F.expr(f"{t}.{c}").alias(c) for c in ident_cols]
+    ident = [
+        F.expr(f"{t}.{c}").alias(c) for c in _ident_cols(partition_col)
+    ]
     # Hive's cardinality rule (hive.merge.cardinality.check) over ALL
     # matched rows, guards notwithstanding. Previously enforced by an
     # eager take() — one extra driver-blocking pass over the
@@ -2713,7 +2822,9 @@ def _merge_event_frames(
         matched.groupBy(*ident)
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") > 1)
-        .select(ident[0])
+        # the aggregate's own output column: ident[0] is the ``t.otid``
+        # expression, which no longer resolves above the groupBy
+        .select("otid")
     )
     del_parts: list[DataFrame] = []
     ins_parts: list[DataFrame] = []
@@ -2818,7 +2929,9 @@ def hive_acid_merge(
     valid_writeids: "ValidWriteIdList | None" = None,
     stmt: int | None = None,
     snapshot: DataFrame | None = None,
-) -> tuple[str | None, str | None]:
+    partition_col: str | None = None,
+    partition_type: str = "string",
+) -> list[str]:
     """``MERGE INTO t USING s ON cond WHEN …`` on an AcidUtils layout
     via split-update `[upstream: hive ql/parse/MergeSemanticAnalyzer,
     HIVE-14035 — Hive rewrites MERGE into a multi-insert of
@@ -2832,35 +2945,38 @@ def hive_acid_merge(
       list (source-side rows only), or None; ``insert_cond`` is the
       optional WHEN NOT MATCHED AND … guard (source-side predicate —
       unmatched rows failing it are simply not inserted, Hive's
-      semantics).
+      semantics). On a partitioned table the list carries the
+      partition value LAST (the dynamic-partition column rule): an
+      inserted row's partition comes from its expression, an updated
+      row stays in its partition (SET of the partition column is
+      refused).
 
-    All events land under ONE writeid: one delete_delta carrying the
-    old identities of updated+deleted rows, one insert delta carrying
-    update images + not-matched inserts. The target snapshot (with
-    identities) is materialized BEFORE any rename so every clause
-    reads the same pre-merge election. Hive's cardinality rule is
-    enforced: a target row matched by more than one source row raises
-    (hive.merge.cardinality.check).
+    All events land under ONE writeid, per touched partition: one
+    delete_delta carrying the old identities of updated+deleted rows,
+    one insert delta carrying update images + not-matched inserts.
+    The target snapshot (with identities, and the partition column
+    ON/clause predicates may reference) is pinned BEFORE any rename
+    so every clause reads the same pre-merge election. Hive's
+    cardinality rule is enforced: a target row matched by more than
+    one source row raises (hive.merge.cardinality.check) and no dir
+    becomes visible.
 
     Scale: cost = one election read of the target + ONE right-outer
-    join with the source (r13: the per-clause-family join fan was
-    folded into one materialized join — Hive's multi-insert-over-one-
-    join MERGE rewrite; see _merge_event_frames) + writes sized to
-    the HIT sets — surviving rows are never rewritten (the
-    split-update economy)."""
-    matched_clauses = matched_clauses or []
+    join with the source (Hive's multi-insert-over-one-join MERGE
+    rewrite; see _merge_event_frames) + writes sized to the HIT sets
+    — surviving rows are never rewritten (the split-update economy).
+    Both event dirs AND the cardinality guard ride ONE write job."""
     snap = (
         snapshot
         if snapshot is not None
-        else read_hive_acid(
+        else _target_snapshot(
             spark,
             root,
             payload_schema,
-            keep_identity=True,
-            valid_writeids=valid_writeids,
-            # lazy: manifest pinned at frame build; decode runs
-            # inside the first consuming job (r13 optimization)
-        ).localCheckpoint(eager=False)
+            valid_writeids,
+            partition_col,
+            partition_type,
+        )
     )
     dels, ins, guard = _merge_event_frames(
         snap,
@@ -2868,16 +2984,17 @@ def hive_acid_merge(
         on_cond,
         target_alias,
         source_alias,
-        matched_clauses,
+        matched_clauses or [],
         insert_values,
         insert_cond,
         payload_schema,
+        partition_col=partition_col,
     )
-    # both event dirs AND the cardinality guard in ONE job (guide
-    # §2.4): the clause-family unions re-filter the MATERIALIZED join
-    # inside that single job; renames land only after it completes
-    return _split_update_one_job(
-        spark,
+    if ins is not None and partition_col is not None:
+        ins = ins.withColumn(
+            partition_col, F.col(partition_col).cast(partition_type)
+        )
+    return _write_acid_events(
         root,
         dels,
         ins,
@@ -2888,6 +3005,7 @@ def hive_acid_merge(
         n_buckets=n_buckets,
         bucket_col=bucket_col,
         guard=guard,
+        partition_col=partition_col,
     )
 
 
@@ -2908,34 +3026,18 @@ def hive_acid_overwrite(
     superseded dirs. The base is written even when ``df`` is empty
     (overwrite-to-empty must still hide the old rows — an empty base
     elects like any other). Scratch + atomic rename."""
-    names = [n for n, _ in payload_schema]
-    bucket_col = bucket_col or names[0]
-    aligned = df
-    for n, t in payload_schema:
-        aligned = aligned.withColumn(n, F.col(n).cast(t))
-    events = (
-        aligned.select(*names)
-        .withColumn(
-            "__bucket",
-            F.pmod(F.hash(bucket_col), F.lit(n_buckets)).cast("int"),
-        )
-        # __rid NULL: write-order ordinals assigned in the write task
-        .withColumn("__rid", F.lit(None).cast("long"))
-        .withColumn("__otid", F.lit(writeid).cast("long"))
-        .withColumn("__ctid", F.lit(writeid).cast("long"))
-        .withColumn("__op", F.lit(_OP_INSERT))
-        .withColumn("__pkey", F.lit(""))
-    )
     final = os.path.join(root, f"base_{writeid:07d}")
-    scratch = os.path.join(root, f".scratch_base_{writeid:07d}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    written = _write_acid_dirs_one_job(
-        _union_insert_delete(events, None, payload_schema),
-        lambda pkey, is_del: scratch,
-        lambda pkey, is_del: final,
+    written = _write_acid_events(
+        root,
+        None,
+        df,
+        payload_schema,
         payload_fields,
+        writeid,
+        n_buckets=n_buckets,
+        bucket_col=bucket_col,
+        kind="base",
         replace_final=True,
-        synth_rid=(bucket_col, 0),
     )
     if not written:  # empty overwrite: empty base (old rows must hide)
         shutil.rmtree(final, ignore_errors=True)
@@ -2975,6 +3077,12 @@ def hive_mm_overwrite(
 # ql/io/AcidUtils — getAcidState runs per partition; standalone-metastore
 # TxnHandler allocateTableWriteIds; CompactionRequest carries (db, table,
 # partition) — public-knowledge reconstruction, SURVEY.md §0]`.
+#
+# An unpartitioned table is a table with ONE implicit partition whose
+# directory is the table root. read_hive_acid, the one event writer
+# (_write_acid_events) and the INSERT/DELETE/UPDATE/MERGE verbs each have a
+# single body; ``partition_col=None`` selects the implicit partition (its
+# token is '', its dirs sit directly under root) and nothing else differs.
 
 _PARTITION_DIR_RE = _re.compile(r"^(?P<col>[A-Za-z_]\w*)=(?P<val>.+)$")
 
@@ -3006,328 +3114,17 @@ def partition_subdir(root: str, partition_col: str, value) -> str:
 
 
 def read_hive_acid_partitioned(
-    spark: SparkSession,
-    root: str,
-    payload_schema: list[tuple[str, str]],
-    partition_col: str,
-    partition_type: str = "string",
-    keep_identity: bool = False,
-    partition_values=None,
-    max_writeid: int | None = None,
-    valid_writeids: "ValidWriteIdList | None" = None,
+    spark, root, payload_schema, partition_col, partition_type="string", **kw
 ) -> DataFrame:
-    """The partitioned sibling of :func:`read_hive_acid`: one
-    AcidUtils election PER PARTITION DIR (each partition's
-    base/delta/delete_delta state is independent — exactly
-    getAcidState-per-partition), ONE combined file manifest, ONE
-    distributed decode job. The partition column is synthesized from
-    the directory name (Hive never stores it in the files) and cast
-    to ``partition_type``; NULL round-trips through
-    ``__HIVE_DEFAULT_PARTITION__``.
-
-    **Partition pruning** happens HERE, driver-side, before any file
-    is listed or elected: ``partition_values`` (an iterable of
-    values; None = all) bounds the election to matching partition
-    dirs, so a pruned read never stats — let alone decodes — the
-    other partitions' files. This is the metadata-layer analog of
-    PartitionFilters on a FileSourceScan, and it is structural: the
-    manifest the decode job receives simply does not contain pruned
-    files (pinned by tests).
-
-    The delete anti-join keys on (partition, otid, bucket, rid) —
-    row identities are unique only WITHIN a partition dir (each
-    partition's writers assign their own rowId windows), so two
-    partitions may legitimately carry identical triples.
-
-    Scale: the driver-side work is O(partitions × dirs) metadata,
-    the same class as Hive's metastore partition listing; decode
-    parallelism comes from the combined manifest (stripe-split when
-    few large files), so a 1000-partition table is one job, not
-    1000."""
-    import glob as _glob
-
-    names = [n for n, _ in payload_schema]
-    if partition_col in names:
-        raise ValueError(
-            f"partition column '{partition_col}' must not appear in "
-            "the payload schema (Hive stores it only in the dir name)"
-        )
-    max_writeid, invalid = _effective_bounds(max_writeid, valid_writeids)
-    invalid_list = sorted(invalid)
-    wanted = (
-        None
-        if partition_values is None
-        else {
-            HIVE_DEFAULT_PARTITION if v is None else str(v)
-            for v in partition_values
-        }
-    )
-    parts = [
-        (v, d)
-        for v, d in partition_dirs(root, partition_col)
-        if wanted is None or v in wanted
-    ]
-    data_units: list[tuple] = []  # (path, min_ctid, max_ctid, pval)
-    del_units: list[tuple] = []
-    orig_units: list[tuple] = []  # (path, rid_offset, pval)
-    for pval, pdir in parts:
-        data_dirs, delete_dirs, original_files, bounds = _elect_dirs(
-            pdir, max_writeid, invalid
-        )
-        for d in data_dirs:
-            lo, hi = bounds.get(d, (0, _MAX_WRITEID))
-            for f in sorted(_glob.glob(os.path.join(d, "bucket_*"))):
-                data_units.append((f, lo, hi, pval))
-        for d in delete_dirs:
-            lo, hi = bounds.get(d, (0, _MAX_WRITEID))
-            for f in sorted(_glob.glob(os.path.join(d, "bucket_*"))):
-                del_units.append((f, lo, hi, pval))
-        # pre-conversion originals per partition: synthesized ids,
-        # rowIds continuing across a bucket's files in filename order
-        # (the single-root reader's rule, scoped to this partition).
-        # Offsets need footer row counts ONLY when a bucket holds
-        # several _copy files — a transitional state the first
-        # compaction folds; footer reads are metadata-sized.
-        buckets = [
-            int(os.path.basename(p).split("_")[0])
-            for p in original_files
-        ]
-        multi_copy = len(set(buckets)) != len(buckets)
-        next_rid: dict[int, int] = {}
-        for p in sorted(original_files, key=os.path.basename):
-            b = int(os.path.basename(p).split("_")[0])
-            orig_units.append((p, next_rid.get(b, 0), pval))
-            if multi_copy:
-                from pyarrow import orc as pa_orc
-
-                next_rid[b] = next_rid.get(b, 0) + pa_orc.ORCFile(p).nrows
-
-    unbounded = _MAX_WRITEID
-
-    def _flt(flat, min_ctid, max_ctid):
-        if not min_ctid and max_ctid == unbounded and not invalid_list:
-            return flat
-        ct = flat["currentTransaction"]
-        keep = (ct >= min_ctid) & (ct <= max_ctid)
-        if invalid_list:
-            keep &= ~ct.isin(invalid_list)
-        return flat[keep]
-
-    def read_data(it):
-        import pandas as pd
-        import pyarrow as pa
-        from pyarrow import orc as pa_orc
-
-        for pdf in it:
-            for path, min_ctid, max_ctid, pval, stripe in zip(
-                pdf["path"],
-                pdf["min_ctid"],
-                pdf["max_ctid"],
-                pdf["pval"],
-                pdf["stripe"],
-            ):
-                f = pa_orc.ORCFile(path)
-                t = (
-                    f.read()
-                    if stripe < 0
-                    else pa.Table.from_batches([f.read_stripe(stripe)])
-                )
-                flat = _flt(
-                    t.flatten().to_pandas(), min_ctid, max_ctid
-                )
-                out = {
-                    "otid": flat["originalTransaction"],
-                    "bucket": flat["bucket"],
-                    "rid": flat["rowId"],
-                }
-                for n in names:
-                    out[n] = flat[f"row.{n}"]
-                frame = pd.DataFrame(out)
-                frame["__pval"] = pval
-                yield frame
-
-    def read_deletes(it):
-        import pandas as pd
-        from pyarrow import orc as pa_orc
-
-        for pdf in it:
-            for path, min_ctid, max_ctid, pval in zip(
-                pdf["path"], pdf["min_ctid"], pdf["max_ctid"], pdf["pval"]
-            ):
-                t = _flt(
-                    pa_orc.ORCFile(path).read().to_pandas(),
-                    min_ctid,
-                    max_ctid,
-                )
-                frame = pd.DataFrame(
-                    {
-                        "otid": t["originalTransaction"],
-                        "bucket": t["bucket"],
-                        "rid": t["rowId"],
-                    }
-                )
-                frame["__pval"] = pval
-                yield frame
-
-    def read_originals(it):
-        import pandas as pd
-        from pyarrow import orc as pa_orc
-
-        for pdf in it:
-            for path, off, pval in zip(
-                pdf["path"], pdf["rid_offset"], pdf["pval"]
-            ):
-                t = pa_orc.ORCFile(path).read().to_pandas()
-                out = {
-                    "otid": [0] * len(t),
-                    "bucket": [
-                        int(os.path.basename(path).split("_")[0])
-                    ]
-                    * len(t),
-                    "rid": list(range(off, off + len(t))),
-                }
-                for n in names:
-                    out[n] = t[n]
-                frame = pd.DataFrame(out)
-                frame["__pval"] = pval
-                yield frame
-
-    payload_ddl = ", ".join(f"{n} {t}" for n, t in payload_schema)
-    acid_ddl = (
-        f"otid long, bucket int, rid long, {payload_ddl}, __pval string"
-    )
-    units = _decode_units(
-        data_units, spark.sparkContext.defaultParallelism
-    )
-    live = _manifest_frame(
-        spark,
-        units,
-        "path string, min_ctid long, max_ctid long, pval string, "
-        "stripe int",
-    ).mapInPandas(read_data, acid_ddl)
-    if orig_units:
-        live = live.unionByName(
-            _manifest_frame(
-                spark,
-                orig_units,
-                "path string, rid_offset long, pval string",
-            ).mapInPandas(read_originals, acid_ddl)
-        )
-    if del_units:
-        dels = _manifest_frame(
-            spark,
-            del_units,
-            "path string, min_ctid long, max_ctid long, pval string",
-        ).mapInPandas(
-            read_deletes,
-            "otid long, bucket int, rid long, __pval string",
-        )
-        merged = live.join(
-            F.broadcast(dels),
-            ["otid", "bucket", "rid", "__pval"],
-            "left_anti",
-        )
-    else:
-        # no partition elected a delete_delta: skip the delete-side
-        # decode job and the anti-join outright (r13 optimization)
-        merged = live
-    out = merged.withColumn(
-        partition_col,
-        F.when(
-            F.col("__pval") == HIVE_DEFAULT_PARTITION, F.lit(None)
-        ).otherwise(F.col("__pval")).cast(partition_type),
-    ).drop("__pval")
-    if keep_identity:
-        return out
-    return out.select(*names, partition_col)
-
-
-def hive_acid_insert_partitioned(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    partition_col: str,
-    static_value=None,
-    stmt: int | None = None,
-    n_buckets: int = 4,
-    bucket_col: str | None = None,
-    overwrite: bool = False,
-) -> list[str]:
-    """``INSERT [OVERWRITE] … [PARTITION (col=value)]`` on a
-    partitioned ACID layout, one TABLE-level writeid across every
-    partition the statement touches:
-
-    * **static** (``static_value`` given): ``df`` carries the payload
-      columns only; every row lands in that one partition dir —
-      Hive's ``PARTITION (p='v') SELECT payload…`` form;
-    * **dynamic** (``static_value`` None): ``df`` additionally
-      carries ``partition_col``; rows split by its value (NULL →
-      ``__HIVE_DEFAULT_PARTITION__``, Hive's spelling) and each
-      touched partition gets its own delta dir under the SAME
-      writeid. ``overwrite=True`` writes a ``base_W`` per touched
-      partition — dynamic IOW overwrites exactly the partitions
-      present in the output, leaving the rest untouched (Hive's
-      nonstrict dynamic-overwrite rule).
-
-    The distinct-value collect is metadata-sized (one row per touched
-    partition — the same class as Hive's dynamic-partition descriptor
-    list); each partition's write is a distributed filtered job.
-    Returns the written dir paths."""
-    if static_value is not None:
-        # static PARTITION (col=value): one dir, the single-dir writers
-        pdir = partition_subdir(root, partition_col, static_value)
-        if overwrite:
-            return [
-                hive_acid_overwrite(
-                    spark,
-                    pdir,
-                    df,
-                    payload_schema,
-                    payload_fields,
-                    writeid,
-                    n_buckets=n_buckets,
-                    bucket_col=bucket_col,
-                )
-            ]
-        p = append_delta(
-            spark,
-            pdir,
-            df,
-            payload_schema,
-            payload_fields,
-            writeid,
-            stmt=stmt,
-            n_buckets=n_buckets,
-            bucket_col=bucket_col,
-        )
-        return [p] if p is not None else []
-    if partition_col not in df.columns:
-        raise ValueError(
-            f"dynamic partitioned INSERT needs '{partition_col}' "
-            "in the SELECT output (Hive's last-column rule)"
-        )
-    # dynamic: EVERY touched partition's dir in ONE distributed job —
-    # the per-value loop paid one distinct().collect() pre-pass plus
-    # one full write job per partition (guide §2.4); dynamic IOW
-    # overwrites exactly the partitions present in the output (the
-    # write manifest), Hive's nonstrict dynamic-overwrite rule
-    return _split_update_one_job_partitioned(
+    """:func:`read_hive_acid` with ``partition_col`` positional (the
+    call shape ``perfbench/acid_wire.py`` imports)."""
+    return read_hive_acid(
         spark,
         root,
-        partition_col,
-        None,
-        df,
         payload_schema,
-        payload_fields,
-        writeid,
-        stmt=None if overwrite else stmt,
-        n_buckets=n_buckets,
-        bucket_col=bucket_col,
-        kind="base" if overwrite else "delta",
-        replace_final=overwrite,
+        partition_col=partition_col,
+        partition_type=partition_type,
+        **kw,
     )
 
 
@@ -3339,348 +3136,6 @@ def _pkey_col(partition_col: str) -> F.Column:
     return F.when(
         F.col(partition_col).isNull(), F.lit(HIVE_DEFAULT_PARTITION)
     ).otherwise(F.col(partition_col).cast("string"))
-
-
-def _split_update_one_job_partitioned(
-    spark: SparkSession,
-    root: str,
-    partition_col: str,
-    ids_df: DataFrame | None,
-    new_img: DataFrame | None,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    stmt: int | None = None,
-    n_buckets: int = 4,
-    bucket_col: str | None = None,
-    kind: str = "delta",
-    replace_final: bool = False,
-    guard: DataFrame | None = None,
-) -> list[str]:
-    """The partitioned sibling of :func:`_split_update_one_job`: one
-    writeid's delete events (``ids_df``: identities + the partition
-    column) and insert events (``new_img``: payload + the partition
-    column) across EVERY touched partition in a SINGLE distributed
-    job — the per-partition write loop paid one full Spark job per
-    (partition, kind) dir, 2·P jobs for a P-partition UPDATE (guide
-    §2.4). Tasks group on (partition token, kind, bucket); identity
-    assignment windows on (partition, bucket) so each partition's
-    rowId space is exactly the per-partition loop's. ``kind`` names
-    the insert dir family (``delta`` | ``base`` for dynamic IOW, with
-    ``replace_final``). Touched partitions come from the write
-    manifest — no distinct().collect() pre-pass. Returns written
-    final dirs, delete_delta before delta per partition, partitions
-    sorted by token."""
-    names = [n for n, _ in payload_schema]
-    bucket_col = bucket_col or names[0]
-    rid_offset = (stmt or 0) << 40
-    dels = None
-    if ids_df is not None:
-        dels = ids_df.select(
-            _pkey_col(partition_col).alias("__pkey"),
-            F.col("otid").cast("long").alias("__otid"),
-            F.col("bucket").cast("int").alias("__bucket"),
-            F.col("rid").cast("long").alias("__rid"),
-        ).withColumn("__op", F.lit(_OP_DELETE)).withColumn(
-            "__ctid", F.lit(writeid).cast("long")
-        )
-    events = None
-    if new_img is not None:
-        aligned = new_img
-        for n, t in payload_schema:
-            aligned = aligned.withColumn(n, F.col(n).cast(t))
-        events = (
-            aligned.select(
-                _pkey_col(partition_col).alias("__pkey"), *names
-            )
-            .withColumn(
-                "__bucket",
-                F.pmod(F.hash(bucket_col), F.lit(n_buckets)).cast("int"),
-            )
-            # __rid NULL: the write task assigns write-order ordinals
-            # per (partition, bucket) group — no separate window pass
-            .withColumn("__rid", F.lit(None).cast("long"))
-            .withColumn("__otid", F.lit(writeid).cast("long"))
-            .withColumn("__ctid", F.lit(writeid).cast("long"))
-            .withColumn("__op", F.lit(_OP_INSERT))
-        )
-    sfx = f"_{stmt:04d}" if stmt is not None else ""
-    ins_scratch = f".scratch_{kind}_{writeid:07d}{sfx}"
-    ins_final = (
-        f"base_{writeid:07d}"
-        if kind == "base"
-        else f"delta_{writeid:07d}_{writeid:07d}{sfx}"
-    )
-
-    def scratch_of(pkey: str, is_del: bool) -> str:
-        name = f".scratch_dd_{writeid:07d}{sfx}" if is_del else ins_scratch
-        return os.path.join(root, f"{partition_col}={pkey}", name)
-
-    def final_of(pkey: str, is_del: bool) -> str:
-        name = (
-            f"delete_delta_{writeid:07d}_{writeid:07d}{sfx}"
-            if is_del
-            else ins_final
-        )
-        return os.path.join(root, f"{partition_col}={pkey}", name)
-
-    # stale-scratch hygiene (the per-dir writers rmtree'd their
-    # scratch before writing): existing partition dirs only — new
-    # partitions can't hold debris
-    for _v, pdir in partition_dirs(root, partition_col):
-        shutil.rmtree(
-            os.path.join(pdir, f".scratch_dd_{writeid:07d}{sfx}"),
-            ignore_errors=True,
-        )
-        shutil.rmtree(os.path.join(pdir, ins_scratch), ignore_errors=True)
-    return _write_acid_dirs_one_job(
-        _union_insert_delete(events, dels, payload_schema),
-        scratch_of,
-        final_of,
-        payload_fields,
-        replace_final=replace_final,
-        synth_rid=(bucket_col, rid_offset),
-    )
-
-
-def hive_acid_delete_partitioned(
-    spark: SparkSession,
-    root: str,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    partition_col: str,
-    partition_type: str = "string",
-    pred: str | None = None,
-    valid_writeids: "ValidWriteIdList | None" = None,
-    stmt: int | None = None,
-    snapshot: DataFrame | None = None,
-) -> list[str]:
-    """Row-level DELETE across a partitioned layout: ONE writeid, one
-    ``delete_delta_W_W[_ssss]`` per TOUCHED partition (Hive's
-    per-partition event dirs under a table-level writeid). The
-    predicate may reference the partition column — matching it prunes
-    exactly like a read (only touched partitions get a dir)."""
-    snap = (
-        snapshot
-        if snapshot is not None
-        else read_hive_acid_partitioned(
-            spark,
-            root,
-            payload_schema,
-            partition_col,
-            partition_type,
-            keep_identity=True,
-            valid_writeids=valid_writeids,
-            # lazy: manifest pinned at frame build; decode runs
-            # inside the first consuming job (r13 optimization)
-        ).localCheckpoint(eager=False)
-    )
-    hits = (
-        snap.filter(F.coalesce(F.expr(pred), F.lit(False)))
-        if pred is not None
-        else snap
-    )
-    # every touched partition's delete_delta in ONE job; touched
-    # partitions come from the write manifest (no distinct/collect)
-    return _split_update_one_job_partitioned(
-        spark,
-        root,
-        partition_col,
-        hits.select("otid", "bucket", "rid", partition_col),
-        None,
-        payload_schema,
-        payload_fields,
-        writeid,
-        stmt=stmt,
-    )
-
-
-def hive_acid_update_partitioned(
-    spark: SparkSession,
-    root: str,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    partition_col: str,
-    set_exprs: list[tuple[str, str]],
-    partition_type: str = "string",
-    pred: str | None = None,
-    n_buckets: int = 4,
-    bucket_col: str | None = None,
-    valid_writeids: "ValidWriteIdList | None" = None,
-    stmt: int | None = None,
-    snapshot: DataFrame | None = None,
-) -> list[str]:
-    """Split-update UPDATE across a partitioned layout: per touched
-    partition, one delete_delta on the old identities + one insert
-    delta with the new images, all under ONE table-level writeid.
-    SET of the partition column is refused — Hive does not allow
-    updating partition columns (a row never moves between partitions
-    via UPDATE) `[upstream: hive UpdateDeleteSemanticAnalyzer —
-    partition columns are not updatable]`."""
-    names = [n for n, _ in payload_schema]
-    set_map = dict(set_exprs)
-    if partition_col in set_map:
-        raise ValueError(
-            f"UPDATE may not SET partition column '{partition_col}' "
-            "(Hive refuses; DELETE + INSERT moves rows)"
-        )
-    unknown = set(set_map) - set(names)
-    if unknown:
-        raise ValueError(
-            f"UPDATE SET references unknown columns {sorted(unknown)}"
-        )
-    snap = (
-        snapshot
-        if snapshot is not None
-        else read_hive_acid_partitioned(
-            spark,
-            root,
-            payload_schema,
-            partition_col,
-            partition_type,
-            keep_identity=True,
-            valid_writeids=valid_writeids,
-            # lazy: manifest pinned at frame build; decode runs
-            # inside the first consuming job (r13 optimization)
-        ).localCheckpoint(eager=False)
-    )
-    hits = (
-        snap.filter(F.coalesce(F.expr(pred), F.lit(False)))
-        if pred is not None
-        else snap
-    )
-    new_img = hits.select(
-        *[
-            F.expr(set_map[n]).cast(t).alias(n)
-            if n in set_map
-            else F.col(n)
-            for n, t in payload_schema
-        ],
-        partition_col,
-    )
-    # every touched partition's delete_delta + delta pair in ONE job
-    return _split_update_one_job_partitioned(
-        spark,
-        root,
-        partition_col,
-        hits.select("otid", "bucket", "rid", partition_col),
-        new_img,
-        payload_schema,
-        payload_fields,
-        writeid,
-        stmt=stmt,
-        n_buckets=n_buckets,
-        bucket_col=bucket_col,
-    )
-
-
-def hive_acid_merge_partitioned(
-    spark: SparkSession,
-    root: str,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    partition_col: str,
-    source_df: DataFrame,
-    on_cond: str,
-    target_alias: str = "t",
-    source_alias: str = "s",
-    matched_clauses: "list[tuple[str | None, object]] | None" = None,
-    insert_values: "list[str] | None" = None,
-    insert_cond: "str | None" = None,
-    partition_type: str = "string",
-    n_buckets: int = 4,
-    bucket_col: str | None = None,
-    valid_writeids: "ValidWriteIdList | None" = None,
-    stmt: int | None = None,
-    snapshot: DataFrame | None = None,
-) -> list[str]:
-    """MERGE INTO a PARTITIONED transactional layout (r13): the same
-    MergeSemanticAnalyzer split-update rewrite as
-    :func:`hive_acid_merge` — first-matching-clause-wins via
-    NOT(earlier) guards, cardinality rule, one writeid — but the
-    target snapshot carries the partition column (ON/clause
-    predicates may reference it), row events land in per-TOUCHED-
-    partition delete_delta/delta dirs, and the WHEN NOT MATCHED
-    INSERT expression list carries the partition value LAST (the
-    dynamic-partition column rule — an inserted row's partition comes
-    from its expression, an updated row stays in its partition: SET
-    of the partition column is refused upstream). Returns the
-    written dir paths."""
-    matched_clauses = matched_clauses or []
-    snap = (
-        snapshot
-        if snapshot is not None
-        else read_hive_acid_partitioned(
-            spark,
-            root,
-            payload_schema,
-            partition_col,
-            partition_type,
-            keep_identity=True,
-            valid_writeids=valid_writeids,
-            # lazy: manifest pinned at frame build; decode runs
-            # inside the first consuming job (r13 optimization)
-        ).localCheckpoint(eager=False)
-    )
-    dels, ins, guard = _merge_event_frames(
-        snap,
-        source_df,
-        on_cond,
-        target_alias,
-        source_alias,
-        matched_clauses,
-        insert_values,
-        insert_cond,
-        payload_schema,
-        partition_col=partition_col,
-    )
-    if ins is not None:
-        ins = ins.withColumn(
-            partition_col, F.col(partition_col).cast(partition_type)
-        )
-    # every touched partition's event dirs AND the cardinality guard
-    # in ONE job (guide §2.4): the clause-family unions re-filter the
-    # MATERIALIZED join inside that job; touched partitions come from
-    # the write manifest (the two eager checkpoints + two
-    # distinct().collect() pre-passes are gone)
-    return _split_update_one_job_partitioned(
-        spark,
-        root,
-        partition_col,
-        dels,
-        ins,
-        payload_schema,
-        payload_fields,
-        writeid,
-        stmt=stmt,
-        n_buckets=n_buckets,
-        bucket_col=bucket_col,
-        guard=guard,
-    )
-
-
-def publish_hive_acid_partitioned(
-    spark: SparkSession,
-    root: str,
-    payload_schema: list[tuple[str, str]],
-    name: str,
-    partition_col: str,
-    partition_type: str = "string",
-    valid_writeids: "ValidWriteIdList | None" = None,
-) -> None:
-    """Serve the partitioned election as a global-temp view (the
-    partitioned sibling of publish_hive_acid)."""
-    read_hive_acid_partitioned(
-        spark,
-        root,
-        payload_schema,
-        partition_col,
-        partition_type,
-        valid_writeids=valid_writeids,
-    ).createOrReplaceGlobalTempView(name)
 
 
 # --- insert-only (micromanaged / MM) transactional tables (r11) -------------
@@ -4553,12 +4008,12 @@ def sink_hive_acid_partitioned(
         "compaction"
     )
     vwil = mgr.ledger.valid_writeids(root, table="part_orders")
-    return read_hive_acid_partitioned(
+    return read_hive_acid(
         spark,
         root,
         _PART_ORDERS_SCHEMA,
-        "o_orderstatus",
         valid_writeids=vwil,
+        partition_col="o_orderstatus",
     )
 
 
@@ -4692,22 +4147,22 @@ def scan_hive_acid_partition_prune(
         orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
         )
-        hive_acid_insert_partitioned(
+        hive_acid_insert(
             spark,
             root,
             orders,
             _PART_ORDERS_SCHEMA,
             _part_orders_fields(),
             1,
-            "o_orderstatus",
             n_buckets=4,
+            partition_col="o_orderstatus",
         )
         _fixture_done(shared_root, key)
-    pruned = read_hive_acid_partitioned(
+    pruned = read_hive_acid(
         spark,
         root,
         _PART_ORDERS_SCHEMA,
-        "o_orderstatus",
+        partition_col="o_orderstatus",
         partition_values=["F"],
     )
     return pruned.filter(F.col("o_orderkey") % 4 == 1).select(
@@ -4724,6 +4179,8 @@ def publish_hive_acid(
     payload_schema: list[tuple[str, str]],
     name: str,
     valid_writeids: "ValidWriteIdList | None" = None,
+    partition_col: str | None = None,
+    partition_type: str = "string",
 ) -> str:
     """Serve an AcidUtils base/delta/delete_delta layout BY NAME over
     the wire: the election read (directory election + distributed
@@ -4745,9 +4202,15 @@ def publish_hive_acid(
     ``valid_writeids`` (normally minted from the manager's
     HiveWriteIdLedger) threads the transaction state into the served
     election, so in-flight and aborted writeids never surface over
-    the wire."""
+    the wire. ``partition_col`` serves a partitioned layout, as in
+    read_hive_acid."""
     df = read_hive_acid(
-        spark, root, payload_schema, valid_writeids=valid_writeids
+        spark,
+        root,
+        payload_schema,
+        valid_writeids=valid_writeids,
+        partition_col=partition_col,
+        partition_type=partition_type,
     )
     df.createOrReplaceGlobalTempView(name)
     return f"global_temp.{name}"

@@ -1096,7 +1096,6 @@ class TxnSessionManager:
     def _republish_acid(self, ent: dict) -> None:
         from layer_apache_hive_spark.sources.hive_acid import (
             publish_hive_acid,
-            publish_hive_acid_partitioned,
             publish_hive_mm,
         )
 
@@ -1111,17 +1110,7 @@ class TxnSessionManager:
             vw = self.ledger.valid_writeids(
                 ent["root"], table=ent["name"]
             )
-            if ent.get("partition_col"):
-                publish_hive_acid_partitioned(
-                    self.spark,
-                    ent["root"],
-                    ent["schema"],
-                    ent["name"],
-                    ent["partition_col"],
-                    ent["partition_type"],
-                    valid_writeids=vw,
-                )
-            elif ent.get("insert_only"):
+            if ent.get("insert_only"):
                 publish_hive_mm(
                     self.spark,
                     ent["root"],
@@ -1139,47 +1128,47 @@ class TxnSessionManager:
                     ent["schema"],
                     ent["name"],
                     valid_writeids=vw,
+                    partition_col=ent["partition_col"],
+                    partition_type=ent["partition_type"],
                 )
 
-    def _append_one(self, ent: dict, df, w: int, stmt=None):
-        """One statement's delta append, routed by table kind."""
-        from layer_apache_hive_spark.sources.hive_acid import (
-            append_delta,
-            append_mm_delta,
-        )
-
-        if ent.get("insert_only"):
-            return append_mm_delta(
-                self.spark, ent["root"], df, w, fmt=ent["fmt"], stmt=stmt
-            )
-        return append_delta(
-            self.spark,
-            ent["root"],
-            df,
-            ent["schema"],
-            ent["fields"],
-            w,
-            stmt=stmt,
-            n_buckets=ent["n_buckets"],
-            bucket_col=ent["bucket_col"],
-        )
-
-    def _acid_insert_df(self, ent: dict, body: str) -> DataFrame:
+    def _acid_insert_df(
+        self, ent: dict, body: str, dynamic: bool = False
+    ) -> DataFrame:
+        """Analyze an INSERT body against an enrollment: the payload
+        columns, plus the partition column LAST for a ``dynamic``
+        partitioned INSERT (Hive's dynamic-partition column rule).
+        Normalizes to the declared schema for every table kind: the
+        full-ACID writer casts again, but the MM path writes the frame
+        raw — an `INSERT … VALUES (1, 2.0)` would land int/decimal
+        parquet next to long/double files and poison later reads (r11
+        advisor)."""
         incoming = self.spark.sql(body)
         names = [n for n, _ in ent["schema"]]
-        if len(incoming.columns) != len(names):
+        pc = ent["partition_col"]
+        cols = names + [pc] if dynamic else names
+        if len(incoming.columns) != len(cols):
+            if pc is None:
+                raise ValueError(
+                    f"INSERT column count {len(incoming.columns)} != "
+                    f"acid table arity {len(names)}"
+                )
+            shape = (
+                "payload + partition column last — dynamic"
+                if dynamic
+                else "payload only — static PARTITION"
+            )
             raise ValueError(
                 f"INSERT column count {len(incoming.columns)} != "
-                f"acid table arity {len(names)}"
+                f"expected {len(cols)} ({shape})"
             )
-        aligned = incoming.toDF(*names)
-        # normalize to the declared schema for BOTH table kinds: the
-        # full-ACID path casts again inside append_delta, but the MM
-        # path writes the frame raw — an `INSERT … VALUES (1, 2.0)`
-        # would land int/decimal parquet next to long/double files and
-        # poison later reads (r11 advisor)
+        aligned = incoming.toDF(*cols)
         for n, t in ent["schema"]:
             aligned = aligned.withColumn(n, F.col(n).cast(t))
+        if dynamic:
+            aligned = aligned.withColumn(
+                pc, F.col(pc).cast(ent["partition_type"])
+            )
         return aligned
 
     @staticmethod
@@ -1204,163 +1193,6 @@ class TxnSessionManager:
             val = val[1:-1]
         return col, val
 
-    def _acid_insert_df_partitioned(
-        self, ent: dict, body: str, static: bool
-    ) -> DataFrame:
-        """Analyze an INSERT body against a partitioned enrollment:
-        static bodies carry the payload columns only, dynamic bodies
-        carry the partition column LAST (Hive's dynamic-partition
-        column rule). Casts to the declared schema either way."""
-        incoming = self.spark.sql(body)
-        names = [n for n, _ in ent["schema"]]
-        pc = ent["partition_col"]
-        cols = names if static else names + [pc]
-        if len(incoming.columns) != len(cols):
-            raise ValueError(
-                f"INSERT column count {len(incoming.columns)} != "
-                f"expected {len(cols)} "
-                f"({'payload only — static PARTITION' if static else 'payload + partition column last — dynamic'})"
-            )
-        aligned = incoming.toDF(*cols)
-        for n, t in ent["schema"]:
-            aligned = aligned.withColumn(n, F.col(n).cast(t))
-        if not static:
-            aligned = aligned.withColumn(
-                pc, F.col(pc).cast(ent["partition_type"])
-            )
-        return aligned
-
-    def _apply_partitioned_row_op(
-        self, ent, op, w, stmt, snap_cache, vw, note_ws=None
-    ) -> str:
-        """UPDATE/DELETE/MERGE on a partitioned enrollment:
-        per-partition event dirs under ONE table-level writeid; the
-        MERGE INSERT expression list carries the partition value LAST
-        (the dynamic-partition column rule)."""
-        from layer_apache_hive_spark.sources.hive_acid import (
-            hive_acid_delete_partitioned,
-            hive_acid_update_partitioned,
-        )
-
-        kind = op[0]
-        if kind == "merge":
-            from layer_apache_hive_spark.sources.hive_acid import (
-                hive_acid_merge_partitioned,
-            )
-
-            _, src_sql, on_cond, talias, salias, matched, ic, iv, icond = op
-            names = [n for n, _ in ent["schema"]]
-            pc = ent["partition_col"]
-            insert_values = None
-            if iv is not None:
-                full = names + [pc]
-                if ic is not None:
-                    unknown = set(ic) - set(full)
-                    if unknown:
-                        raise ValueError(
-                            "MERGE INSERT names unknown columns "
-                            f"{sorted(unknown)}"
-                        )
-                    if len(ic) != len(iv):
-                        raise ValueError(
-                            "MERGE INSERT column/value arity mismatch"
-                        )
-                    colmap = dict(zip(ic, iv))
-                    # unnamed columns take NULL (Hive's rule); an
-                    # unnamed PARTITION column inserts into
-                    # __HIVE_DEFAULT_PARTITION__ via NULL
-                    insert_values = [
-                        colmap.get(n, "NULL") for n in full
-                    ]
-                else:
-                    insert_values = list(iv)
-            paths = hive_acid_merge_partitioned(
-                self.spark,
-                ent["root"],
-                ent["schema"],
-                ent["fields"],
-                w,
-                pc,
-                source_df=self.spark.sql(src_sql),
-                on_cond=on_cond,
-                target_alias=talias,
-                source_alias=salias,
-                matched_clauses=list(matched),
-                insert_values=insert_values,
-                insert_cond=icond,
-                partition_type=ent["partition_type"],
-                n_buckets=ent["n_buckets"],
-                bucket_col=ent["bucket_col"],
-                valid_writeids=vw,
-                stmt=stmt,
-                snapshot=self._txn_snapshot(ent, snap_cache),
-            )
-            if note_ws is not None:
-                note_ws(
-                    {
-                        os.path.relpath(p, ent["root"]).split(os.sep)[0]
-                        for p in paths
-                    }
-                )
-            rel = "+".join(
-                os.path.relpath(p, ent["root"]) for p in paths
-            )
-            return rel or "no rows matched"
-        if kind == "delete":
-            paths = hive_acid_delete_partitioned(
-                self.spark,
-                ent["root"],
-                ent["schema"],
-                ent["fields"],
-                w,
-                ent["partition_col"],
-                ent["partition_type"],
-                pred=op[1],
-                valid_writeids=vw,
-                stmt=stmt,
-                snapshot=self._txn_snapshot(ent, snap_cache),
-            )
-            if note_ws is not None:
-                note_ws(
-                    {
-                        os.path.relpath(p, ent["root"]).split(os.sep)[0]
-                        for p in paths
-                    }
-                )
-            rel = "+".join(
-                os.path.relpath(p, ent["root"]) for p in paths
-            )
-            return rel or "no rows matched, no delete_delta"
-        if kind == "update":
-            paths = hive_acid_update_partitioned(
-                self.spark,
-                ent["root"],
-                ent["schema"],
-                ent["fields"],
-                w,
-                ent["partition_col"],
-                list(op[1]),
-                ent["partition_type"],
-                pred=op[2],
-                n_buckets=ent["n_buckets"],
-                bucket_col=ent["bucket_col"],
-                valid_writeids=vw,
-                stmt=stmt,
-                snapshot=self._txn_snapshot(ent, snap_cache),
-            )
-            if note_ws is not None:
-                note_ws(
-                    {
-                        os.path.relpath(p, ent["root"]).split(os.sep)[0]
-                        for p in paths
-                    }
-                )
-            rel = "+".join(
-                os.path.relpath(p, ent["root"]) for p in paths
-            )
-            return rel or "no rows matched"
-        raise ValueError(f"unknown acid op {kind!r}")  # pragma: no cover
-
     def _mm_dml_refusal(self, ent: dict, op: tuple) -> str | None:
         if ent.get("insert_only") and op[0] in (
             "update",
@@ -1383,10 +1215,7 @@ class TxnSessionManager:
         the minted list excludes every in-flight writeid — but paying
         the election read once per (transaction, table) instead of
         once per statement."""
-        from layer_apache_hive_spark.sources.hive_acid import (
-            read_hive_acid,
-            read_hive_acid_partitioned,
-        )
+        from layer_apache_hive_spark.sources.hive_acid import read_hive_acid
 
         if snap_cache is None:
             return None  # single-statement caller: writers self-read
@@ -1395,24 +1224,15 @@ class TxnSessionManager:
             vw = self.ledger.valid_writeids(
                 ent["root"], table=ent["name"]
             )
-            if ent.get("partition_col"):
-                snap = read_hive_acid_partitioned(
-                    self.spark,
-                    ent["root"],
-                    ent["schema"],
-                    ent["partition_col"],
-                    ent["partition_type"],
-                    keep_identity=True,
-                    valid_writeids=vw,
-                )
-            else:
-                snap = read_hive_acid(
-                    self.spark,
-                    ent["root"],
-                    ent["schema"],
-                    keep_identity=True,
-                    valid_writeids=vw,
-                )
+            snap = read_hive_acid(
+                self.spark,
+                ent["root"],
+                ent["schema"],
+                keep_identity=True,
+                valid_writeids=vw,
+                partition_col=ent["partition_col"],
+                partition_type=ent["partition_type"],
+            )
             # lazy: the election manifest is pinned HERE (the
             # directory listing runs at frame-build time, driver
             # side); the decode materializes inside the first
@@ -1440,111 +1260,91 @@ class TxnSessionManager:
         read-your-own-writes on this surface, Hive ACID's
         statement-level snapshot). Inside a multi-statement COMMIT,
         ``snap_cache`` shares ONE materialized snapshot per table
-        across the row-level statements."""
+        across the row-level statements.
+
+        One path for every layout: an unpartitioned enrollment is a
+        table with one implicit partition (the root), so the writers
+        take the enrollment's ``partition_col`` (None or the column)
+        and return the dirs they wrote. On a partitioned table each
+        verb writes per-TOUCHED-partition dirs under the one writeid,
+        and the MERGE INSERT expression list carries the partition
+        value LAST (the dynamic-partition column rule)."""
         from layer_apache_hive_spark.sources.hive_acid import (
+            append_mm_delta,
             hive_acid_delete,
-            hive_acid_insert_partitioned,
-            hive_acid_overwrite,
+            hive_acid_insert,
+            hive_acid_merge,
             hive_acid_update,
             hive_mm_overwrite,
         )
 
-        vw = self.ledger.valid_writeids(ent["root"], table=ent["name"])
+        root = ent["root"]
+        vw = self.ledger.valid_writeids(root, table=ent["name"])
         kind = op[0]
-        pc = ent.get("partition_col")
-
-        def note_ws(tokens):
-            # record this statement's update/delete/overwrite write
-            # set for commit-time first-committer-wins validation
-            # (HIVE-13395): '*' = the whole unpartitioned table,
-            # else the touched partition dirs. Pure INSERTs never
-            # note anything (they cannot conflict).
-            if ws_out is not None and tokens:
-                ws_out.setdefault(ent["root"], set()).update(tokens)
-
-        if pc is not None and kind != "insert":
-            return self._apply_partitioned_row_op(
-                ent, op, w, stmt, snap_cache, vw, note_ws
-            )
+        pc = ent["partition_col"]
+        part = {
+            "partition_col": pc,
+            "partition_type": ent["partition_type"],
+        }
+        layout = {
+            "n_buckets": ent["n_buckets"],
+            "bucket_col": ent["bucket_col"],
+        }
+        # record the statement's update/delete/overwrite write set for
+        # commit-time first-committer-wins validation (HIVE-13395):
+        # '*' = the implicit partition of an unpartitioned table, else
+        # the touched partition dirs. Pure INSERTs never note anything
+        # (they cannot conflict).
+        conflicts = kind != "insert" or op[1] == "overwrite"
         if kind == "insert":
             part_spec = self._parse_partition_spec(
                 op[3] if len(op) > 3 else None
             )
-            if pc is not None:
-                if part_spec is not None and part_spec[0] != pc:
-                    raise ValueError(
-                        f"unknown partition column "
-                        f"'{part_spec[0]}' (table is partitioned by "
-                        f"'{pc}')"
-                    )
-                static_val = (
-                    part_spec[1] if part_spec is not None else None
-                )
-                df = self._acid_insert_df_partitioned(
-                    ent, op[2], static=static_val is not None
-                )
-                written = hive_acid_insert_partitioned(
-                    self.spark,
-                    ent["root"],
-                    df,
-                    ent["schema"],
-                    ent["fields"],
-                    w,
-                    pc,
-                    static_value=static_val,
-                    stmt=stmt,
-                    n_buckets=ent["n_buckets"],
-                    bucket_col=ent["bucket_col"],
-                    overwrite=op[1] == "overwrite",
-                )
-                if op[1] == "overwrite":
-                    note_ws(
-                        {
-                            os.path.relpath(p, ent["root"]).split(
-                                os.sep
-                            )[0]
-                            for p in written
-                        }
-                    )
-                rel = "+".join(
-                    os.path.relpath(p, ent["root"]) for p in written
-                )
-                return rel or "empty statement, no delta"
-            if part_spec is not None:
+            if part_spec is not None and pc is None:
                 raise ValueError(
                     f"table '{ent['name']}' is not partitioned: "
                     "PARTITION clause refused"
                 )
-            df = self._acid_insert_df(ent, op[2])
-            if op[1] == "overwrite":
-                path = (
-                    hive_mm_overwrite(
-                        self.spark, ent["root"], df, w, fmt=ent["fmt"]
-                    )
-                    if ent.get("insert_only")
-                    else hive_acid_overwrite(
-                        self.spark,
-                        ent["root"],
-                        df,
-                        ent["schema"],
-                        ent["fields"],
-                        w,
-                        n_buckets=ent["n_buckets"],
-                        bucket_col=ent["bucket_col"],
-                    )
+            if part_spec is not None and part_spec[0] != pc:
+                raise ValueError(
+                    f"unknown partition column "
+                    f"'{part_spec[0]}' (table is partitioned by "
+                    f"'{pc}')"
                 )
-                note_ws({"*"})
-                return os.path.basename(path)
-            path = self._append_one(ent, df, w, stmt=stmt)
-            return (
-                os.path.basename(path)
-                if path is not None
-                else "empty statement, no delta"
+            static_val = part_spec[1] if part_spec is not None else None
+            df = self._acid_insert_df(
+                ent, op[2], dynamic=pc is not None and static_val is None
             )
-        if kind == "delete":
-            path = hive_acid_delete(
+            if not ent.get("insert_only"):
+                paths = hive_acid_insert(
+                    self.spark,
+                    root,
+                    df,
+                    ent["schema"],
+                    ent["fields"],
+                    w,
+                    stmt=stmt,
+                    overwrite=op[1] == "overwrite",
+                    static_value=static_val,
+                    partition_col=pc,
+                    **layout,
+                )
+            elif op[1] == "overwrite":
+                paths = [
+                    hive_mm_overwrite(
+                        self.spark, root, df, w, fmt=ent["fmt"]
+                    )
+                ]
+            else:
+                p = append_mm_delta(
+                    self.spark, root, df, w, fmt=ent["fmt"], stmt=stmt
+                )
+                paths = [p] if p is not None else []
+            empty = "empty statement, no delta"
+        elif kind == "delete":
+            paths = hive_acid_delete(
                 self.spark,
-                ent["root"],
+                root,
                 ent["schema"],
                 ent["fields"],
                 w,
@@ -1552,48 +1352,34 @@ class TxnSessionManager:
                 valid_writeids=vw,
                 stmt=stmt,
                 snapshot=self._txn_snapshot(ent, snap_cache),
+                **part,
             )
-            if path is not None:
-                note_ws({"*"})
-            return (
-                os.path.basename(path)
-                if path is not None
-                else "no rows matched, no delete_delta"
-            )
-        if kind == "update":
-            del_path, ins_path = hive_acid_update(
+            empty = "no rows matched, no delete_delta"
+        elif kind == "update":
+            paths = hive_acid_update(
                 self.spark,
-                ent["root"],
+                root,
                 ent["schema"],
                 ent["fields"],
                 w,
                 set_exprs=list(op[1]),
                 pred=op[2],
-                n_buckets=ent["n_buckets"],
-                bucket_col=ent["bucket_col"],
                 valid_writeids=vw,
                 stmt=stmt,
                 snapshot=self._txn_snapshot(ent, snap_cache),
+                **layout,
+                **part,
             )
-            if del_path is not None or ins_path is not None:
-                note_ws({"*"})
-            parts = [
-                os.path.basename(p)
-                for p in (del_path, ins_path)
-                if p is not None
-            ]
-            return "+".join(parts) or "no rows matched"
-        if kind == "merge":
-            from layer_apache_hive_spark.sources.hive_acid import (
-                hive_acid_merge,
-            )
-
+            empty = "no rows matched"
+        elif kind == "merge":
             _, src_sql, on_cond, talias, salias, matched, ic, iv, icond = op
             insert_values = None
             if iv is not None:
-                names = [n for n, _ in ent["schema"]]
+                full = [n for n, _ in ent["schema"]] + (
+                    [pc] if pc is not None else []
+                )
                 if ic is not None:
-                    unknown = set(ic) - set(names)
+                    unknown = set(ic) - set(full)
                     if unknown:
                         raise ValueError(
                             "MERGE INSERT names unknown columns "
@@ -1604,13 +1390,15 @@ class TxnSessionManager:
                             "MERGE INSERT column/value arity mismatch"
                         )
                     colmap = dict(zip(ic, iv))
-                    # unnamed columns take NULL (Hive's rule)
-                    insert_values = [colmap.get(n, "NULL") for n in names]
+                    # unnamed columns take NULL (Hive's rule); an
+                    # unnamed PARTITION column inserts into
+                    # __HIVE_DEFAULT_PARTITION__ via NULL
+                    insert_values = [colmap.get(n, "NULL") for n in full]
                 else:
                     insert_values = list(iv)
-            del_path, ins_path = hive_acid_merge(
+            paths = hive_acid_merge(
                 self.spark,
-                ent["root"],
+                root,
                 ent["schema"],
                 ent["fields"],
                 w,
@@ -1621,21 +1409,23 @@ class TxnSessionManager:
                 matched_clauses=list(matched),
                 insert_values=insert_values,
                 insert_cond=icond,
-                n_buckets=ent["n_buckets"],
-                bucket_col=ent["bucket_col"],
                 valid_writeids=vw,
                 stmt=stmt,
                 snapshot=self._txn_snapshot(ent, snap_cache),
+                **layout,
+                **part,
             )
-            if del_path is not None or ins_path is not None:
-                note_ws({"*"})
-            parts = [
-                os.path.basename(p)
-                for p in (del_path, ins_path)
-                if p is not None
-            ]
-            return "+".join(parts) or "no rows matched"
-        raise ValueError(f"unknown acid op {kind!r}")  # pragma: no cover
+            empty = "no rows matched"
+        else:  # pragma: no cover
+            raise ValueError(f"unknown acid op {kind!r}")
+        if conflicts and paths and ws_out is not None:
+            ws_out.setdefault(root, set()).update(
+                "*"
+                if pc is None
+                else os.path.relpath(p, root).split(os.sep)[0]
+                for p in paths
+            )
+        return "+".join(os.path.relpath(p, root) for p in paths) or empty
 
     def _acid_autocommit(
         self, session_id: str, user: str, name: str, op: tuple
@@ -1748,27 +1538,28 @@ class TxnSessionManager:
         row_ops = [op for op in t_ops if op[0] in ("update", "delete")]
         if not row_ops:
             return
-        pc = ent.get("partition_col")
+        pc = ent["partition_col"]
+        token = (
+            F.lit("*")
+            if pc is None
+            else F.concat(F.lit(f"{pc}="), _pkey_col(pc))
+        ).alias("__tok")
+        snap = self._txn_snapshot(ent, snap_cache)
         ours: set[str] = set()
         for op in row_ops:
             pred = op[2] if op[0] == "update" else op[1]
-            snap = self._txn_snapshot(ent, snap_cache)
             hits = (
                 snap.filter(F.coalesce(F.expr(pred), F.lit(False)))
                 if pred is not None
                 else snap
             )
-            if pc is None:
-                if not hits.isEmpty():
-                    ours.add("*")
-                    break  # '*' already overlaps every candidate
-            else:
-                ours.update(
-                    f"{pc}={r['__pk']}"
-                    for r in hits.select(_pkey_col(pc).alias("__pk"))
-                    .distinct()
-                    .collect()
-                )
+            toks = hits.select(token)
+            # the implicit partition's '*' is decided by any one hit row
+            # (and overlaps every candidate); partitions need them all
+            rows = toks.take(1) if pc is None else toks.distinct().collect()
+            ours.update(r["__tok"] for r in rows)
+            if "*" in ours:
+                break
         for w2 in sorted(cands):
             theirs = cands[w2]
             if "*" in ours or "*" in theirs or (ours & set(theirs)):

@@ -313,14 +313,12 @@ def test_ledger_append_is_durable_first(tmp_path):
 
 from layer_apache_hive_spark.sources.hive_acid import (  # noqa: E402
     HIVE_DEFAULT_PARTITION,
-    append_delete_delta,
-    hive_acid_delete_partitioned,
-    hive_acid_insert_partitioned,
-    hive_acid_update_partitioned,
+    hive_acid_delete,
+    hive_acid_insert,
+    hive_acid_update,
     next_writeid,
     partition_dirs,
     partition_subdir,
-    read_hive_acid_partitioned,
 )
 
 
@@ -340,8 +338,9 @@ def part_root(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, MM_DDL + ", p string")
     w = led.allocate(root)
-    hive_acid_insert_partitioned(
-        spark, root, df, SCHEMA, _fields(), w, "p", n_buckets=1
+    hive_acid_insert(
+        spark, root, df, SCHEMA, _fields(), w, n_buckets=1,
+        partition_col="p",
     )
     led.commit(root, w)
     return led, root
@@ -356,16 +355,16 @@ def test_partitioned_identities_independent_across_partitions(
     deletes all three."""
     led, root = part_root
     w = led.allocate(root)
-    hive_acid_delete_partitioned(
-        spark, root, SCHEMA, _fields(), w, "p",
+    hive_acid_delete(
+        spark, root, SCHEMA, _fields(), w, partition_col="p",
         pred="p = 'X' AND k = 2",
         valid_writeids=led.valid_writeids(root),
     )
     led.commit(root, w)
     got = sorted(
         (r.k, r.p)
-        for r in read_hive_acid_partitioned(
-            spark, root, SCHEMA, "p",
+        for r in read_hive_acid(
+            spark, root, SCHEMA, partition_col="p",
             valid_writeids=led.valid_writeids(root),
         ).collect()
     )
@@ -382,8 +381,8 @@ def test_partition_pruning_is_structural(spark, part_root):
     (checked on the physical plan text — the decode sources are
     createDataFrame manifests of path strings)."""
     led, root = part_root
-    pruned = read_hive_acid_partitioned(
-        spark, root, SCHEMA, "p", partition_values=["Y"],
+    pruned = read_hive_acid(
+        spark, root, SCHEMA, partition_col="p", partition_values=["Y"],
         valid_writeids=led.valid_writeids(root),
     )
     assert {r.p for r in pruned.collect()} == {"Y"}
@@ -414,9 +413,9 @@ def test_partitioned_update_refuses_partition_column_set(
 ):
     led, root = part_root
     with pytest.raises(ValueError, match="partition column"):
-        hive_acid_update_partitioned(
-            spark, root, SCHEMA, _fields(), 9, "p",
-            [("p", "'Z'")],
+        hive_acid_update(
+            spark, root, SCHEMA, _fields(), 9,
+            [("p", "'Z'")], partition_col="p",
         )
 
 
@@ -430,8 +429,8 @@ def test_partitioned_null_value_roundtrips_default_partition(
         [(1, "A", 1.0, "X"), (2, "B", 2.0, None)], MM_DDL + ", p string"
     )
     w = led.allocate(root)
-    hive_acid_insert_partitioned(
-        spark, root, df, SCHEMA, _fields(), w, "p"
+    hive_acid_insert(
+        spark, root, df, SCHEMA, _fields(), w, partition_col="p"
     )
     led.commit(root, w)
     assert os.path.isdir(
@@ -439,8 +438,8 @@ def test_partitioned_null_value_roundtrips_default_partition(
     )
     got = {
         (r.k, r.p)
-        for r in read_hive_acid_partitioned(
-            spark, root, SCHEMA, "p",
+        for r in read_hive_acid(
+            spark, root, SCHEMA, partition_col="p",
             valid_writeids=led.valid_writeids(root),
         ).collect()
     }
@@ -650,6 +649,111 @@ def test_wire_unpartitioned_table_refuses_partition_clause(
         "SELECT 7 AS k, 'C' AS s, 7.0 AS pr",
     )
     assert out.startswith("ERR_ENDED:") and "not partitioned" in out, out
+
+
+#: the dirs the parity script leaves at a flat table's root: writeid 5
+#: (the duplicate-match MERGE) aborts and renames nothing
+_PARITY_FLAT_DIRS = [
+    "delete_delta_0000002_0000002",
+    "delete_delta_0000003_0000003",
+    "delete_delta_0000004_0000004",
+    "delete_delta_0000006_0000006_0000",
+    "delta_0000001_0000001",
+    "delta_0000002_0000002",
+    "delta_0000004_0000004",
+    "delta_0000006_0000006_0000",
+    "delta_0000006_0000006_0001",
+]
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_wire_dml_layout_parity(spark, tmp_path, layout):
+    """One wire script on a flat and a partitioned enrollment: an
+    unpartitioned table is a table with one implicit partition, so
+    every verb — INSERT, UPDATE, DELETE, a matched/not-matched MERGE,
+    a duplicate-match MERGE (cardinality abort) and a 2-statement
+    BEGIN…COMMIT — must leave the same rows either way. The flat
+    table's root keeps exactly the pinned dir names."""
+    from layer_apache_hive_spark.acid import TransactionCatalog
+    from layer_apache_hive_spark.txn import TxnSessionManager
+
+    part = layout == "partitioned"
+    led = HiveWriteIdLedger(str(tmp_path / "ledger.jsonl"))
+    mgr = TxnSessionManager(
+        spark, TransactionCatalog(str(tmp_path / "cat")),
+        publish=False, ledger=led,
+    )
+    root = str(tmp_path / "parity")
+    os.makedirs(root)
+    name = f"parity_{layout}"
+    mgr.enroll_hive_acid(
+        name, root, SCHEMA, _fields(), n_buckets=2,
+        partition_col="p" if part else None,
+    )
+    # the partition value rides LAST (dynamic-partition column rule):
+    # odd keys in 'X', even keys in 'Y'
+    def pv(expr):
+        return f", {expr}" if part else ""
+
+    x, y = "'X'", "'Y'"
+
+    spark.createDataFrame(
+        [(1, "S", 100.0, "X"), (9, "S", 90.0, "Y")], MM_DDL + ", sp string"
+    ).createOrReplaceTempView("parity_src")
+    spark.createDataFrame(
+        [(2, "S", 1.0, "Y"), (2, "S", 2.0, "Y")], MM_DDL + ", sp string"
+    ).createOrReplaceTempView("parity_dup")
+    script = [
+        (f"INSERT INTO {name} SELECT 1 AS k, 'A' AS s, 1.0 AS pr"
+         f"{pv(x)} UNION ALL "
+         f"SELECT 2, 'B', 2.0{pv(y)} UNION ALL "
+         f"SELECT 3, 'C', 3.0{pv(x)} UNION ALL "
+         f"SELECT 4, 'D', 4.0{pv(y)}",
+         "DONE:Committed writeid 1"),
+        (f"UPDATE {name} SET price = price + 10.0 WHERE k <= 2",
+         "DONE:Committed writeid 2"),
+        (f"DELETE FROM {name} WHERE k = 3", "DONE:Committed writeid 3"),
+        (f"MERGE INTO {name} t USING parity_src s ON t.k = s.k "
+         "WHEN MATCHED THEN UPDATE SET price = s.price "
+         "WHEN NOT MATCHED THEN INSERT VALUES "
+         f"(s.k, s.status, s.price{pv('s.sp')})",
+         "DONE:Committed writeid 4"),
+    ]
+    for sql, expect in script:
+        out = mgr.handle("s1", sql)
+        assert out.startswith(expect), (sql, out)
+    out = mgr.handle(
+        "s1",
+        f"MERGE INTO {name} t USING parity_dup s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET price = s.price",
+    )
+    assert out.startswith("ERR_ENDED:") and "cardinality" in out, out
+    assert "writeid 5 aborted" in out, out
+    assert led.aborted_ids(root) == frozenset({5})
+    assert mgr.handle("t1", "BEGIN").startswith("ACTIVE:")
+    for sql in (
+        f"UPDATE {name} SET price = price + 1.0 WHERE k = 4",
+        f"INSERT INTO {name} SELECT 7 AS k, 'G' AS s, 7.0 AS pr"
+        f"{pv(x)}",
+    ):
+        assert not mgr.handle("t1", sql).startswith("ERR"), sql
+    out = mgr.handle("t1", "COMMIT")
+    assert out.startswith("DONE:Committed 2 statements"), out
+    rows = read_hive_acid(
+        spark, root, SCHEMA, valid_writeids=led.valid_writeids(root),
+        partition_col="p" if part else None,
+    ).collect()
+    assert sorted((r.k, r.status, r.price) for r in rows) == [
+        (1, "A", 100.0), (2, "B", 12.0), (4, "D", 5.0),
+        (7, "G", 7.0), (9, "S", 90.0),
+    ]
+    if part:
+        assert sorted((r.k, r.p) for r in rows) == [
+            (1, "X"), (2, "Y"), (4, "Y"), (7, "X"), (9, "Y"),
+        ]
+    else:
+        visible = sorted(e for e in os.listdir(root) if e[0] not in "._")
+        assert visible == _PARITY_FLAT_DIRS
 
 
 # --- part 3: write-set conflicts (HIVE-13395) + real locks (r13 tasks 2+6) ---
