@@ -12,11 +12,28 @@ Public entry points:
     load_tables()        — register the testdata tables (catalog.py)
     all_queries()        — {query_id: callable(spark, sf_dir) -> DataFrame}
     all_oracles()        — {query_id: DuckDB-ANSI-SQL twin}
+
+The entry points load on first access (PEP 562), so importing the
+package imports no pyspark: ``python -m layer_apache_hive_spark.pyworker``
+must clean ``sys.path`` before pyspark is imported.
 """
 
-from layer_apache_hive_spark.session import get_spark
-from layer_apache_hive_spark.catalog import TABLES, load_tables
-from layer_apache_hive_spark.registry import all_queries, all_oracles
+import importlib
 
-__all__ = ["get_spark", "load_tables", "TABLES", "all_queries", "all_oracles"]
+_EXPORTS = {
+    "get_spark": "session",
+    "load_tables": "catalog",
+    "TABLES": "catalog",
+    "all_queries": "registry",
+    "all_oracles": "registry",
+}
+
+__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = importlib.import_module(f"{__name__}.{_EXPORTS[name]}")
+    return getattr(module, name)

@@ -44,6 +44,7 @@ import os
 from pyspark.sql import SparkSession
 
 from layer_apache_hive_spark.catalog import TABLES, table_path
+from layer_apache_hive_spark.session import WORKER_CONF
 
 DEFAULT_METASTORE_DIR = "/root/repo/.tmp/metastore"
 DEFAULT_HIVE_WAREHOUSE = "/root/repo/.tmp/hive_warehouse"
@@ -109,6 +110,7 @@ def hive_session(
         "spark.sql.shuffle.partitions": "32",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.ui.enabled": "false",
+        **WORKER_CONF,
     }
     merged.update(extra_conf)
     builder = (

@@ -19,6 +19,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory holding this package: the checkout, for a source tree.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Python workers fork from ``pyworker``'s daemon, which drops Spark's
+# bundled pyspark/py4j zips and the spark-core jar from their path (see
+# its docstring). PYTHONPATH lets the daemon import this package from
+# any working directory. Every session factory applies these.
+WORKER_CONF = {
+    "spark.python.daemon.module": "layer_apache_hive_spark.pyworker",
+    "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
+}
+
 
 def get_spark(
     app_name: str = "layer-apache-hive-spark",
@@ -67,6 +79,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # managed-table location (saveAsTable without explicit path);
         # kept under the gitignored scratch dir
-        .config("spark.sql.warehouse.dir", "/root/repo/.tmp/warehouse")
+        .config("spark.sql.warehouse.dir", os.path.join(PACKAGE_ROOT, ".tmp", "warehouse"))
     )
+    for key, value in WORKER_CONF.items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()
