@@ -40,8 +40,9 @@ from pyspark.sql import functions as F
 
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 
-TMP_ROOT = "/root/repo/.tmp"
+TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
 
 #: ACID operation codes (OrcRecordUpdater)
 _OP_INSERT, _OP_DELETE = 0, 2
@@ -416,6 +417,13 @@ import re as _re
 #: at the table root): 000000_0, 000001_0_copy_1, ...
 _ORIGINAL_RE = _re.compile(r"^(\d{6})_\d+(_copy_\d+)?$")
 
+
+def _bucket_of(path: str) -> int:
+    """Bucket id from a bucket file name: ``bucket_00003`` (an ACID
+    file) or ``000003_0_copy_1`` (an original) → 3."""
+    return int(os.path.basename(path).removeprefix("bucket_").split("_")[0])
+
+
 #: "unbounded" sentinel for the per-dir validity window (a long the
 #: decode tasks can compare against without nullability juggling)
 _MAX_WRITEID = (1 << 63) - 1
@@ -437,9 +445,9 @@ def _parse_acid_name(entry: str) -> tuple[str, int, int, int | None] | None:
 
     Returns ``(kind, lo, hi, stmt)`` with kind in {'base', 'delta',
     'delete_delta'} and stmt None when absent, or None for entries
-    outside the grammar (compactor scratch dirs, stray files — the
-    crash-recovery tolerance: a leftover .minor_scratch must never
-    break the election)."""
+    outside the grammar (scratch dirs, stray files — the
+    crash-recovery tolerance: a leftover scratch dir must never break
+    the election)."""
     if entry.startswith("base_"):
         kind, rest = "base", entry[len("base_"):]
     elif entry.startswith("delete_delta_"):
@@ -755,10 +763,11 @@ def read_hive_acid(
     partition_values=None,
 ) -> DataFrame:
     """AcidUtils directory election + distributed per-file Arrow
-    decode + the delete anti-join on (originalTransaction, bucket,
-    rowId) — the generalized core of scans.scan_hive_acid (round-7
-    verdict task 8), parameterized on the payload schema so it reads
-    BOTH the hand-built fixture and layouts export_hive_acid emits.
+    decode that drops deleted (originalTransaction, bucket, rowId)
+    triples inside the decoding task — the generalized core of
+    scans.scan_hive_acid (round-7 verdict task 8), parameterized on
+    the payload schema so it reads BOTH the hand-built fixture and
+    layouts export_hive_acid emits.
 
     ``partition_col`` None reads an unpartitioned table: ONE implicit
     partition whose directory is ``root``. Otherwise every first-level
@@ -776,9 +785,13 @@ def read_hive_acid(
     elected file count starves the session's parallelism
     (_decode_units: the post-compaction steady state at scale is one
     multi-GB base file per bucket, and stripes are Hive's own ACID
-    split granularity); delete deltas are tiny by nature →
-    broadcast anti-join, keyed on (partition, otid, bucket, rid)
-    because row identities are unique only WITHIN a partition dir.
+    split granularity). Delete events apply inside that same task,
+    Hive's way `[upstream: Hive ql/io/orc
+    VectorizedOrcAcidRowBatchReader delete-event registry]`: the task
+    decodes the delete files of its own partition and bucket (a
+    delete event lives in the bucket file of the row it deletes, and
+    row identities are unique only WITHIN a partition dir), once per
+    task, and drops the rows they name — no delete-side job, no join.
     ``keep_identity`` surfaces the row-id triple alongside the payload
     (the compactor needs it to PRESERVE identities — Hive's invariant
     that delete events committed after a compaction still find their
@@ -824,7 +837,10 @@ def read_hive_acid(
             if wanted is None or v in wanted
         ]
     data_units: list[tuple] = []  # (path, min_ctid, max_ctid, pval)
-    del_units: list[tuple] = []
+    # (pval, bucket) → [(path, min_ctid, max_ctid)]: the delete files
+    # a decode task of that partition's bucket loads (metadata-sized,
+    # shipped in the closure)
+    deletes_of: dict[tuple[str, int], list[tuple]] = {}
     orig_units: list[tuple] = []  # (path, rid_offset, pval)
     for pval, pdir in parts:
         data_dirs, delete_dirs, original_files, bounds = _elect_dirs(
@@ -835,11 +851,15 @@ def read_hive_acid(
         # are already in the base), max = the watermark for a
         # watermark-straddling one (events above are not yet visible)
         # — the per-event half of AcidUtils' ValidWriteIdList
-        for dirs, units in ((data_dirs, data_units), (delete_dirs, del_units)):
-            for d in dirs:
-                lo, hi = bounds.get(d, (0, _MAX_WRITEID))
-                for f in sorted(_glob.glob(os.path.join(d, "bucket_*"))):
-                    units.append((f, lo, hi, pval))
+        for d in data_dirs + delete_dirs:
+            lo, hi = bounds.get(d, (0, _MAX_WRITEID))
+            for f in sorted(_glob.glob(os.path.join(d, "bucket_*"))):
+                if d in data_dirs:
+                    data_units.append((f, lo, hi, pval))
+                else:
+                    deletes_of.setdefault((pval, _bucket_of(f)), []).append(
+                        (f, lo, hi)
+                    )
         # _copy_N: a bucket may hold SEVERAL original files (each
         # pre-conversion INSERT appended bucket_N_copy_M); Hive
         # synthesizes rowIds that CONTINUE across a bucket's files in
@@ -850,13 +870,11 @@ def read_hive_acid(
         # first compaction folds — and they are read driver-side: the
         # footers are metadata-sized, and a distributed footer job
         # would cost one more Spark job per read.
-        buckets = [
-            int(os.path.basename(p).split("_")[0]) for p in original_files
-        ]
+        buckets = [_bucket_of(p) for p in original_files]
         multi_copy = len(set(buckets)) != len(buckets)
         next_rid: dict[int, int] = {}
         for p in sorted(original_files, key=os.path.basename):
-            b = int(os.path.basename(p).split("_")[0])
+            b = _bucket_of(p)
             orig_units.append((p, next_rid.get(b, 0), pval))
             if multi_copy:
                 from pyarrow import orc as pa_orc
@@ -874,11 +892,37 @@ def read_hive_acid(
             keep &= ~ct.isin(invalid_list)
         return flat[keep]
 
+    def drop_deleted(frame, pval, bucket, deleted):
+        """``frame`` minus the rows that its partition's delete events
+        for ``bucket`` name by (otid, bucket, rid). ``deleted`` caches
+        each (pval, bucket)'s delete identities for the rest of the
+        task."""
+        import pandas as pd
+
+        key = (pval, bucket)
+        if key not in deletes_of or frame.empty:
+            return frame
+        if key not in deleted:
+            from pyarrow import orc as pa_orc
+
+            events = pd.concat(
+                _ctid_filter(pa_orc.ORCFile(path).read().to_pandas(), lo, hi)
+                for path, lo, hi in deletes_of[key]
+            )
+            deleted[key] = pd.MultiIndex.from_frame(
+                events[["originalTransaction", "bucket", "rowId"]]
+            )
+        ident = pd.MultiIndex.from_arrays(
+            [frame["otid"], frame["bucket"], frame["rid"]]
+        )
+        return frame[~ident.isin(deleted[key])]
+
     def read_data(it):
         import pandas as pd
         import pyarrow as pa
         from pyarrow import orc as pa_orc
 
+        deleted: dict = {}
         for pdf in it:
             for path, min_ctid, max_ctid, pval, stripe in zip(
                 pdf["path"],
@@ -903,91 +947,48 @@ def read_hive_acid(
                     out[n] = flat[f"row.{n}"]
                 frame = pd.DataFrame(out)
                 frame["__pval"] = pval
-                yield frame
-
-    def read_deletes(it):
-        import pandas as pd
-        from pyarrow import orc as pa_orc
-
-        for pdf in it:
-            for path, min_ctid, max_ctid, pval in zip(
-                pdf["path"], pdf["min_ctid"], pdf["max_ctid"], pdf["pval"]
-            ):
-                t = _ctid_filter(
-                    pa_orc.ORCFile(path).read().to_pandas(),
-                    min_ctid,
-                    max_ctid,
-                )
-                frame = pd.DataFrame(
-                    {
-                        "otid": t["originalTransaction"],
-                        "bucket": t["bucket"],
-                        "rid": t["rowId"],
-                    }
-                )
-                frame["__pval"] = pval
-                yield frame
+                yield drop_deleted(frame, pval, _bucket_of(path), deleted)
 
     def read_originals(it):
         import pandas as pd
         from pyarrow import orc as pa_orc
 
+        deleted: dict = {}
         for pdf in it:
             for path, off, pval in zip(
                 pdf["path"], pdf["rid_offset"], pdf["pval"]
             ):
                 t = pa_orc.ORCFile(path).read().to_pandas()
+                b = _bucket_of(path)
                 out = {
                     "otid": [0] * len(t),
-                    "bucket": [
-                        int(os.path.basename(path).split("_")[0])
-                    ]
-                    * len(t),
+                    "bucket": [b] * len(t),
                     "rid": list(range(off, off + len(t))),
                 }
                 for n in names:
                     out[n] = t[n]
                 frame = pd.DataFrame(out)
                 frame["__pval"] = pval
-                yield frame
+                yield drop_deleted(frame, pval, b, deleted)
 
     payload_ddl = ", ".join(f"{n} {t}" for n, t in payload_schema)
     acid_ddl = (
         f"otid long, bucket int, rid long, {payload_ddl}, __pval string"
     )
-    live = _manifest_frame(
+    merged = _manifest_frame(
         spark,
         _decode_units(data_units, spark.sparkContext.defaultParallelism),
         "path string, min_ctid long, max_ctid long, pval string, "
         "stripe int",
     ).mapInPandas(read_data, acid_ddl)
     if orig_units:
-        live = live.unionByName(
+        merged = merged.unionByName(
             _manifest_frame(
                 spark,
                 orig_units,
                 "path string, rid_offset long, pval string",
             ).mapInPandas(read_originals, acid_ddl)
         )
-    if del_units:
-        dels = _manifest_frame(
-            spark,
-            del_units,
-            "path string, min_ctid long, max_ctid long, pval string",
-        ).mapInPandas(
-            read_deletes,
-            "otid long, bucket int, rid long, __pval string",
-        )
-        merged = live.join(
-            F.broadcast(dels),
-            ["otid", "bucket", "rid", "__pval"],
-            "left_anti",
-        )
-    else:
-        # no delete_delta elected (pure-insert history / post-
-        # compaction steady state): skip the delete-side decode job
-        # and the anti-join outright (r13 optimization)
-        merged = live
     if partition_col is None:
         out = merged.drop("__pval")
     else:
@@ -1023,13 +1024,14 @@ def compact_hive_acid(
       the compacted base (test_hive_acid_export pins this with a
       post-watermark delete);
     * **the merge applies in-watermark delete events and drops
-      them** — the new base is the anti-joined survivor set, so the
+      them** — the new base is the read's survivor set, so the
       folded delete_delta dirs carry no information the base lacks.
 
     Scale: the fold is the election read (one Arrow decode task per
-    file, broadcast anti-join) plus one applyInPandas write task per
-    bucket — no shuffle beyond the per-bucket grouping, and the
-    driver only sees per-bucket manifest rows. Returns W.
+    file, which also drops that file's deleted rows) plus one
+    applyInPandas write task per bucket — no shuffle beyond the
+    per-bucket grouping, and the driver only sees per-bucket manifest
+    rows. Returns W.
 
     With ``valid_writeids``, aborted/open events are excluded from
     the fold — Hive's compactor removes aborted events permanently
@@ -1209,35 +1211,21 @@ def minor_compact_hive_acid(
     meta_ddl = (
         "__op int, __otid long, __bucket int, __rid long, __ctid long"
     )
-    if deltas:
-        ins = paths_df(deltas).mapInPandas(
+    # both kinds in ONE write job; with no delta to merge, the insert
+    # side is empty and the writer removes its dir again
+    _write_version_dirs(
+        paths_df(deltas).mapInPandas(
             read_raw_inserts, f"{meta_ddl}, {payload_ddl}"
-        )
-        _write_version_dirs(
-            ins,
-            None,
-            os.path.join(root, f"delta_{lo:07d}_{hi:07d}{vsuffix}"),
-            None,
-            payload_fields,
-        )
-    if delete_dirs:
-        dels = paths_df(delete_dirs).mapInPandas(read_raw_deletes, meta_ddl)
-        empty = (
-            spark.createDataFrame([], f"{meta_ddl}, {payload_ddl}")
-            if not deltas
-            else ins.limit(0)
-        )
-        scratch = os.path.join(root, ".minor_scratch")
-        _write_version_dirs(
-            empty,
-            dels,
-            scratch,
-            os.path.join(
-                root, f"delete_delta_{lo:07d}_{hi:07d}{vsuffix}"
-            ),
-            payload_fields,
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
+        ),
+        paths_df(delete_dirs).mapInPandas(read_raw_deletes, meta_ddl)
+        if delete_dirs
+        else None,
+        os.path.join(root, f"delta_{lo:07d}_{hi:07d}{vsuffix}"),
+        os.path.join(root, f"delete_delta_{lo:07d}_{hi:07d}{vsuffix}")
+        if delete_dirs
+        else None,
+        payload_fields,
+    )
     return lo, hi
 
 

@@ -27,8 +27,9 @@ from pyspark.sql import types as T
 
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 
-TMP_ROOT = "/root/repo/.tmp"
+TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
 
 
 def _fixture_dir(sf_dir: str, kind: str) -> str:
@@ -904,12 +905,13 @@ def scan_hive_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
     pyarrow.orc (PROBE_hive_acid.json: Spark's own ORC source crashes
     on ACID-schema files — its AcidUtils column remap feeds the batch
     reader an empty mapping — while Arrow reads them verbatim), and
-    deletes anti-join on Hive's row identity triple
-    (originalTransaction, bucket, rowId).
+    each decode task drops the rows its bucket's delete events name by
+    Hive's row identity triple (originalTransaction, bucket, rowId).
 
     Scale: one task per ORC file (a 100 TB ACID table is many
-    thousands of bucket files), delete deltas are tiny by nature →
-    broadcast anti-join; nothing corpus-sized ever sits on the
+    thousands of bucket files), and each task loads only its own
+    bucket's delete events, which are tiny by nature — one Spark job
+    per read, no join; nothing corpus-sized ever sits on the
     driver (the listing is dir entries, not rows). The oracle replays
     the fixture's change algebra over the orders view, so a missed
     delete, double-applied delta, or mis-parsed writeid breaks the

@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.functions.numeric import sql_dsum
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 
-TMP_ROOT = "/root/repo/.tmp"
+TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
 
 
 def _sink_dir(sf_dir: str, kind: str) -> str:
