@@ -18,7 +18,7 @@ import time
 
 from layer_apache_hive_spark.catalog import TABLES, read_table
 from layer_apache_hive_spark.registry import all_queries
-from layer_apache_hive_spark.session import get_spark
+from layer_apache_hive_spark.session import PACKAGE_ROOT, TMP_ROOT, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -137,14 +137,14 @@ def main() -> None:
     # same schema, `queries` trimmed to the top-10 slowest — small
     # enough to always survive the tail capture.
     if not only:
-        map_path = "/root/repo/BENCH_local.json"
+        map_path = os.path.join(PACKAGE_ROOT, "BENCH_local.json")
     else:
         # subset runs keep their full map too (a targeted-subset run
         # exists to read per-query timings, and the compact stdout
         # line only carries the 10 slowest) — under .tmp, never
         # clobbering the committed full-registry map
-        os.makedirs("/root/repo/.tmp", exist_ok=True)
-        map_path = "/root/repo/.tmp/BENCH_only.json"
+        os.makedirs(TMP_ROOT, exist_ok=True)
+        map_path = os.path.join(TMP_ROOT, "BENCH_only.json")
     with open(map_path, "w") as fh:
         json.dump(payload, fh, indent=2, sort_keys=True)
         fh.write("\n")
@@ -157,7 +157,7 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "sf": _sf_label(SF_DIR),
-        "full_map": map_path.removeprefix("/root/repo/"),
+        "full_map": os.path.relpath(map_path, PACKAGE_ROOT),
         "queries": top10,
     }
     print(json.dumps(compact))

@@ -37,9 +37,11 @@ import subprocess
 
 import pyspark
 
+from layer_apache_hive_spark.session import TMP_ROOT
+
 AUTH_CLASS = "sparkgraft.SparkGraftPasswdAuth"
 CREDENTIALS_ENV = "SPARK_GRAFT_HS2_CREDENTIALS"
-DEFAULT_CLASSES_DIR = "/root/repo/.tmp/hs2_auth_classes"
+DEFAULT_CLASSES_DIR = os.path.join(TMP_ROOT, "hs2_auth_classes")
 
 _JAVA_SOURCE = """
 package sparkgraft;

@@ -90,6 +90,8 @@ import subprocess
 
 import pyspark
 
+from layer_apache_hive_spark.session import TMP_ROOT
+
 AUTHZ_CLASS = "sparkgraft.SparkGraftAuthz"
 ACL_ENV = "SPARK_GRAFT_HS2_ACL"
 #: file-backed policy store: same format, re-read per statement, so
@@ -97,7 +99,7 @@ ACL_ENV = "SPARK_GRAFT_HS2_ACL"
 #: ACL_ENV when both are set; an EMPTY configured file means zero
 #: grants (default-deny), not "open".
 ACL_FILE_ENV = "SPARK_GRAFT_HS2_ACL_FILE"
-DEFAULT_CLASSES_DIR = "/root/repo/.tmp/hs2_authz_classes"
+DEFAULT_CLASSES_DIR = os.path.join(TMP_ROOT, "hs2_authz_classes")
 
 _JAVA_SOURCE = """
 package sparkgraft;

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import TMP_ROOT
 
 _TAU = 0.3  # Jaccard threshold (probed: 25 true pairs at sf0.01)
 
@@ -114,7 +115,7 @@ def _build_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     import pandas as pd
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    idx_dir = f"/root/repo/.tmp/shingle_index/{label}"
+    idx_dir = f"{TMP_ROOT}/shingle_index/{label}"
     src_stat = os.stat(f"{sf_dir}/documents.parquet")
     tag = f"v3-md5-60bit-tau{_TAU}:{src_stat.st_mtime_ns}:{src_stat.st_size}"
     meta = f"{idx_dir}/_INDEX_TAG"

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.functions.numeric import davg, dsum, sql_davg, sql_dsum
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import TMP_ROOT
 
 _STOPWORDS = ["a", "the", "of", "and", "or", "in", "on", "to", "is"]
 
@@ -788,7 +789,7 @@ def ext_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out_dir = f"/root/repo/.tmp/shard_export/{label}"
+    out_dir = f"{TMP_ROOT}/shard_export/{label}"
     d = read_table(spark, sf_dir, "documents")
     shard = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 9, 8), 16, 10)

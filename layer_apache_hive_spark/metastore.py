@@ -44,10 +44,10 @@ import os
 from pyspark.sql import SparkSession
 
 from layer_apache_hive_spark.catalog import TABLES, table_path
-from layer_apache_hive_spark.session import WORKER_CONF
+from layer_apache_hive_spark.session import TMP_ROOT, WORKER_CONF
 
-DEFAULT_METASTORE_DIR = "/root/repo/.tmp/metastore"
-DEFAULT_HIVE_WAREHOUSE = "/root/repo/.tmp/hive_warehouse"
+DEFAULT_METASTORE_DIR = os.path.join(TMP_ROOT, "metastore")
+DEFAULT_HIVE_WAREHOUSE = os.path.join(TMP_ROOT, "hive_warehouse")
 
 
 def corpus_db(sf_dir: str) -> str:

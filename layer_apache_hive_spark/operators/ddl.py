@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import TMP_ROOT
 
 
 @register(
@@ -63,7 +64,7 @@ def ddl_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # partitioned table + recover-partitions (MSCK analog)
     region = read_table(spark, sf_dir, "region")
-    path = f"/root/repo/.tmp/ddl/{label}/region_part"
+    path = f"{TMP_ROOT}/ddl/{label}/region_part"
     region.write.mode("overwrite").partitionBy("r_regionkey").parquet(path)
     spark.sql(
         f"CREATE TABLE {db}.region_part (r_name STRING, r_comment STRING) "
@@ -252,7 +253,7 @@ def ddl_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from layer_apache_hive_spark.functions.numeric import dsum
 
     label = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    root = f"/root/repo/.tmp/acid_history/{label}"
+    root = f"{TMP_ROOT}/acid_history/{label}"
     shutil.rmtree(root, ignore_errors=True)  # reseed: idempotent per run
     vt = VersionedTable(root)
     base = read_table(spark, sf_dir, "supplier").select(
@@ -326,7 +327,7 @@ def ddl_export_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    exp_dir = f"/root/repo/.tmp/export/{label}/supplier"
+    exp_dir = f"{TMP_ROOT}/export/{label}/supplier"
     st = os.stat(f"{sf_dir}/supplier.parquet")
     tag = f"export:{st.st_mtime_ns}:{st.st_size}"
     desc_path = f"{exp_dir}/_metadata.json"
@@ -452,7 +453,7 @@ def ddl_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
     enforce(clean, cons).write.mode("overwrite").parquet(
-        f"/root/repo/.tmp/constraints/{label}/orders_clean"
+        f"{TMP_ROOT}/constraints/{label}/orders_clean"
     )
     return violation_counts(batch, cons)
 

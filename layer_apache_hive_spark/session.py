@@ -21,6 +21,8 @@ from pyspark.sql import SparkSession
 
 # The directory holding this package: the checkout, for a source tree.
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Scratch space for fixtures, sinks and compiled classes (gitignored).
+TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
 
 # Python workers fork from ``pyworker``'s daemon, which drops Spark's
 # bundled pyspark/py4j zips and the spark-core jar from their path (see

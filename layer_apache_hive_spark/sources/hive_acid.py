@@ -40,9 +40,7 @@ from pyspark.sql import functions as F
 
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.registry import register
-from layer_apache_hive_spark.session import PACKAGE_ROOT
-
-TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
+from layer_apache_hive_spark.session import TMP_ROOT
 
 #: ACID operation codes (OrcRecordUpdater)
 _OP_INSERT, _OP_DELETE = 0, 2
@@ -80,67 +78,28 @@ def _write_version_dirs(
     delete_dir: str | None,
     payload_fields,
 ) -> None:
-    """Emit one writeid's directories in ONE job: the insert events
-    and (when present) the delete events union into a single frame
-    flagged by ``__del``, and one applyInPandas task per
-    (kind, bucket) group writes ``<dir>/bucket_NNNNN`` via
-    pyarrow.orc (PROBE_hive_acid.json: Spark's own ORC writer cannot
-    produce the ACID struct layout — transactional DDL through the
-    hive jars writes FLAT directories). Insert files sort by rowId,
-    delete files by (originalTransaction, rowId) — the sorted-run
-    contract Hive's merger relies on. Empty dirs are removed again
-    (AcidUtils tolerates them, Hive never emits them)."""
-    os.makedirs(data_dir, exist_ok=True)
-    names = [n for n, _ in payload_fields]
-    if dels is None:
-        unioned = events.withColumn("__del", F.lit(False))
-    else:
-        os.makedirs(delete_dir, exist_ok=True)
-        types = dict(events.dtypes)
-        meta = ["__op", "__otid", "__bucket", "__rid", "__ctid"]
-        unioned = events.select(
-            *meta, *names, F.lit(False).alias("__del")
-        ).unionByName(
-            dels.select(
-                *meta,
-                *[
-                    F.lit(None).cast(types[n]).alias(n)
-                    for n in names
-                ],
-                F.lit(True).alias("__del"),
-            )
-        )
+    """Emit one writeid's insert (and, when given, delete) events into
+    ``data_dir`` / ``delete_dir`` in ONE job: the one-job writer over a
+    table with one implicit partition (``__pkey`` ''), writing the dirs
+    in place (scratch dir = final dir). Dirs of a kind with no rows are
+    never created (AcidUtils tolerates empty dirs, Hive never emits
+    them)."""
+    types = dict(events.dtypes)
+    dirs = {False: data_dir, True: delete_dir}
 
-    def write_one(key, pdf):
-        import pandas as pd
-        from pyarrow import orc as pa_orc
+    def in_place(_pkey, is_del):
+        return dirs[is_del]
 
-        is_del, b = bool(key[0]), int(key[1])
-        # insert runs sort by (originalTransaction, rowId): within a
-        # single-writeid delta that equals the rowId order, and a
-        # COMPACTED base (mixed otids, compact_hive_acid) keeps the
-        # sorted-run contract Hive's merger expects
-        pdf = pdf.sort_values(["__otid", "__rid"])
-        pa_orc.write_table(
-            _acid_arrow_table(pdf, payload_fields, is_del),
-            os.path.join(
-                delete_dir if is_del else data_dir, f"bucket_{b:05d}"
-            ),
-        )
-        return pd.DataFrame(
-            {"is_del": [is_del], "bucket": [b], "rows": [len(pdf)]}
-        )
-
-    manifest = (
-        unioned.groupBy("__del", "__bucket")
-        .applyInPandas(write_one, "is_del boolean, bucket int, rows long")
-        .collect()
+    _write_acid_dirs_one_job(
+        _union_insert_delete(
+            events.withColumn("__pkey", F.lit("")),
+            None if dels is None else dels.withColumn("__pkey", F.lit("")),
+            [(n, types[n]) for n, _ in payload_fields],
+        ),
+        in_place,
+        in_place,
+        payload_fields,
     )
-    for is_del, d in ((False, data_dir), (True, delete_dir)):
-        if d is not None and not any(
-            r["rows"] and r["is_del"] == is_del for r in manifest
-        ):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def _guard_rows(

@@ -27,9 +27,7 @@ from pyspark.sql import types as T
 
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.registry import register
-from layer_apache_hive_spark.session import PACKAGE_ROOT
-
-TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
+from layer_apache_hive_spark.session import PACKAGE_ROOT, TMP_ROOT
 
 
 def _fixture_dir(sf_dir: str, kind: str) -> str:
@@ -207,7 +205,9 @@ def _hive_serde_roundtrip(sf_dir: str, fmt: str) -> str:
         subprocess.run(
             [
                 sys.executable,
-                "/root/repo/scripts/build_rcfile_fixture.py",
+                os.path.join(
+                    PACKAGE_ROOT, "scripts", "build_rcfile_fixture.py"
+                ),
                 sf_dir,
                 fixture,
                 fmt,

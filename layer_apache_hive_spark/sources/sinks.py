@@ -23,9 +23,7 @@ from pyspark.sql import functions as F
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.functions.numeric import sql_dsum
 from layer_apache_hive_spark.registry import register
-from layer_apache_hive_spark.session import PACKAGE_ROOT
-
-TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
+from layer_apache_hive_spark.session import TMP_ROOT
 
 
 def _sink_dir(sf_dir: str, kind: str) -> str:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from layer_apache_hive_spark.catalog import read_table
 from layer_apache_hive_spark.functions.numeric import dsum, sql_dsum
 from layer_apache_hive_spark.registry import register
+from layer_apache_hive_spark.session import TMP_ROOT
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _SQL_TS_FMT = "%Y-%m-%d %H:%M:%S"
@@ -193,7 +194,7 @@ def _stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over a .tmp copy of events.parquet (file source needs
     a directory it can list; /root/testdata stays untouched)."""
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    src_dir = f"/root/repo/.tmp/stream_src/{label}"
+    src_dir = f"{TMP_ROOT}/stream_src/{label}"
     if not glob.glob(f"{src_dir}/*.parquet"):
         os.makedirs(src_dir, exist_ok=True)
         src = f"{sf_dir}/events.parquet"
@@ -460,7 +461,7 @@ def _stream_source_parts(spark: SparkSession, sf_dir: str, n_parts: int = 2) -> 
     per file) so watermark semantics are observable: the watermark
     advances between batches, not within one."""
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    src_dir = f"/root/repo/.tmp/stream_src_parts/{label}"
+    src_dir = f"{TMP_ROOT}/stream_src_parts/{label}"
     _pin_stream_confs(spark)
     if not glob.glob(f"{src_dir}/*.parquet"):
         spark.read.parquet(f"{sf_dir}/events.parquet").repartition(
@@ -551,7 +552,7 @@ def _stream_source_tsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check. (evt_watermark_late deliberately keeps the
     round-robin split: its point is late data.)"""
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    src_dir = f"/root/repo/.tmp/stream_src_tsplit/{label}"
+    src_dir = f"{TMP_ROOT}/stream_src_tsplit/{label}"
     _pin_stream_confs(spark)
     # keyed on source identity: a regenerated events.parquet must
     # invalidate the split, not feed a stale stream into the oracle
@@ -1002,7 +1003,7 @@ def evt_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     one IS value-checked against the batch oracle.
     """
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out_dir = f"/root/repo/.tmp/stream_fb/{label}"
+    out_dir = f"{TMP_ROOT}/stream_fb/{label}"
     shutil.rmtree(out_dir, ignore_errors=True)
 
     src = _stream_source(spark, sf_dir)
@@ -2317,7 +2318,7 @@ def evt_stream_acid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from layer_apache_hive_spark.acid import CommitConflict, VersionedTable
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = f"/root/repo/.tmp/stream_acid/{label}"
+    root = f"{TMP_ROOT}/stream_acid/{label}"
     shutil.rmtree(root, ignore_errors=True)  # reseed: idempotent per run
     vt = VersionedTable(root)
 
@@ -2357,7 +2358,7 @@ def evt_stream_acid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at-least-once delivery simulated: replay batch 0 after success —
     # the guard must drop it without writing a third version
     commit_batch(_normalize_ts(spark.read.parquet(
-        f"/root/repo/.tmp/stream_src_parts/{label}")), 0)
+        f"{TMP_ROOT}/stream_src_parts/{label}")), 0)
 
     head = vt.current_version()
     return (
@@ -2427,7 +2428,7 @@ def evt_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from layer_apache_hive_spark.acid import VersionedTable
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = f"/root/repo/.tmp/stream_cdc/{label}"
+    root = f"{TMP_ROOT}/stream_cdc/{label}"
     shutil.rmtree(root, ignore_errors=True)  # reseed: idempotent per run
     src_dir = os.path.join(root, "src")
     os.makedirs(src_dir, exist_ok=True)
@@ -2782,7 +2783,7 @@ def evt_stream_hive_acid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = f"/root/repo/.tmp/stream_hive_acid/{label}"
+    root = f"{TMP_ROOT}/stream_hive_acid/{label}"
     shutil.rmtree(root, ignore_errors=True)  # reseed: idempotent per run
     os.makedirs(root, exist_ok=True)
     payload = ["event_id", "event_type", "value"]
@@ -2825,7 +2826,7 @@ def evt_stream_hive_acid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_batch(
         _normalize_ts(
             spark.read.parquet(
-                f"/root/repo/.tmp/stream_src_parts/{label}"
+                f"{TMP_ROOT}/stream_src_parts/{label}"
             )
         ),
         0,
@@ -2898,7 +2899,7 @@ def evt_stream_hive_mm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     label = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = f"/root/repo/.tmp/stream_hive_mm/{label}"
+    root = f"{TMP_ROOT}/stream_hive_mm/{label}"
     shutil.rmtree(root, ignore_errors=True)  # reseed: idempotent per run
     os.makedirs(root, exist_ok=True)
     payload = ["event_id", "event_type", "value"]
@@ -2927,7 +2928,7 @@ def evt_stream_hive_mm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_batch(
         _normalize_ts(
             spark.read.parquet(
-                f"/root/repo/.tmp/stream_src_parts/{label}"
+                f"{TMP_ROOT}/stream_src_parts/{label}"
             )
         ),
         0,

@@ -36,6 +36,23 @@ Mechanics — all public Spark extension points, no internals patched:
   transaction granularity). ROLLBACK just drops the buffer; a
   connection that disconnects mid-transaction implicitly rolls back
   (its buffer is keyed by the dead parser's UUID and never commits).
+* DML is parsed by **Spark's own SQL parser** (a fresh
+  ``SparkSqlParser``, never the session's parser: that is this
+  interceptor). ``TxnSessionManager._parse_dml`` walks the resulting
+  ``InsertIntoStatement`` / ``UpdateTable`` / ``DeleteFromTable`` /
+  ``MergeIntoTable`` plan, and each piece of the op tuple (INSERT
+  body, SET value, predicate, MERGE source and clauses) is the
+  statement's own text of that parse subtree, taken from the origins
+  the parser stamps on every node. A piece must re-parse to the same
+  tree, so keywords inside literals, comments and nested subqueries
+  cannot mis-split a statement: a piece whose text cannot be isolated
+  is refused (``ERR_*``, nothing written), never run as a guess.
+  Hive's positional ``WHEN NOT MATCHED THEN INSERT VALUES (…)`` is not
+  Spark SQL; the parser's error position on ``VALUES`` is where the
+  target's enrolled column list is spliced in before parsing again.
+  Regexes remain only for statements Spark cannot parse or that are
+  not DML: BEGIN/COMMIT/ROLLBACK, SHOW COMPACTIONS/TRANSACTIONS/LOCKS,
+  ABORT TRANSACTIONS, ALTER TABLE … COMPACT and GRANT/REVOKE.
 
 Semantics (documented contract):
 
@@ -81,6 +98,7 @@ import subprocess
 import threading
 
 import pyspark
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,10 +107,11 @@ from layer_apache_hive_spark.acid import (
     TransactionCatalog,
     publish_to_catalog,
 )
+from layer_apache_hive_spark.session import TMP_ROOT
 from layer_apache_hive_spark.sources.hive_acid import HiveWriteIdLedger
 
 TXN_CLASS = "sparkgraft.SparkGraftTxn"
-DEFAULT_CLASSES_DIR = "/root/repo/.tmp/hs2_txn_classes"
+DEFAULT_CLASSES_DIR = os.path.join(TMP_ROOT, "hs2_txn_classes")
 
 _HANDLER_JAVA = """
 package sparkgraft;
@@ -358,54 +377,182 @@ def txn_session_conf(
     return conf
 
 
-# --- statement grammar (the Hive ACID multi-statement txn surface) ---------
+# --- wire DML front end: Spark's own parser --------------------------------
+
+#: Spark's parser plus the piece texts of a parsed DML statement,
+#: compiled in the driver JVM by Janino (Spark's codegen compiler), so
+#: a piece costs one bridge call. ``parse`` splices ``insertColumns``
+#: (when given) at a syntax error sitting on ``VALUES`` and parses
+#: again (``_parse_dml``). ``text`` slices the statement from the
+#: smallest start to the largest stop over the located origins in the
+#: node's subtree — expressions, subquery plans and plan children. An
+#: origin locates a node only when it belongs to this statement text
+#: and does not start at its first token: nodes stamped with the whole
+#: statement, and shared singletons such as the boolean literals, carry
+#: no position. An EXISTS is spelled around its query's text, an
+#: unlocated literal from its value. The text is returned only if it is
+#: non-empty and re-parses to the same tree (expression ids masked;
+#: literal types and subquery plans compared too); null means the piece
+#: cannot be isolated. A ``None`` Option yields "".
+_DML_TEXT_JAVA = r"""
+package sparkgraft;
+
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation;
+import org.apache.spark.sql.catalyst.expressions.*;
+import org.apache.spark.sql.catalyst.parser.ParseException;
+import org.apache.spark.sql.catalyst.plans.QueryPlan;
+import org.apache.spark.sql.catalyst.plans.logical.*;
+import org.apache.spark.sql.catalyst.trees.*;
+import org.apache.spark.sql.execution.SparkSqlParser;
+import scala.Option;
+import scala.collection.Iterator;
+
+public class DmlText {
+  private static final SparkSqlParser P = new SparkSqlParser();
+
+  public LogicalPlan parse(String sql, String insertColumns)
+      throws Exception {
+    try {
+      return P.parsePlan(sql);
+    } catch (Exception ex) {
+      if (!(ex instanceof ParseException) || insertColumns == null) throw ex;
+      Origin at = ((ParseException) ex).start();
+      if (at.line().isEmpty()) throw ex;
+      int pos = 0;
+      for (int i = 1; i < ((Integer) at.line().get()).intValue(); i++) {
+        pos = sql.indexOf('\n', pos) + 1;
+      }
+      pos += ((Integer) at.startPosition().get()).intValue();
+      if (!sql.regionMatches(true, pos, "VALUES", 0, 6)) throw ex;
+      return P.parsePlan(
+          sql.substring(0, pos) + insertColumns + " " + sql.substring(pos));
+    }
+  }
+
+  public String text(LogicalPlan stmt, Object piece) {
+    Option opt =
+        piece instanceof Option ? (Option) piece : Option.apply(piece);
+    if (opt.isEmpty()) return "";
+    TreeNode node = (TreeNode) opt.get();
+    String text;
+    if (node instanceof Exists) {
+      text = text(stmt, ((Exists) node).plan());
+      text = text == null ? null : "EXISTS (" + text + ")";
+    } else {
+      String sql = (String) stmt.origin().sqlText().get();
+      int[] span = {Integer.MAX_VALUE, -1, start(stmt.origin())};
+      visit(node, sql, span, null);
+      text = span[1] >= span[0] ? sql.substring(span[0], span[1] + 1).trim()
+          : node instanceof Literal ? ((Literal) node).sql() : null;
+    }
+    if (text == null || text.isEmpty()) return null;
+    try {
+      TreeNode again = node instanceof UnresolvedRelation
+          ? ((Project) P.parsePlan("SELECT * FROM " + text)).child()
+          : node instanceof LogicalPlan
+          ? (TreeNode) P.parsePlan(text) : P.parseExpression(text);
+      return signature(again).equals(signature(node)) ? text : null;
+    } catch (Exception e) {
+      return null;
+    }
+  }
+
+  private static int start(Origin o) {
+    return o.startIndex().isDefined()
+        ? ((Integer) o.startIndex().get()).intValue() : -1;
+  }
+
+  private static String signature(TreeNode node) {
+    StringBuilder lits = new StringBuilder(node.treeString());
+    visit(node, null, null, lits);
+    return lits.toString().replaceAll("#\\d+", "#");
+  }
+
+  private static void visit(
+      TreeNode n, String sql, int[] span, StringBuilder lits) {
+    Origin o = n.origin();
+    if (span != null && start(o) >= 0 && start(o) != span[2]
+        && o.stopIndex().isDefined() && o.sqlText().isDefined()
+        && sql.equals(o.sqlText().get())) {
+      span[0] = Math.min(span[0], start(o));
+      span[1] = Math.max(span[1], ((Integer) o.stopIndex().get()).intValue());
+    }
+    if (lits != null && n instanceof Literal) {
+      lits.append((char) 0).append(((Literal) n).sql());
+    }
+    if (n instanceof PlanExpression) {
+      visit((TreeNode) ((PlanExpression) n).plan(), sql, span, lits);
+    }
+    if (n instanceof QueryPlan) {
+      visitAll(((QueryPlan) n).expressions().iterator(), sql, span, lits);
+    }
+    visitAll(n.children().iterator(), sql, span, lits);
+  }
+
+  private static void visitAll(
+      Iterator it, String sql, int[] span, StringBuilder lits) {
+    while (it.hasNext()) visit((TreeNode) it.next(), sql, span, lits);
+  }
+}
+"""
+
+def _dml_text(spark: SparkSession):
+    """The driver JVM's ``sparkgraft.DmlText`` instance, compiled on
+    first use and kept on the py4j gateway (one per JVM)."""
+    gateway = spark.sparkContext._gateway
+    if "_sparkgraft_dml_text" not in vars(gateway):
+        jvm = spark._jvm
+        compiler = jvm.org.codehaus.janino.SimpleCompiler()
+        compiler.setParentClassLoader(
+            jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+        )
+        compiler.cook(_DML_TEXT_JAVA)
+        gateway._sparkgraft_dml_text = (
+            compiler.getClassLoader().loadClass("sparkgraft.DmlText")
+        ).newInstance()
+    return gateway._sparkgraft_dml_text
+
+
+def _columns(ent: dict) -> list[str]:
+    """An enrollment's columns: payload, then the partition column."""
+    pc = ent["partition_col"]
+    return [n for n, _ in ent["schema"]] + ([pc] if pc else [])
+
+
+def _seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _alias_of(node):
+    """(alias or None, relation) of a possibly aliased relation."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.alias(), node.child()
+    return None, node
+
+
+def _partition_spec(spec) -> tuple[str, str | None] | None:
+    """Spark's parsed PARTITION spec (col → Option[value]) → (col,
+    value) static, (col, None) dynamic, None without a clause. Single
+    partition column only (the enrollment surface)."""
+    if spec.isEmpty():
+        return None
+    if spec.size() > 1:
+        raise ValueError(f"PARTITION {spec.toString()}: one column only")
+    col, val = spec.head()._1(), spec.head()._2()
+    return col.lower(), val.get() if val.isDefined() else None
+
+
+# --- statements Spark cannot parse or that are not DML (regex) ------------
 
 _BEGIN_RE = re.compile(
     r"(?is)^\s*(?:BEGIN|START\s+TRANSACTION|BEGIN\s+TRANSACTION)\s*;?\s*$"
 )
 _COMMIT_RE = re.compile(r"(?is)^\s*COMMIT(?:\s+WORK)?\s*;?\s*$")
 _ROLLBACK_RE = re.compile(r"(?is)^\s*ROLLBACK(?:\s+WORK)?\s*;?\s*$")
-_INSERT_RE = re.compile(
-    r"(?is)^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-    r"(?P<name>[\w.`]+)"
-    r"(?:\s+PARTITION\s*\(\s*(?P<part>[^)]*?)\s*\))?"
-    r"\s+(?P<body>.+?)\s*;?\s*$"
-)
-# one PARTITION spec entry: `col='v'` (static) or bare `col` (dynamic)
-_PARTITION_SPEC_RE = re.compile(
-    r"(?is)^\s*(?P<col>[\w`]+)\s*"
-    r"(?:=\s*(?P<val>'[^']*'|\"[^\"]*\"|[^\s,()]+))?\s*$"
-)
-_DELETE_RE = re.compile(
-    r"(?is)^\s*DELETE\s+FROM\s+(?P<name>[\w.`]+)"
-    r"(?:\s+WHERE\s+(?P<pred>.+?))?\s*;?\s*$"
-)
-_UPDATE_RE = re.compile(
-    r"(?is)^\s*UPDATE\s+(?P<name>[\w.`]+)\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<pred>.+?))?\s*;?\s*$"
-)
 _ALTER_COMPACT_RE = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>[\w.`]+)"
     r"(?:\s+PARTITION\s*\(\s*(?P<part>[^)]*?)\s*\))?"
     r"\s+COMPACT\s+'(?P<kind>\w+)'\s*;?\s*$"
-)
-_MERGE_RE = re.compile(
-    r"(?is)^\s*MERGE\s+INTO\s+(?P<name>[\w.`]+)"
-    r"(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
-    r"\s+USING\s+(?P<src>\(.+?\)|[\w.`]+)"
-    r"(?:\s+(?:AS\s+)?(?P<salias>\w+))?"
-    r"\s+ON\s+(?P<cond>.+?)"
-    r"(?P<clauses>\s+WHEN\s+.+?)\s*;?\s*$"
-)
-_MERGE_WHEN_RE = re.compile(
-    r"(?is)WHEN\s+(?P<not_>NOT\s+)?MATCHED"
-    r"(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?P<action>UPDATE\s+SET\s+.+?|DELETE|INSERT\s+.+?)"
-    r"(?=\s+WHEN\s+|\s*$)"
-)
-_MERGE_INSERT_RE = re.compile(
-    r"(?is)^INSERT\s+(?:\(\s*(?P<cols>[\w`\s,]+?)\s*\)\s+)?"
-    r"VALUES\s*\(\s*(?P<vals>.+?)\s*\)\s*$"
 )
 _SHOW_COMPACTIONS_STMT_RE = re.compile(
     r"(?is)^\s*SHOW\s+COMPACTIONS\s*;?\s*$"
@@ -461,39 +608,6 @@ def _bare_name(name: str) -> str:
     """Catalog key of a possibly db-qualified, possibly backticked
     table reference (the TransactionCatalog keys on bare names)."""
     return name.replace("`", "").split(".")[-1].lower()
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` outside parens/quotes (UPDATE set-lists can
-    contain function calls and string literals with commas)."""
-    out, depth, quote, cur = [], 0, None, []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if quote:
-            cur.append(c)
-            if c == quote and not (i + 1 < len(s) and s[i + 1] == quote):
-                quote = None
-            elif c == quote:  # doubled quote inside literal
-                cur.append(s[i + 1])
-                i += 1
-        elif c in "'\"":
-            quote = c
-            cur.append(c)
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif c == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    out.append("".join(cur))
-    return [p.strip() for p in out if p.strip()]
 
 
 def _sanitize(msg: str) -> str:
@@ -756,18 +870,17 @@ class TxnSessionManager:
             # transaction (Hive's default posture — every DML runs in
             # its own txn); anything else passes to the delegate
             try:
-                parsed = self._parse_dml(sql_text)
+                parsed = self._parse_dml(sql_text, acid_only=True)
             except ValueError as e:
-                # the statement matched a DML grammar head but its
-                # body did not parse (malformed SET list, unsupported
-                # MERGE clause): OURS to refuse — passing it through
+                # DML against an enrolled table that Spark's parser
+                # rejects, or that this surface cannot run as written
+                # (unsupported MERGE clause, a piece whose text cannot
+                # be isolated): OURS to refuse — passing it through
                 # would run against the served VIEW (r12 advisor: the
                 # silently-truncated MERGE previously committed here)
                 return f"ERR_ENDED:{_sanitize(e)}"
-            if parsed is not None and parsed[0] in self._acid:
-                return self._acid_autocommit(
-                    session_id, user, parsed[0], parsed[1]
-                )
+            if parsed is not None:
+                return self._acid_autocommit(session_id, user, *parsed)
             return "PASS"  # stale Java-side flag: not in a txn
         if _COMMIT_RE.match(sql_text):
             return self._commit(session_id, ops)
@@ -778,157 +891,139 @@ class TxnSessionManager:
             self._txn_snap.pop(session_id, None)
             self._release_session_locks(session_id)
             return f"DONE:Transaction rolled back ({n} buffered statements discarded)"
+        # DML inside the block is parsed by Spark's parser and buffered;
+        # a refusal (parse error, unsupported clause, a piece whose
+        # text cannot be isolated) rejects this statement only
         try:
             parsed = self._parse_dml(sql_text)
         except ValueError as e:
             return f"ERR_ACTIVE:{_sanitize(e)}"
         if parsed is not None:
-            return self._buffer(session_id, parsed[0], parsed[1])
+            return self._buffer(session_id, *parsed)
         # reads (and anything else) pass through: statement-level READ
         # COMMITTED against the published catalog state — Hive ACID's
         # read posture for open transactions
         return "PASS"
 
-    @staticmethod
-    def _parse_dml(sql_text: str):
-        """One statement against the DML grammar → (bare target name,
-        op tuple) or None when not DML. Raises ValueError for a
-        malformed UPDATE SET clause."""
-        m = _INSERT_RE.match(sql_text)
-        if m:
-            return _bare_name(m.group("name")), (
-                "insert",
-                m.group("mode").lower(),
-                m.group("body"),
-                m.group("part"),
-            )
-        m = _DELETE_RE.match(sql_text)
-        if m:
-            return _bare_name(m.group("name")), ("delete", m.group("pred"))
-        m = _UPDATE_RE.match(sql_text)
-        if m:
-            return _bare_name(m.group("name")), (
-                "update",
-                TxnSessionManager._parse_set_list(m.group("sets")),
-                m.group("pred"),
-            )
-        m = _MERGE_RE.match(sql_text)
-        if m:
-            return TxnSessionManager._parse_merge(m)
-        return None
+    def _parse_dml(self, sql_text: str, acid_only: bool = False):
+        """One statement → (bare target name, op tuple), or None when
+        it is not INSERT/UPDATE/DELETE/MERGE — or, with ``acid_only``,
+        when its target is not an enrolled hive-ACID table. Spark's
+        parser builds the plan; every SQL piece of the op tuple (INSERT
+        body, predicates, SET values, MERGE source and clauses) is the
+        statement's own text of that subtree, checked by re-parsing
+        (``DmlText``). Raises ValueError for DML this surface refuses:
+        Spark's parse error, a piece whose text cannot be isolated, and
+        MERGE clauses beyond Hive's surface (any ordered mix of WHEN
+        MATCHED [AND c] THEN UPDATE SET …/DELETE plus at most one WHEN
+        NOT MATCHED [AND c] THEN INSERT [(cols)] VALUES (…); Spark's
+        rule lets only the last clause of each kind omit its
+        condition).
 
-    @staticmethod
-    def _parse_set_list(sets_text: str) -> tuple:
-        sets = []
-        for part in _split_top_level(sets_text):
-            if "=" not in part:
-                raise ValueError(f"malformed SET clause: {part}")
-            col, expr = part.split("=", 1)
-            # strip an optional target-alias prefix (SET t.price = …)
-            sets.append(
-                (
-                    col.strip().replace("`", "").split(".")[-1],
-                    expr.strip(),
-                )
-            )
-        return tuple(sets)
+        Hive's positional ``WHEN NOT MATCHED THEN INSERT VALUES (…)``
+        is not Spark SQL: Spark's syntax error sits exactly on
+        ``VALUES`` (the parser's token position, so literals cannot
+        fool it), and ``DmlText.parse`` splices the MERGE target's
+        enrolled column list there — payload columns, then the
+        partition column — and parses again; the plan's origins then
+        index the spliced text. The target is the third token: the
+        interceptor routes only statements that begin with ``MERGE
+        INTO``. A statement that is not DML and does not parse is
+        None: the delegate parser reports it."""
+        words = sql_text.split(None, 3)
+        verb = words[0].upper() if words else ""
+        ent = self._acid.get(_bare_name(words[2])) if (
+            verb == "MERGE" and len(words) > 3
+        ) else None
+        cols = ent and "(" + ", ".join(f"`{c}`" for c in _columns(ent)) + ")"
+        dml = _dml_text(self.spark)
+        try:
+            plan = dml.parse(sql_text, cols)
+        except ParseException as e:
+            if verb not in ("INSERT", "UPDATE", "DELETE", "MERGE"):
+                return None
+            # a MERGE Spark rejects (e.g. clauses out of its order) is
+            # outside the supported surface
+            refused = "unsupported MERGE clause: " if verb == "MERGE" else ""
+            raise ValueError(f"{refused}{e}") from None
+        kind = plan.nodeName()
+        if kind not in (
+            "InsertIntoStatement", "DeleteFromTable", "UpdateTable",
+            "MergeIntoTable",
+        ):
+            return None
+        merge = kind == "MergeIntoTable"
+        talias, rel = _alias_of(
+            plan.targetTable() if merge else plan.table()
+        )
+        if rel.nodeName() != "UnresolvedRelation":
+            return None
+        name = rel.multipartIdentifier().last().lower()
+        if acid_only and name not in self._acid:
+            return None
 
-    @staticmethod
-    def _parse_merge(m: "re.Match[str]"):
-        """MERGE INTO t USING src ON cond WHEN … → the op tuple
-        ("merge", src_sql, on_cond, talias, salias, matched_clauses,
-        insert_cols, insert_vals, insert_cond). Supported form
-        (documented): any ordered mix of WHEN MATCHED [AND c] THEN
-        UPDATE SET …/DELETE plus at most one WHEN NOT MATCHED
-        [AND c] THEN INSERT [(cols)] VALUES (…) — Hive's own MERGE
-        surface."""
-        name = _bare_name(m.group("name"))
-        talias = m.group("talias") or name
-        src = m.group("src").strip()
-        if src.startswith("("):
-            if not m.group("salias"):
+        def piece(node) -> str | None:
+            text = dml.text(plan, node)
+            if text is None:
+                raise ValueError(f"cannot isolate {str(node)[:80]!r}; refused")
+            return text or None
+
+        def sets(assignments) -> tuple:
+            return tuple(
+                (a.key().nameParts().last(), piece(a.value()))
+                for a in _seq(assignments)
+            )
+
+        if kind == "InsertIntoStatement":
+            if plan.userSpecifiedCols().nonEmpty() or plan.byName():
                 raise ValueError(
-                    "MERGE subquery source needs an alias: USING "
-                    "(SELECT …) s"
+                    "INSERT column lists and BY NAME are not supported"
                 )
-            src_sql = src[1:-1].strip()
-        else:
-            src_sql = f"SELECT * FROM {src}"
-        salias = m.group("salias") or _bare_name(src)
-        matched: list[tuple] = []
-        insert_cols = insert_vals = insert_cond = None
-        clauses_text = m.group("clauses")
-        # total-coverage guard (r12 advisor): the WHEN-clause regex
-        # silently skipped anything it could not match — 'WHEN NOT
-        # MATCHED BY SOURCE THEN DELETE' parsed to just the OTHER
-        # clauses and the partial MERGE committed. Require the matched
-        # spans to tile the entire clauses text (whitespace-only gaps)
-        # so unsupported/garbled clauses refuse instead of dropping.
-        # An embedded CASE WHEN inside a SET expression also lands
-        # here (the lookahead truncates the action, leaving residue)
-        # — refused explicitly rather than mis-split.
-        cursor = 0
-        for wm in _MERGE_WHEN_RE.finditer(clauses_text):
-            gap = clauses_text[cursor:wm.start()]
-            if gap.strip():
-                raise ValueError(
-                    "unsupported MERGE clause text: "
-                    f"{gap.strip()[:80]!r} (supported: WHEN MATCHED "
-                    "[AND c] THEN UPDATE SET …/DELETE, WHEN NOT "
-                    "MATCHED [AND c] THEN INSERT [(cols)] VALUES (…); "
-                    "CASE WHEN inside MERGE actions is not supported)"
-                )
-            cursor = wm.end()
-            action = wm.group("action").strip()
-            if wm.group("not_"):
-                im = _MERGE_INSERT_RE.match(action)
-                if im is None:
-                    raise ValueError(
-                        "WHEN NOT MATCHED supports THEN INSERT "
-                        "[(cols)] VALUES (…) only"
-                    )
-                if insert_vals is not None:
-                    raise ValueError(
-                        "at most one WHEN NOT MATCHED clause"
-                    )
-                insert_cond = wm.group("cond")
-                insert_vals = tuple(
-                    _split_top_level(im.group("vals"))
-                )
-                if im.group("cols"):
-                    insert_cols = tuple(
-                        c.strip().replace("`", "").lower()
-                        for c in im.group("cols").split(",")
-                        if c.strip()
-                    )
-            elif action.upper() == "DELETE":
-                matched.append((wm.group("cond"), "delete"))
-            else:  # UPDATE SET …
-                matched.append(
-                    (
-                        wm.group("cond"),
-                        TxnSessionManager._parse_set_list(
-                            action[len("UPDATE SET"):]
-                        ),
-                    )
-                )
-        if clauses_text[cursor:].strip():
+            mode = "overwrite" if plan.overwrite() else "into"
+            part = _partition_spec(plan.partitionSpec())
+            return name, ("insert", mode, piece(plan.query()), part)
+        if kind == "DeleteFromTable":  # no WHERE parses to literal true
+            pred = piece(plan.condition())
+            return name, ("delete", None if pred == "true" else pred)
+        if not merge:
+            sets_ = sets(plan.assignments())
+            return name, ("update", sets_, piece(plan.condition()))
+        refuse = "unsupported MERGE clause: "
+        if plan.notMatchedBySourceActions().nonEmpty():
+            raise ValueError(refuse + "WHEN NOT MATCHED BY SOURCE")
+        salias, src = _alias_of(plan.sourceTable())
+        if src.nodeName() == "UnresolvedRelation":
+            src_sql = "SELECT * FROM " + piece(src)
+            salias = salias or src.multipartIdentifier().last().lower()
+        elif salias is None:
             raise ValueError(
-                "unsupported MERGE clause text: "
-                f"{clauses_text[cursor:].strip()[:80]!r}"
+                "MERGE subquery source needs an alias: USING (SELECT …) s"
             )
-        if not matched and insert_vals is None:
-            raise ValueError("MERGE needs at least one WHEN clause")
+        else:
+            src_sql = piece(src)
+        matched = []
+        for act in _seq(plan.matchedActions()):
+            verb = act.nodeName()
+            if verb not in ("DeleteAction", "UpdateAction"):
+                raise ValueError(refuse + "UPDATE SET *")
+            matched.append((
+                piece(act.condition()),
+                "delete" if verb == "DeleteAction" else
+                sets(act.assignments()),
+            ))
+        ic = iv = icond = None
+        inserts = _seq(plan.notMatchedActions())
+        if inserts:
+            if len(inserts) > 1 or inserts[0].nodeName() != "InsertAction":
+                raise ValueError(refuse + "INSERT * or several NOT MATCHED")
+            pairs = sets(inserts[0].assignments())
+            ic = tuple(c.lower() for c, _ in pairs)
+            iv = tuple(v for _, v in pairs)
+            icond = piece(inserts[0].condition())
+        on_cond = piece(plan.mergeCondition())
         return name, (
-            "merge",
-            src_sql,
-            m.group("cond").strip(),
-            talias,
-            salias,
-            tuple(matched),
-            insert_cols,
-            insert_vals,
-            insert_cond,
+            "merge", src_sql, on_cond, talias or name, salias,
+            tuple(matched), ic, iv, icond,
         )
 
     # -- GRANT/REVOKE/SHOW GRANTS (HS2 SQL-std auth statements) -----------
@@ -1171,28 +1266,6 @@ class TxnSessionManager:
             )
         return aligned
 
-    @staticmethod
-    def _parse_partition_spec(spec: str | None):
-        """``PARTITION (p='v')`` → ("p", "v") static; ``PARTITION
-        (p)`` → ("p", None) declared-dynamic; None when no clause.
-        Single partition column only (the enrollment surface);
-        multi-column specs refuse."""
-        if spec is None:
-            return None
-        m = _PARTITION_SPEC_RE.match(spec)
-        if m is None:
-            raise ValueError(
-                f"malformed PARTITION spec: ({spec}) — expected "
-                "(col='value') or (col)"
-            )
-        col = m.group("col").replace("`", "").lower()
-        val = m.group("val")
-        if val is not None and len(val) >= 2 and val[0] in "'\"" and (
-            val[-1] == val[0]
-        ):
-            val = val[1:-1]
-        return col, val
-
     def _mm_dml_refusal(self, ent: dict, op: tuple) -> str | None:
         if ent.get("insert_only") and op[0] in (
             "update",
@@ -1297,21 +1370,13 @@ class TxnSessionManager:
         # (they cannot conflict).
         conflicts = kind != "insert" or op[1] == "overwrite"
         if kind == "insert":
-            part_spec = self._parse_partition_spec(
-                op[3] if len(op) > 3 else None
-            )
-            if part_spec is not None and pc is None:
+            col, static_val = op[3] or (pc, None)
+            if col != pc:
                 raise ValueError(
-                    f"table '{ent['name']}' is not partitioned: "
-                    "PARTITION clause refused"
+                    f"table '{ent['name']}' is not partitioned: PARTITION "
+                    "clause refused" if pc is None else "unknown partition "
+                    f"column '{col}' (table is partitioned by '{pc}')"
                 )
-            if part_spec is not None and part_spec[0] != pc:
-                raise ValueError(
-                    f"unknown partition column "
-                    f"'{part_spec[0]}' (table is partitioned by "
-                    f"'{pc}')"
-                )
-            static_val = part_spec[1] if part_spec is not None else None
             df = self._acid_insert_df(
                 ent, op[2], dynamic=pc is not None and static_val is None
             )
@@ -1375,27 +1440,19 @@ class TxnSessionManager:
             _, src_sql, on_cond, talias, salias, matched, ic, iv, icond = op
             insert_values = None
             if iv is not None:
-                full = [n for n, _ in ent["schema"]] + (
-                    [pc] if pc is not None else []
-                )
-                if ic is not None:
-                    unknown = set(ic) - set(full)
-                    if unknown:
-                        raise ValueError(
-                            "MERGE INSERT names unknown columns "
-                            f"{sorted(unknown)}"
-                        )
-                    if len(ic) != len(iv):
-                        raise ValueError(
-                            "MERGE INSERT column/value arity mismatch"
-                        )
-                    colmap = dict(zip(ic, iv))
-                    # unnamed columns take NULL (Hive's rule); an
-                    # unnamed PARTITION column inserts into
-                    # __HIVE_DEFAULT_PARTITION__ via NULL
-                    insert_values = [colmap.get(n, "NULL") for n in full]
-                else:
-                    insert_values = list(iv)
+                # the parser made every INSERT named (a positional one
+                # arrives with the enrolled columns spliced in)
+                full = _columns(ent)
+                unknown = set(ic) - set(full)
+                if unknown:
+                    raise ValueError(
+                        f"MERGE INSERT names unknown columns {sorted(unknown)}"
+                    )
+                colmap = dict(zip(ic, iv))
+                # unnamed columns take NULL (Hive's rule); an unnamed
+                # PARTITION column inserts into
+                # __HIVE_DEFAULT_PARTITION__ via NULL
+                insert_values = [colmap.get(n, "NULL") for n in full]
             paths = hive_acid_merge(
                 self.spark,
                 root,
@@ -1663,8 +1720,11 @@ class TxnSessionManager:
                 "'*'-granted users (or the in-process session) may "
                 "request compactions"
             )
-        try:
-            spec = self._parse_partition_spec(m.group("part"))
+        part = m.group("part")
+        try:  # Spark cannot parse ALTER … COMPACT; it parses the spec
+            spec = None if part is None else self._parse_dml(
+                f"INSERT INTO t PARTITION ({part}) SELECT 1"
+            )[1][3]
         except ValueError as e:
             return f"ERR_ENDED:{_sanitize(e)}"
         pc = ent.get("partition_col")
@@ -2043,8 +2103,7 @@ class TxnSessionManager:
 
     # -- buffering + commit ------------------------------------------------
 
-    def _buffer(self, session_id: str, name: str, op: tuple) -> str:
-        table = _bare_name(name)
+    def _buffer(self, session_id: str, table: str, op: tuple) -> str:
         is_acid = table in self._acid
         if is_acid:
             if op[0] == "insert" and op[1] == "overwrite":

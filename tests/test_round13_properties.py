@@ -11,10 +11,10 @@
    committed delta (superseded by a base that never committed —
    unrecoverable data loss) and KEPT the aborted base. Now the
    aborted base is the debris and the delta survives.
-3. **MERGE parser refuses what it cannot parse** (medium): the
+3. **MERGE refuses what it cannot run** (medium): the old
    WHEN-clause regex silently dropped unmatched text ('WHEN NOT
-   MATCHED BY SOURCE THEN DELETE' committed a partial MERGE). Now the
-   matched spans must tile the whole clauses text.
+   MATCHED BY SOURCE THEN DELETE' committed a partial MERGE). Spark's
+   parser now reads every clause, and unsupported ones refuse.
 4. **ABORT TRANSACTIONS is all-or-nothing** (low): every token
    validates before any abort applies — no partial effect behind a
    pure-failure message.
@@ -228,19 +228,22 @@ def test_merge_unsupported_clause_refused_not_dropped(spark, mgr13):
     assert sorted(os.listdir(root)) == ["delta_0000001_0000001"]
 
 
-def test_merge_embedded_case_when_refused(spark, mgr13):
+def test_merge_embedded_case_when_applies(spark, mgr13):
+    """A CASE WHEN inside a MERGE SET value is one expression of
+    Spark's parse tree, so its WHEN/THEN/ELSE keywords never split the
+    clause list: the matched row takes the CASE result."""
     mgr, root = mgr13
-    spark.createDataFrame([(2, "S", 20.0)], MM_DDL).createOrReplaceTempView(
-        "r13_case_src"
-    )
+    spark.createDataFrame(
+        [(2, "S", 20.0), (3, "S", -1.0)], MM_DDL
+    ).createOrReplaceTempView("r13_case_src")
     out = mgr.handle(
         "m1",
         "MERGE INTO acid13 t USING r13_case_src s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET price = "
         "CASE WHEN s.price > 0 THEN s.price ELSE t.price END",
     )
-    assert out.startswith("ERR_"), out
-    assert _view13(spark) == {(1, 1.0), (2, 2.0), (3, 3.0)}
+    assert out.startswith("DONE:Committed writeid 2"), out
+    assert _view13(spark) == {(1, 1.0), (2, 20.0), (3, 3.0)}
 
 
 def test_merge_default_aliases_resolve_via_struct_columns(spark, mgr13):

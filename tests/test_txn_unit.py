@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from layer_apache_hive_spark.acid import TransactionCatalog
-from layer_apache_hive_spark.txn import TxnSessionManager, _split_top_level
+from layer_apache_hive_spark.txn import TxnSessionManager
 
 
 @pytest.fixture()
@@ -153,18 +153,6 @@ def test_empty_commit_is_noop(mgr):
     mgr.handle("s", "BEGIN")
     assert mgr.handle("s", "COMMIT").startswith("DONE:Nothing to commit")
     assert mgr.catalog.current_version() == 1
-
-
-def test_split_top_level_respects_parens_and_quotes():
-    assert _split_top_level("a = f(x, y), b = 'p,q', c = 2") == [
-        "a = f(x, y)",
-        "b = 'p,q'",
-        "c = 2",
-    ]
-    assert _split_top_level("x = concat('a''b', ','), y = 1") == [
-        "x = concat('a''b', ',')",
-        "y = 1",
-    ]
 
 
 # --- GRANT/REVOKE/SHOW GRANTS (r8: SQL-std auth statements served) ---------
