@@ -42,11 +42,16 @@ Mechanics — all public Spark extension points, no internals patched:
   ``InsertIntoStatement`` / ``UpdateTable`` / ``DeleteFromTable`` /
   ``MergeIntoTable`` plan, and each piece of the op tuple (INSERT
   body, SET value, predicate, MERGE source and clauses) is the
-  statement's own text of that parse subtree, taken from the origins
-  the parser stamps on every node. A piece must re-parse to the same
-  tree, so keywords inside literals, comments and nested subqueries
-  cannot mis-split a statement: a piece whose text cannot be isolated
-  is refused (``ERR_*``, nothing written), never run as a guess.
+  statement's own text of that parse subtree: the slice from the
+  smallest start to the largest stop over the origins the parser
+  stamps on its nodes. A piece must re-parse to the same tree, so
+  keywords inside literals, comments and nested subqueries cannot
+  mis-split a statement. Refused (``ERR_*``, nothing written), never
+  run as a guess: a piece whose text cannot be isolated, a Spark parse
+  error, MERGE clauses beyond Hive's surface, and INSERT forms the op
+  tuple cannot carry (column lists, BY NAME, IF NOT EXISTS, WITH
+  options, REPLACE WHERE). Outside a transaction only DML whose target
+  is enrolled is ours; anything else passes to the delegate parser.
   Hive's positional ``WHEN NOT MATCHED THEN INSERT VALUES (…)`` is not
   Spark SQL; the parser's error position on ``VALUES`` is where the
   target's enrolled column list is spliced in before parsing again.
@@ -379,21 +384,12 @@ def txn_session_conf(
 
 # --- wire DML front end: Spark's own parser --------------------------------
 
-#: Spark's parser plus the piece texts of a parsed DML statement,
-#: compiled in the driver JVM by Janino (Spark's codegen compiler), so
-#: a piece costs one bridge call. ``parse`` splices ``insertColumns``
-#: (when given) at a syntax error sitting on ``VALUES`` and parses
-#: again (``_parse_dml``). ``text`` slices the statement from the
-#: smallest start to the largest stop over the located origins in the
-#: node's subtree — expressions, subquery plans and plan children. An
-#: origin locates a node only when it belongs to this statement text
-#: and does not start at its first token: nodes stamped with the whole
-#: statement, and shared singletons such as the boolean literals, carry
-#: no position. An EXISTS is spelled around its query's text, an
-#: unlocated literal from its value. The text is returned only if it is
-#: non-empty and re-parses to the same tree (expression ids masked;
-#: literal types and subquery plans compared too); null means the piece
-#: cannot be isolated. A ``None`` Option yields "".
+#: The piece cutter, compiled in the driver JVM by Janino (Spark's
+#: codegen compiler) so a piece costs one bridge call, not a py4j walk.
+#: Origins stamped with the whole statement (EXISTS) or stale ones on
+#: shared singletons (the boolean literals) locate nothing; such nodes
+#: are spelled instead. ``text`` returns null when a piece cannot be
+#: isolated, "" for a ``None`` Option.
 _DML_TEXT_JAVA = r"""
 package sparkgraft;
 
@@ -424,8 +420,8 @@ public class DmlText {
       }
       pos += ((Integer) at.startPosition().get()).intValue();
       if (!sql.regionMatches(true, pos, "VALUES", 0, 6)) throw ex;
-      return P.parsePlan(
-          sql.substring(0, pos) + insertColumns + " " + sql.substring(pos));
+      return P.parsePlan(sql.substring(0, pos) + "(" + insertColumns + ") "
+          + sql.substring(pos));
     }
   }
 
@@ -513,10 +509,28 @@ def _dml_text(spark: SparkSession):
     return gateway._sparkgraft_dml_text
 
 
-def _columns(ent: dict) -> list[str]:
-    """An enrollment's columns: payload, then the partition column."""
+def _columns(ent: dict) -> list[tuple[str, str]]:
+    """An enrollment's (name, type) columns: payload, then the
+    partition column."""
     pc = ent["partition_col"]
-    return [n for n, _ in ent["schema"]] + ([pc] if pc else [])
+    return list(ent["schema"]) + ([(pc, ent["partition_type"])] if pc else [])
+
+
+def _insert_frame(
+    spark: SparkSession, body: str, cols: list[tuple[str, str]], shape: str
+) -> DataFrame:
+    """An INSERT body's frame, renamed and cast positionally to the
+    target's (name, type) ``cols``; ``shape`` names them in the error
+    raised when the column counts differ."""
+    incoming = spark.sql(body)
+    if len(incoming.columns) != len(cols):
+        raise ValueError(
+            f"INSERT column count {len(incoming.columns)} != "
+            f"{len(cols)} ({shape})"
+        )
+    return incoming.toDF(*(n for n, _ in cols)).select(
+        *(F.col(n).cast(t) for n, t in cols)
+    )
 
 
 def _seq(seq) -> list:
@@ -610,6 +624,22 @@ def _bare_name(name: str) -> str:
     return name.replace("`", "").split(".")[-1].lower()
 
 
+_DML_VERBS = ("INSERT", "UPDATE", "DELETE", "MERGE")
+_MERGE_CLAUSE_WORDS = set(
+    "WHEN MATCHED NOT BY SOURCE TARGET THEN UPDATE DELETE INSERT".split()
+)
+
+
+def _dml_target(words: list[str]) -> str:
+    """Bare name of the table a DML statement's leading words name
+    (``INSERT INTO|OVERWRITE [TABLE] t``, ``UPDATE t``, ``DELETE FROM
+    t``, ``MERGE INTO t``); "" when they name none."""
+    for w in words[1:]:
+        if w.upper() not in ("INTO", "OVERWRITE", "TABLE", "FROM"):
+            return _bare_name(w.split("(")[0])
+    return ""
+
+
 def _sanitize(msg: str) -> str:
     return " ".join(str(msg).split())[:500]
 
@@ -689,13 +719,17 @@ class TxnSessionManager:
                 + "`"
             )
 
-    def _mint_visibility(self, root: str) -> int:
-        """A compaction's visibility txn (HIVE-20823), minted from the
-        ledger's dedicated visibility sequence — monotone and durable,
-        so re-attempted folds order by their ``_vNNNNNNN`` suffix,
-        and table writeids are never consumed by compactions (Hive's
-        visibility ids are TXN ids, not writeids)."""
-        return self.ledger.next_visibility_txn()
+    def _initiator_fns(self, ent: dict) -> dict:
+        """An enrollment's ledger as its initiator sees it: the
+        TABLE-level valid-writeid closure, and compaction visibility
+        txns (HIVE-20823) minted from the ledger's own durable
+        sequence, so table writeids are never consumed by folds."""
+        return {
+            "valid_writeids_fn": lambda: self.ledger.valid_writeids(
+                ent["root"], table=ent["name"]
+            ),
+            "visibility_fn": self.ledger.next_visibility_txn,
+        }
 
     # -- lock manager (DbLockManager analog, r13 task 6) -----------------
 
@@ -738,6 +772,15 @@ class TxnSessionManager:
                 lk for lk in self._locks if lk["session"] != session
             ]
 
+    def _end_session(self, session_id: str) -> int:
+        """Close a session's transaction: drop its buffer, identity
+        and snapshots and release its locks. Returns the number of
+        buffered statements dropped."""
+        self._txn_user.pop(session_id, None)
+        self._txn_snap.pop(session_id, None)
+        self._release_session_locks(session_id)
+        return len(self._open.pop(session_id, None) or ())
+
     # -- bridge entry ----------------------------------------------------
 
     def handle(self, session_id: str, *args: str) -> str:  # noqa: C901
@@ -750,8 +793,7 @@ class TxnSessionManager:
         try:
             return self._handle(session_id, sql_text, user)
         except Exception as e:  # never leak a raw traceback to the wire
-            self._open.pop(session_id, None)
-            self._txn_user.pop(session_id, None)
+            self._end_session(session_id)
             return f"ERR_ENDED:{_sanitize(e)}"
 
     def _handle(self, session_id: str, sql_text: str, user: str = "") -> str:
@@ -877,7 +919,8 @@ class TxnSessionManager:
                 # (unsupported MERGE clause, a piece whose text cannot
                 # be isolated): OURS to refuse — passing it through
                 # would run against the served VIEW (r12 advisor: the
-                # silently-truncated MERGE previously committed here)
+                # silently-truncated MERGE previously committed here).
+                # DML on any other table passes, parse errors included
                 return f"ERR_ENDED:{_sanitize(e)}"
             if parsed is not None:
                 return self._acid_autocommit(session_id, user, *parsed)
@@ -885,11 +928,7 @@ class TxnSessionManager:
         if _COMMIT_RE.match(sql_text):
             return self._commit(session_id, ops)
         if _ROLLBACK_RE.match(sql_text):
-            n = len(ops)
-            self._open.pop(session_id, None)
-            self._txn_user.pop(session_id, None)
-            self._txn_snap.pop(session_id, None)
-            self._release_session_locks(session_id)
+            n = self._end_session(session_id)
             return f"DONE:Transaction rolled back ({n} buffered statements discarded)"
         # DML inside the block is parsed by Spark's parser and buffered;
         # a refusal (parse error, unsupported clause, a piece whose
@@ -908,49 +947,40 @@ class TxnSessionManager:
     def _parse_dml(self, sql_text: str, acid_only: bool = False):
         """One statement → (bare target name, op tuple), or None when
         it is not INSERT/UPDATE/DELETE/MERGE — or, with ``acid_only``,
-        when its target is not an enrolled hive-ACID table. Spark's
-        parser builds the plan; every SQL piece of the op tuple (INSERT
-        body, predicates, SET values, MERGE source and clauses) is the
-        statement's own text of that subtree, checked by re-parsing
-        (``DmlText``). Raises ValueError for DML this surface refuses:
-        Spark's parse error, a piece whose text cannot be isolated, and
-        MERGE clauses beyond Hive's surface (any ordered mix of WHEN
-        MATCHED [AND c] THEN UPDATE SET …/DELETE plus at most one WHEN
-        NOT MATCHED [AND c] THEN INSERT [(cols)] VALUES (…); Spark's
-        rule lets only the last clause of each kind omit its
-        condition).
-
-        Hive's positional ``WHEN NOT MATCHED THEN INSERT VALUES (…)``
-        is not Spark SQL: Spark's syntax error sits exactly on
-        ``VALUES`` (the parser's token position, so literals cannot
-        fool it), and ``DmlText.parse`` splices the MERGE target's
-        enrolled column list there — payload columns, then the
-        partition column — and parses again; the plan's origins then
-        index the spliced text. The target is the third token: the
-        interceptor routes only statements that begin with ``MERGE
-        INTO``. A statement that is not DML and does not parse is
-        None: the delegate parser reports it."""
-        words = sql_text.split(None, 3)
+        when its target is not an enrolled hive-ACID table. Raises
+        ValueError for DML this surface refuses (see the module
+        docstring). A MERGE may use only WHEN MATCHED [AND c] THEN
+        UPDATE SET …/DELETE and one WHEN NOT MATCHED [AND c] THEN
+        INSERT [(cols)] VALUES (…)."""
+        words = sql_text.split(None, 5)
         verb = words[0].upper() if words else ""
-        ent = self._acid.get(_bare_name(words[2])) if (
-            verb == "MERGE" and len(words) > 3
-        ) else None
-        cols = ent and "(" + ", ".join(f"`{c}`" for c in _columns(ent)) + ")"
+        target = _dml_target(words)
+        ours = verb in _DML_VERBS and (not acid_only or target in self._acid)
+        ent = self._acid.get(target) if verb == "MERGE" else None
+        cols = ent and ", ".join(f"`{c}`" for c, _ in _columns(ent))
         dml = _dml_text(self.spark)
         try:
             plan = dml.parse(sql_text, cols)
         except ParseException as e:
-            if verb not in ("INSERT", "UPDATE", "DELETE", "MERGE"):
+            if not ours:  # the delegate parser reports it
                 return None
-            # a MERGE Spark rejects (e.g. clauses out of its order) is
-            # outside the supported surface
-            refused = "unsupported MERGE clause: " if verb == "MERGE" else ""
+            # Spark rejects the clause structure by an error class, or by
+            # a syntax error on a clause keyword (clauses out of order)
+            cond = e.getCondition() or ""
+            near = (e.getMessageParameters() or {}).get("error", "")
+            clauses = verb == "MERGE" and (
+                cond == "MERGE_WITHOUT_WHEN" or cond.startswith("NON_LAST_")
+                or near.strip("'").upper() in _MERGE_CLAUSE_WORDS
+            )
+            refused = "unsupported MERGE clause: " if clauses else ""
             raise ValueError(f"{refused}{e}") from None
         kind = plan.nodeName()
         if kind not in (
             "InsertIntoStatement", "DeleteFromTable", "UpdateTable",
             "MergeIntoTable",
         ):
+            if ours:  # e.g. INSERT … REPLACE WHERE, INSERT … DIRECTORY
+                raise ValueError(f"unsupported {verb} statement ({kind})")
             return None
         merge = kind == "MergeIntoTable"
         talias, rel = _alias_of(
@@ -975,9 +1005,15 @@ class TxnSessionManager:
             )
 
         if kind == "InsertIntoStatement":
-            if plan.userSpecifiedCols().nonEmpty() or plan.byName():
+            opts = set(rel.options().asCaseSensitiveMap().keySet())
+            if (
+                plan.userSpecifiedCols().nonEmpty() or plan.byName()
+                or plan.ifPartitionNotExists()
+                or opts - {"__required_write_privileges__"}
+            ):
                 raise ValueError(
-                    "INSERT column lists and BY NAME are not supported"
+                    "INSERT column lists, BY NAME, IF NOT EXISTS and "
+                    "WITH (options) are not supported"
                 )
             mode = "overwrite" if plan.overwrite() else "into"
             part = _partition_spec(plan.partitionSpec())
@@ -1179,10 +1215,7 @@ class TxnSessionManager:
                 serve_as=ent["name"] if serve else None,
                 insert_only=insert_only,
                 fmt=fmt,
-                valid_writeids_fn=lambda r=root, n=ent[
-                    "name"
-                ]: self.ledger.valid_writeids(r, table=n),
-                visibility_fn=lambda r=root: self._mint_visibility(r),
+                **self._initiator_fns(ent),
             )
         elif serve:
             self._republish_acid(ent)
@@ -1238,33 +1271,13 @@ class TxnSessionManager:
         raw — an `INSERT … VALUES (1, 2.0)` would land int/decimal
         parquet next to long/double files and poison later reads (r11
         advisor)."""
-        incoming = self.spark.sql(body)
-        names = [n for n, _ in ent["schema"]]
-        pc = ent["partition_col"]
-        cols = names + [pc] if dynamic else names
-        if len(incoming.columns) != len(cols):
-            if pc is None:
-                raise ValueError(
-                    f"INSERT column count {len(incoming.columns)} != "
-                    f"acid table arity {len(names)}"
-                )
-            shape = (
-                "payload + partition column last — dynamic"
-                if dynamic
-                else "payload only — static PARTITION"
-            )
-            raise ValueError(
-                f"INSERT column count {len(incoming.columns)} != "
-                f"expected {len(cols)} ({shape})"
-            )
-        aligned = incoming.toDF(*cols)
-        for n, t in ent["schema"]:
-            aligned = aligned.withColumn(n, F.col(n).cast(t))
-        if dynamic:
-            aligned = aligned.withColumn(
-                pc, F.col(pc).cast(ent["partition_type"])
-            )
-        return aligned
+        shape = (
+            "acid table arity" if ent["partition_col"] is None
+            else "payload + partition column last — dynamic" if dynamic
+            else "payload only — static PARTITION"
+        )
+        cols = _columns(ent) if dynamic else list(ent["schema"])
+        return _insert_frame(self.spark, body, cols, shape)
 
     def _mm_dml_refusal(self, ent: dict, op: tuple) -> str | None:
         if ent.get("insert_only") and op[0] in (
@@ -1442,7 +1455,7 @@ class TxnSessionManager:
             if iv is not None:
                 # the parser made every INSERT named (a positional one
                 # arrives with the enrolled columns spliced in)
-                full = _columns(ent)
+                full = [n for n, _ in _columns(ent)]
                 unknown = set(ic) - set(full)
                 if unknown:
                     raise ValueError(
@@ -1722,10 +1735,12 @@ class TxnSessionManager:
             )
         part = m.group("part")
         try:  # Spark cannot parse ALTER … COMPACT; it parses the spec
-            spec = None if part is None else self._parse_dml(
-                f"INSERT INTO t PARTITION ({part}) SELECT 1"
-            )[1][3]
-        except ValueError as e:
+            spec = None if part is None else _partition_spec(
+                _dml_text(self.spark).parse(
+                    f"INSERT INTO t PARTITION ({part}) SELECT 1", None
+                ).partitionSpec()
+            )
+        except (ParseException, ValueError) as e:
             return f"ERR_ENDED:{_sanitize(e)}"
         pc = ent.get("partition_col")
         if pc is not None:
@@ -1764,13 +1779,8 @@ class TxnSessionManager:
                     ent["schema"],
                     ent["fields"],
                     serve_as=None,
-                    valid_writeids_fn=lambda r=ent["root"], n=ent[
-                        "name"
-                    ]: self.ledger.valid_writeids(r, table=n),
                     republish_fn=lambda e=ent: self._republish_acid(e),
-                    visibility_fn=lambda r=ent[
-                        "root"
-                    ]: self._mint_visibility(r),
+                    **self._initiator_fns(ent),
                 )
                 enrolled.add(pdir)
             self.initiator.request_compaction(pdir, kind)
@@ -1845,10 +1855,7 @@ class TxnSessionManager:
         for item in plan:
             if item[0] == "session":
                 tok = item[1]
-                n = len(self._open.pop(tok))
-                self._txn_user.pop(tok, None)
-                self._txn_snap.pop(tok, None)
-                self._release_session_locks(tok)
+                n = self._end_session(tok)
                 done.append(
                     f"{tok}: wire buffer rolled back ({n} statements)"
                 )
@@ -2010,7 +2017,7 @@ class TxnSessionManager:
         tag = uuid.uuid4().hex[:12]
         ptv, psv = f"__authz_mt_{tag}", f"__authz_ms_{tag}"
         self.spark.createDataFrame(
-            [], ", ".join(f"{n} {t}" for n, t in ent["schema"])
+            [], ", ".join(f"{n} {t}" for n, t in _columns(ent))
         ).createOrReplaceTempView(ptv)
         self.spark.sql(src_sql).limit(0).createOrReplaceTempView(psv)
         try:
@@ -2082,13 +2089,8 @@ class TxnSessionManager:
             # against an empty frame of the declared payload schema
             # (same columns resolve, no election read spent on authz);
             # partitioned enrollments expose the partition column too
-            cols = list(ent["schema"])
-            if ent.get("partition_col"):
-                cols.append(
-                    (ent["partition_col"], ent["partition_type"])
-                )
             pinned = self.spark.createDataFrame(
-                [], ", ".join(f"{n} {t}" for n, t in cols)
+                [], ", ".join(f"{n} {t}" for n, t in _columns(ent))
             )
         else:
             pinned = self.catalog.table(table).read(self.spark)
@@ -2248,17 +2250,9 @@ class TxnSessionManager:
                             "PARTITION clauses target partitioned "
                             "hive-acid enrollments, not catalog tables"
                         )
-                    incoming = spark.sql(body)
-                    if len(incoming.columns) != len(out.columns):
-                        raise ValueError(
-                            f"INSERT column count {len(incoming.columns)} "
-                            f"!= table arity {len(out.columns)}"
-                        )
-                    aligned = incoming.toDF(*out.columns)
-                    for c, typ in out.dtypes:
-                        aligned = aligned.withColumn(
-                            c, F.col(c).cast(typ)
-                        )
+                    aligned = _insert_frame(
+                        spark, body, out.dtypes, "table arity"
+                    )
                     out = aligned if mode == "overwrite" else (
                         out.unionByName(aligned)
                     )

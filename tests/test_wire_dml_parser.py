@@ -26,12 +26,11 @@ from tests.test_round10_properties import SCHEMA, _fields
 SRC_DDL = "k long, status string, price double, sp string"
 
 
-@pytest.mark.parametrize("layout", ["flat", "partitioned"])
-def test_wire_dml_adversarial_statements(spark, tmp_path, layout):
+def _enrolled(spark, tmp_path, layout):
+    """(manager, ledger, root, name) of an empty enrollment."""
     from layer_apache_hive_spark.acid import TransactionCatalog
     from layer_apache_hive_spark.txn import TxnSessionManager
 
-    part = layout == "partitioned"
     led = HiveWriteIdLedger(str(tmp_path / "ledger.jsonl"))
     mgr = TxnSessionManager(
         spark, TransactionCatalog(str(tmp_path / "cat")),
@@ -42,8 +41,15 @@ def test_wire_dml_adversarial_statements(spark, tmp_path, layout):
     name = f"adv_{layout}"
     mgr.enroll_hive_acid(
         name, root, SCHEMA, _fields(), n_buckets=2,
-        partition_col="p" if part else None,
+        partition_col="p" if layout == "partitioned" else None,
     )
+    return mgr, led, root, name
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_wire_dml_adversarial_statements(spark, tmp_path, layout):
+    part = layout == "partitioned"
+    mgr, led, root, name = _enrolled(spark, tmp_path, layout)
 
     def pv(expr):  # the partition value rides last
         return f", {expr}" if part else ""
@@ -121,3 +127,81 @@ def test_piece_text_is_the_statement_subtree(spark):
     b = dml.parse("DELETE FROM t WHERE k = 2", None)
     assert dml.text(a, a.condition()) == "s LIKE '%WHERE%'"
     assert dml.text(a, b.condition()) is None
+
+
+def test_insert_forms_the_op_cannot_carry_are_refused(spark, tmp_path):
+    """IF NOT EXISTS, WITH (options) and REPLACE WHERE change what an
+    INSERT writes, and the op tuple has no field for them: each is
+    refused and nothing is written. Run as a plain overwrite, the IF
+    NOT EXISTS statement would replace partition X's rows."""
+    mgr, led, root, name = _enrolled(spark, tmp_path, "partitioned")
+    out = mgr.handle("s1", f"INSERT INTO {name} VALUES (1, 'a', 1.0, 'X')")
+    assert out.startswith("DONE:Committed writeid 1"), out
+    def dirs():
+        return sorted(d for d, _, _ in os.walk(root))
+
+    before = dirs()
+    for sql in [
+        f"INSERT OVERWRITE {name} PARTITION (p='X') IF NOT EXISTS "
+        "SELECT 9L, 'z', 9.0",
+        f"INSERT INTO {name} WITH ('k'='v') VALUES (2, 'b', 2.0, 'X')",
+        f"INSERT INTO {name} REPLACE WHERE k = 1 SELECT 9L, 'z', 9.0, 'X'",
+    ]:
+        out = mgr.handle("s1", sql)
+        assert out.startswith("ERR_ENDED:"), (sql, out)
+    assert dirs() == before  # no delta, base or partition dir
+    rows = read_hive_acid(
+        spark, root, SCHEMA, valid_writeids=led.valid_writeids(root),
+        partition_col="p",
+    ).collect()
+    assert [(r.k, r.status, r.p) for r in rows] == [(1, "a", "X")]
+
+
+def test_dml_parse_errors_pass_unless_target_enrolled(spark, tmp_path):
+    """Outside a transaction a DML syntax error is refused only when
+    its target is enrolled; on any other table it passes, so the
+    delegate parser reports Spark's own error. Only a MERGE whose
+    clause structure Spark rejects is called an unsupported clause."""
+    mgr, _, root, name = _enrolled(spark, tmp_path, "flat")
+    assert mgr.handle("s1", "UPDATE plain_t SET = 1") == "PASS"
+    assert mgr.handle("s1", "DELETE FROM plain_t WHERE") == "PASS"
+    out = mgr.handle("s1", f"UPDATE {name} SET = 1")
+    assert out.startswith("ERR_ENDED:"), out
+    assert "PARSE_SYNTAX_ERROR" in out and "MERGE" not in out, out
+    merge = f"MERGE INTO {name} t USING adv_src s ON t.k = s.k "
+    out = mgr.handle("s1", merge + "WHEN MATCHED THEN FROB")
+    assert out.startswith("ERR_ENDED:"), out
+    assert "unsupported MERGE clause" not in out, out
+    out = mgr.handle(
+        "s1",
+        merge + "WHEN MATCHED THEN DELETE WHEN MATCHED AND s.k = 1 "
+        "THEN DELETE",
+    )
+    assert out.startswith("ERR_ENDED:unsupported MERGE clause:"), out
+    assert os.listdir(root) == []
+
+
+def test_scoped_merge_may_name_the_partition_column(
+    spark, tmp_path, monkeypatch
+):
+    """A scoped user's MERGE is authorized by analyzing its clauses
+    over an empty frame of the target's columns. That frame carries
+    the partition column too, so an ON condition naming it analyzes
+    and the MERGE runs."""
+    mgr, led, root, name = _enrolled(spark, tmp_path, "partitioned")
+    monkeypatch.delenv("SPARK_GRAFT_HS2_ACL_FILE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_HS2_ACL", f"etl={name}")
+    out = mgr.handle("s1", f"INSERT INTO {name} VALUES (2, 'a', 1.0, 'Y')")
+    assert out.startswith("DONE:Committed writeid 1"), out
+    out = mgr.handle(
+        "s1", "etl",
+        f"MERGE INTO {name} t USING (SELECT 2L AS k, 5.0D AS price, "
+        "'Y' AS sp) s ON t.k = s.k AND t.p = s.sp "
+        "WHEN MATCHED THEN UPDATE SET price = s.price",
+    )
+    assert out.startswith("DONE:Committed writeid 2"), out
+    rows = read_hive_acid(
+        spark, root, SCHEMA, valid_writeids=led.valid_writeids(root),
+        partition_col="p",
+    ).collect()
+    assert [(r.k, r.price, r.p) for r in rows] == [(2, 5.0, "Y")]
