@@ -32,14 +32,14 @@ verify:
 
 verify-sf01:
 	$(PY) scripts/verify_contract.py --sf-dir /root/testdata/sf0.1 \
-	    --json-out /root/repo/CORRECTNESS_local_sf01.json
+	    --json-out $(CURDIR)/CORRECTNESS_local_sf01.json
 
 verify-driver:
 	$(PY) scripts/verify_driver_session.py
 
 verify-hostile:
 	SPARK_GRAFT_HOSTILE_PLANNER=1 $(PY) scripts/verify_driver_session.py \
-	    --json-out /root/repo/CORRECTNESS_hostile_planner.json
+	    --json-out $(CURDIR)/CORRECTNESS_hostile_planner.json
 
 verify-metastore:
 	$(PY) scripts/verify_metastore.py
@@ -52,7 +52,7 @@ stress:
 	$(PY) scripts/scale_stress.py
 
 audit:
-	$(PY) scripts/explain_audit.py
+	$(PY) scripts/explain_audit.py --summary
 
 empty:
 	$(PY) scripts/edge_empty.py

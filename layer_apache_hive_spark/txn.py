@@ -36,6 +36,13 @@ Mechanics — all public Spark extension points, no internals patched:
   transaction granularity). ROLLBACK just drops the buffer; a
   connection that disconnects mid-transaction implicitly rolls back
   (its buffer is keyed by the dead parser's UUID and never commits).
+* DML against an enrolled **hive-ACID** table is buffered the same
+  way and commits through ``_commit_acid``: one ledger writeid per
+  table, the first-committer-wins pre-check, the statements' dirs and
+  one ``commit_many`` record. Bare DML on such a table (outside BEGIN)
+  is a one-statement transaction, as in HiveServer2: it passes the
+  same admission (``_admit``: grants, lock, write-set baseline) and
+  the same ``_commit_acid`` as a block.
 * DML is parsed by **Spark's own SQL parser** (a fresh
   ``SparkSqlParser``, never the session's parser: that is this
   interceptor). ``TxnSessionManager._parse_dml`` walks the resulting
@@ -50,8 +57,9 @@ Mechanics — all public Spark extension points, no internals patched:
   run as a guess: a piece whose text cannot be isolated, a Spark parse
   error, MERGE clauses beyond Hive's surface, and INSERT forms the op
   tuple cannot carry (column lists, BY NAME, IF NOT EXISTS, WITH
-  options, REPLACE WHERE). Outside a transaction only DML whose target
-  is enrolled is ours; anything else passes to the delegate parser.
+  options, REPLACE WHERE) and DML behind a ``WITH`` clause. Outside a
+  transaction only DML whose target is enrolled is ours; anything else
+  passes to the delegate parser.
   Hive's positional ``WHEN NOT MATCHED THEN INSERT VALUES (…)`` is not
   Spark SQL; the parser's error position on ``VALUES`` is where the
   target's enrolled column list is spliced in before parsing again.
@@ -625,6 +633,9 @@ def _bare_name(name: str) -> str:
 
 
 _DML_VERBS = ("INSERT", "UPDATE", "DELETE", "MERGE")
+_DML_NODES = (
+    "InsertIntoStatement", "DeleteFromTable", "UpdateTable", "MergeIntoTable"
+)
 _MERGE_CLAUSE_WORDS = set(
     "WHEN MATCHED NOT BY SOURCE TARGET THEN UPDATE DELETE INSERT".split()
 )
@@ -698,16 +709,17 @@ class TxnSessionManager:
         #: enforce grants ITSELF or a scoped user could launder reads
         #: of ungranted tables through an INSERT body (r8).
         self._txn_user: dict[str, str] = {}
-        #: sessionId -> {acid root -> committed-writeid snapshot at
-        #: the transaction's FIRST statement against that table} —
+        #: sessionId (``<session>#stmt`` for a bare statement) ->
+        #: {acid root -> committed-writeid snapshot at the
+        #: transaction's FIRST statement against that table} —
         #: the baseline commitTxn's write-set validation uses
         #: (HIVE-13395 first-committer-wins, r13 task 2)
         self._txn_snap: dict[str, dict[str, frozenset]] = {}
         #: live lock table (the DbLockManager / HIVE_LOCKS analog,
         #: r13 task 6): SHARED_WRITE for row-level DML + INSERT,
-        #: EXCLUSIVE for INSERT OVERWRITE; acquired at buffer time
-        #: (BEGIN blocks) or statement entry (autocommit), released
-        #: at COMMIT/ROLLBACK/ABORT/statement end. Conflicts REFUSE
+        #: EXCLUSIVE for INSERT OVERWRITE; acquired when a statement
+        #: is admitted (``_admit``), released at COMMIT/ROLLBACK/
+        #: ABORT or a bare statement's end. Conflicts REFUSE
         #: (Hive would queue; the non-blocking refusal is this
         #: surface's documented posture).
         self._locks: list[dict] = []
@@ -908,9 +920,9 @@ class TxnSessionManager:
                     "(it may have been aborted by an administrator)"
                 )
             # outside any transaction: bare DML against an enrolled
-            # hive-ACID layout is a single-statement auto-commit
-            # transaction (Hive's default posture — every DML runs in
-            # its own txn); anything else passes to the delegate
+            # hive-ACID layout is a one-statement transaction (Hive's
+            # default posture — every DML runs in its own txn);
+            # anything else passes to the delegate
             try:
                 parsed = self._parse_dml(sql_text, acid_only=True)
             except ValueError as e:
@@ -923,7 +935,7 @@ class TxnSessionManager:
                 # DML on any other table passes, parse errors included
                 return f"ERR_ENDED:{_sanitize(e)}"
             if parsed is not None:
-                return self._acid_autocommit(session_id, user, *parsed)
+                return self._autocommit(session_id, user, *parsed)
             return "PASS"  # stale Java-side flag: not in a txn
         if _COMMIT_RE.match(sql_text):
             return self._commit(session_id, ops)
@@ -951,7 +963,13 @@ class TxnSessionManager:
         ValueError for DML this surface refuses (see the module
         docstring). A MERGE may use only WHEN MATCHED [AND c] THEN
         UPDATE SET …/DELETE and one WHEN NOT MATCHED [AND c] THEN
-        INSERT [(cols)] VALUES (…)."""
+        INSERT [(cols)] VALUES (…).
+
+        DML behind a ``WITH`` clause is refused, not run: the op tuple
+        has no field for the CTEs. Outside a transaction the wire
+        never sends it here, because ``ACID_LIKE`` does not match
+        ``WITH``: routing every CTE query across py4j would slow the
+        non-transaction path."""
         words = sql_text.split(None, 5)
         verb = words[0].upper() if words else ""
         target = _dml_target(words)
@@ -975,10 +993,13 @@ class TxnSessionManager:
             refused = "unsupported MERGE clause: " if clauses else ""
             raise ValueError(f"{refused}{e}") from None
         kind = plan.nodeName()
-        if kind not in (
-            "InsertIntoStatement", "DeleteFromTable", "UpdateTable",
-            "MergeIntoTable",
-        ):
+        cte = kind == "UnresolvedWith" and (
+            plan.child().nodeName() in _DML_NODES
+        )
+        if cte:
+            plan = plan.child()
+            kind = plan.nodeName()
+        if kind not in _DML_NODES:
             if ours:  # e.g. INSERT … REPLACE WHERE, INSERT … DIRECTORY
                 raise ValueError(f"unsupported {verb} statement ({kind})")
             return None
@@ -991,6 +1012,11 @@ class TxnSessionManager:
         name = rel.multipartIdentifier().last().lower()
         if acid_only and name not in self._acid:
             return None
+        if cte:
+            raise ValueError(
+                "a WITH clause before INSERT/UPDATE/DELETE/MERGE is "
+                "not supported on this surface; inline the CTE"
+            )
 
         def piece(node) -> str | None:
             text = dml.text(plan, node)
@@ -1279,21 +1305,7 @@ class TxnSessionManager:
         cols = _columns(ent) if dynamic else list(ent["schema"])
         return _insert_frame(self.spark, body, cols, shape)
 
-    def _mm_dml_refusal(self, ent: dict, op: tuple) -> str | None:
-        if ent.get("insert_only") and op[0] in (
-            "update",
-            "delete",
-            "merge",
-        ):
-            return (
-                f"insert-only (MM) table '{ent['name']}' has no row "
-                "identities: UPDATE/DELETE/MERGE need a full-ACID "
-                "table (HIVE-14535 — MM tables accept INSERT and "
-                "INSERT OVERWRITE only)"
-            )
-        return None
-
-    def _txn_snapshot(self, ent: dict, snap_cache: dict | None):
+    def _txn_snapshot(self, ent: dict, snap_cache: dict):
         """The transaction's ONE materialized identity snapshot of
         ``ent`` (built on first use, shared by every UPDATE/DELETE/
         MERGE statement targeting the table): semantics-equal to each
@@ -1303,8 +1315,6 @@ class TxnSessionManager:
         once per statement."""
         from layer_apache_hive_spark.sources.hive_acid import read_hive_acid
 
-        if snap_cache is None:
-            return None  # single-statement caller: writers self-read
         key = ent["name"]
         if key not in snap_cache:
             vw = self.ledger.valid_writeids(
@@ -1334,9 +1344,9 @@ class TxnSessionManager:
         ent: dict,
         op: tuple,
         w: int,
-        stmt: int | None = None,
-        snap_cache: dict | None = None,
-        ws_out: dict | None = None,
+        stmt: int | None,
+        snap_cache: dict,
+        ws_out: dict,
     ) -> str:
         """Apply one statement's write under an ALLOCATED (still-open)
         writeid; the target scans for UPDATE/DELETE/MERGE read under
@@ -1344,9 +1354,9 @@ class TxnSessionManager:
         every other in-flight transaction — statement reads resolve
         against the committed pre-transaction state (no
         read-your-own-writes on this surface, Hive ACID's
-        statement-level snapshot). Inside a multi-statement COMMIT,
-        ``snap_cache`` shares ONE materialized snapshot per table
-        across the row-level statements.
+        statement-level snapshot). ``snap_cache`` shares ONE
+        materialized snapshot per table across the transaction's
+        row-level statements.
 
         One path for every layout: an unpartitioned enrollment is a
         table with one implicit partition (the root), so the writers
@@ -1488,7 +1498,7 @@ class TxnSessionManager:
             empty = "no rows matched"
         else:  # pragma: no cover
             raise ValueError(f"unknown acid op {kind!r}")
-        if conflicts and paths and ws_out is not None:
+        if conflicts and paths:
             ws_out.setdefault(root, set()).update(
                 "*"
                 if pc is None
@@ -1497,67 +1507,35 @@ class TxnSessionManager:
             )
         return "+".join(os.path.relpath(p, root) for p in paths) or empty
 
-    def _acid_autocommit(
+    def _autocommit(
         self, session_id: str, user: str, name: str, op: tuple
     ) -> str:
-        """Bare DML against an enrolled acid layout: one
-        single-statement transaction — allocate a writeid through the
-        ledger (serialized across concurrent sessions), apply the
-        write, mark the writeid committed, re-publish the served view.
-        Any failure aborts the writeid, so a half-written statement is
-        never elected.
-
-        Locking (r13 task 6): the statement holds a real table lock
-        for its duration — EXCLUSIVE for INSERT OVERWRITE (refused
-        while any other session holds ANY lock: an open BEGIN block's
-        SHARED_WRITE blocks a concurrent IOW, Hive's DbLockManager
-        matrix), SHARED_WRITE otherwise. Its committed-writeid
-        snapshot is recorded before the write and validated at commit
-        (HIVE-13395) — a concurrent transaction that committed an
-        overlapping update/delete in the window aborts THIS one."""
-        ent = self._acid[name]
-        refusal = self._mm_dml_refusal(ent, op)
-        if refusal is not None:
-            return f"ERR_ENDED:{refusal}"
-        denial = self._authorize_op(user, name, op)
-        if denial is not None:
-            return f"ERR_ENDED:Authorization error: {denial}"
-        ltype = (
-            "EXCLUSIVE"
-            if op[0] == "insert" and op[1] == "overwrite"
-            else "SHARED_WRITE"
-        )
-        lock_token = f"{session_id}#stmt"
-        err = self._acquire_lock(lock_token, name, ltype, user)
-        if err is not None:
-            return f"ERR_ENDED:{err}"
+        """Bare DML on an enrolled hive-ACID table: a one-statement
+        transaction under its own ``<session>#stmt`` key. INSERT
+        OVERWRITE, which a BEGIN block refuses, runs here under an
+        EXCLUSIVE lock."""
+        key = f"{session_id}#stmt"
+        iow = op[0] == "insert" and op[1] == "overwrite"
         try:
-            return self._acid_autocommit_locked(ent, name, op)
+            refusal = self._admit(
+                key, user, name, op, "EXCLUSIVE" if iow else "SHARED_WRITE"
+            )
+            if refusal is not None:
+                return f"ERR_ENDED:{refusal}"
+            try:
+                (w,), (desc,) = self._commit_acid(
+                    [(name, op)], self._txn_snap[key]
+                )
+            except Exception as e:
+                if not hasattr(e, "writeids"):
+                    raise  # no writeid was aborted
+                return (
+                    f"ERR_ENDED:statement failed (writeid {e.writeids[0]} "
+                    f"aborted): {_sanitize(e)}"
+                )
+            return f"DONE:Committed writeid {w} ({desc} on '{name}')"
         finally:
-            self._release_session_locks(lock_token)
-
-    def _acid_autocommit_locked(
-        self, ent: dict, name: str, op: tuple
-    ) -> str:
-        snapshot = self.ledger.committed_ids(ent["root"])
-        w = self.ledger.allocate(ent["root"])
-        write_sets: dict[str, set] = {}
-        try:
-            desc = self._apply_acid_op(ent, op, w, ws_out=write_sets)
-            self.ledger.commit(
-                ent["root"],
-                w,
-                write_set=write_sets.get(ent["root"]),
-                snapshot=snapshot,
-            )
-        except Exception as e:
-            self.ledger.abort(ent["root"], w)
-            return (
-                f"ERR_ENDED:statement failed (writeid {w} aborted): "
-                f"{_sanitize(e)}"
-            )
-        self._republish_acid(ent)
-        return f"DONE:Committed writeid {w} ({desc} on '{name}')"
+            self._end_session(key)
 
     def _abort_if_doomed(
         self,
@@ -1599,10 +1577,7 @@ class TxnSessionManager:
         )
 
         root = ent["root"]
-        snap_ids = snapshots.get(root)
-        if snap_ids is None:
-            return
-        cands = self.ledger.committed_write_sets_since(root, snap_ids)
+        cands = self.ledger.committed_write_sets_since(root, snapshots[root])
         if not cands:
             return
         row_ops = [op for op in t_ops if op[0] in ("update", "delete")]
@@ -1630,16 +1605,19 @@ class TxnSessionManager:
             ours.update(r["__tok"] for r in rows)
             if "*" in ours:
                 break
+        if not ours:  # no row to touch: validation has nothing to test
+            return
         for w2 in sorted(cands):
             theirs = cands[w2]
             if "*" in ours or "*" in theirs or (ours & set(theirs)):
                 raise HiveWriteConflictError(root, w2, theirs)
 
     def _commit_acid(
-        self, ops: list[tuple], snapshots: dict | None = None
-    ) -> str:
-        """COMMIT of a transaction whose buffered statements all
-        target enrolled acid layouts: per touched table, ONE writeid;
+        self, ops: list[tuple], snapshots: dict
+    ) -> tuple[list[int], list[str]]:
+        """COMMIT of a transaction — a BEGIN block's or a bare
+        statement's — whose statements all target enrolled acid
+        layouts: per touched table, ONE writeid;
         a single statement appends the plain ``delta_W_W`` (or
         delete_delta), several append per-statement
         ``delta_W_W_ssss`` dirs (Hive's multi-statement layout — the
@@ -1659,45 +1637,40 @@ class TxnSessionManager:
         writeid committed since the snapshot carries an overlapping
         update/delete write set; on conflict every writeid of THIS
         transaction aborts (first-committer-wins) and the conflict
-        error surfaces."""
+        error surfaces.
+
+        Returns the writeids and every statement's dir description.
+        An error raised after allocation carries the aborted writeids
+        as its ``writeids`` attribute."""
         per_table: dict[str, list[tuple]] = {}
         for table, op in ops:
             per_table.setdefault(table, []).append(op)
         written: list[str] = []
         pairs: list[tuple[str, int]] = []
         write_sets: dict[str, set] = {}
+        snap_cache: dict = {}
         try:
-            snap_cache: dict = {}
             for table, t_ops in per_table.items():
                 ent = self._acid[table]
                 w = self.ledger.allocate(ent["root"])
                 pairs.append((ent["root"], w))
-                self._abort_if_doomed(
-                    ent, t_ops, snapshots or {}, snap_cache
-                )
+                self._abort_if_doomed(ent, t_ops, snapshots, snap_cache)
                 for i, op in enumerate(t_ops):
-                    desc = self._apply_acid_op(
-                        ent,
-                        op,
-                        w,
-                        stmt=i if len(t_ops) > 1 else None,
-                        snap_cache=snap_cache,
-                        ws_out=write_sets,
-                    )
-                    written.append(desc)
+                    written.append(self._apply_acid_op(
+                        ent, op, w, i if len(t_ops) > 1 else None,
+                        snap_cache, write_sets,
+                    ))
             self.ledger.commit_many(
-                pairs, write_sets=write_sets, snapshots=snapshots or {}
+                pairs, write_sets=write_sets, snapshots=snapshots
             )
-        except Exception:
+        except Exception as e:
             if pairs:
                 self.ledger.abort_many(pairs)
+                e.writeids = [w for _, w in pairs]
             raise
         for table in per_table:
             self._republish_acid(self._acid[table])
-        return (
-            f"DONE:Committed {len(ops)} statements to "
-            f"{len(per_table)} acid tables ({', '.join(written) or 'no rows'})"
-        )
+        return [w for _, w in pairs], written
 
     def _compact_statement(
         self, session_id: str, user: str, m: "re.Match[str]"
@@ -2105,9 +2078,60 @@ class TxnSessionManager:
 
     # -- buffering + commit ------------------------------------------------
 
+    def _admit(
+        self, session: str, user: str, table: str, op: tuple, ltype: str
+    ) -> str | None:
+        """Admit one DML statement into ``session``'s transaction (a
+        BEGIN block's, or a bare statement's own): the refusal without
+        its reply prefix, or None. Every target passes the one-store
+        rule and the grant check under ``user``; a hive-ACID target
+        also the MM refusal, the ``ltype`` table lock and the
+        committed-writeid baseline that commit-time write-set
+        validation tests against (HIVE-13395, r13 task 2)."""
+        ent = self._acid.get(table)
+        if ent is not None and ent.get("insert_only") and op[0] != "insert":
+            return (
+                f"insert-only (MM) table '{table}' has no row "
+                "identities: UPDATE/DELETE/MERGE need a full-ACID "
+                "table (HIVE-14535 — MM tables accept INSERT and "
+                "INSERT OVERWRITE only)"
+            )
+        # one transaction, one store: catalog commits are atomic via a
+        # single exclusive-create, acid commits via per-dir renames —
+        # mixing them would promise an atomicity that does not exist
+        # across the two mechanisms, so it is refused honestly
+        if any(
+            (t in self._acid) != (ent is not None)
+            for t, _ in self._open.get(session, ())
+        ):
+            return (
+                "this transaction already targets the "
+                f"{'catalog' if ent else 'hive-acid'} store; one "
+                "transaction cannot atomically span both stores"
+            )
+        try:
+            denial = self._authorize_op(user, table, op)
+        except Exception as e:
+            # an analysis error in ONE statement (typo'd table in an
+            # INSERT body, malformed expression) refuses that
+            # statement; a BEGIN block stays open (r8 advisor)
+            return f"statement rejected (analysis error): {_sanitize(e)}"
+        if denial is not None:
+            return f"Authorization error: {denial}"
+        if ent is None:
+            return None
+        # a real lock (r13 task 6): a concurrent session's conflicting
+        # lock refuses the statement
+        err = self._acquire_lock(session, table, ltype, user)
+        if err is not None:
+            return err
+        self._txn_snap.setdefault(session, {}).setdefault(
+            ent["root"], self.ledger.committed_ids(ent["root"])
+        )
+        return None
+
     def _buffer(self, session_id: str, table: str, op: tuple) -> str:
-        is_acid = table in self._acid
-        if is_acid:
+        if table in self._acid:
             if op[0] == "insert" and op[1] == "overwrite":
                 # IOW writes base_W — a whole-table rewrite cannot be
                 # one STATEMENT of a multi-statement writeid (the
@@ -2118,9 +2142,6 @@ class TxnSessionManager:
                     "is a single-statement transaction; COMMIT or "
                     "ROLLBACK first, then run it bare"
                 )
-            refusal = self._mm_dml_refusal(self._acid[table], op)
-            if refusal is not None:
-                return f"ERR_ACTIVE:{refusal}"
         elif table not in self.catalog.resolve():
             return (
                 f"ERR_ACTIVE:table '{table}' is not enrolled in the "
@@ -2133,56 +2154,12 @@ class TxnSessionManager:
                 "only on this surface (catalog tables take "
                 "INSERT/UPDATE/DELETE)"
             )
-        # one transaction, one store: catalog commits are atomic via a
-        # single exclusive-create, acid commits via per-dir renames —
-        # mixing them would promise an atomicity that does not exist
-        # across the two mechanisms, so it is refused honestly
-        mixed = any(
-            (t in self._acid) != is_acid
-            for t, _ in self._open[session_id]
+        refusal = self._admit(
+            session_id, self._txn_user.get(session_id, ""), table, op,
+            "SHARED_WRITE",
         )
-        if mixed:
-            return (
-                "ERR_ACTIVE:this transaction already targets the "
-                f"{'catalog' if is_acid else 'hive-acid'} store; one "
-                "transaction cannot atomically span both stores"
-            )
-        try:
-            denial = self._authorize_op(
-                self._txn_user.get(session_id, ""), table, op
-            )
-        except Exception as e:
-            # an analysis error in ONE statement (typo'd table in an
-            # INSERT body, malformed expression) refuses that
-            # statement but keeps the transaction open — previously
-            # the handle() catch-all dropped the whole buffer with
-            # ERR_ENDED, inconsistent with the ERR_ACTIVE posture of
-            # every other statement-level refusal (r8 advisor)
-            return (
-                f"ERR_ACTIVE:statement rejected (analysis error): "
-                f"{_sanitize(e)}"
-            )
-        if denial is not None:
-            return f"ERR_ACTIVE:Authorization error: {denial}"
-        if is_acid:
-            # real lock acquisition (r13 task 6): SHARED_WRITE on the
-            # target — a concurrent session's EXCLUSIVE (in-flight
-            # IOW) refuses the statement, the transaction stays open
-            err = self._acquire_lock(
-                session_id,
-                table,
-                "SHARED_WRITE",
-                self._txn_user.get(session_id, ""),
-            )
-            if err is not None:
-                return f"ERR_ACTIVE:{err}"
-            # the transaction's committed-writeid snapshot for this
-            # table, recorded at its FIRST statement against it — the
-            # write-set validation baseline (HIVE-13395, r13 task 2)
-            ent = self._acid[table]
-            self._txn_snap.setdefault(session_id, {}).setdefault(
-                ent["root"], self.ledger.committed_ids(ent["root"])
-            )
+        if refusal is not None:
+            return f"ERR_ACTIVE:{refusal}"
         self._open[session_id].append((table, op))
         n = len(self._open[session_id])
         return f"ACTIVE:Buffered statement {n} for table '{table}'"
@@ -2194,13 +2171,17 @@ class TxnSessionManager:
         if not ops:
             self._release_session_locks(session_id)
             return "DONE:Nothing to commit (empty transaction)"
-        if ops[0][0] in self._acid:  # homogeneity enforced at _buffer
+        if ops[0][0] in self._acid:  # homogeneity enforced at _admit
             try:
-                return self._commit_acid(ops, snaps)
+                ws, written = self._commit_acid(ops, snaps)
             except Exception as e:
                 return f"ERR_ENDED:commit failed: {_sanitize(e)}"
             finally:
                 self._release_session_locks(session_id)
+            return (
+                f"DONE:Committed {len(ops)} statements to {len(ws)} "
+                f"acid tables ({', '.join(written) or 'no rows'})"
+            )
         # compose per-table transforms in statement order; evaluation
         # happens inside TransactionCatalog.commit against the catalog
         # snapshot pinned at commit (rebased on conflict)

@@ -725,6 +725,41 @@ def test_wire_dml_layout_parity(spark, tmp_path, layout):
     for sql, expect in script:
         out = mgr.handle("s1", sql)
         assert out.startswith(expect), (sql, out)
+    # a bare statement is a one-statement transaction: each statement
+    # run as BEGIN; <statement>; COMMIT on a twin table leaves the same
+    # dirs, ledger records and rows
+    twin_root = str(tmp_path / "twin")
+    os.makedirs(twin_root)
+    twin = f"twin_{layout}"
+    mgr.enroll_hive_acid(
+        twin, twin_root, SCHEMA, _fields(), n_buckets=2,
+        partition_col="p" if part else None,
+    )
+    for sql, _ in script:
+        assert mgr.handle("b1", "BEGIN").startswith("ACTIVE:")
+        out = mgr.handle("b1", sql.replace(name, twin))
+        assert out.startswith("ACTIVE:Buffered"), (sql, out)
+        out = mgr.handle("b1", "COMMIT")
+        assert out.startswith("DONE:Committed 1 statements"), (sql, out)
+
+    def tree(r):
+        return sorted(os.path.relpath(d, r) for d, _, _ in os.walk(r))
+
+    def records(r):
+        with open(tmp_path / "ledger.jsonl") as fh:
+            lines = [ln.strip() for ln in fh]
+        return [ln.replace(r, "R") for ln in lines if r in ln]
+
+    def table_rows(r):
+        return sorted(tuple(x) for x in read_hive_acid(
+            spark, r, SCHEMA, valid_writeids=led.valid_writeids(r),
+            partition_col="p" if part else None,
+        ).collect())
+
+    assert tree(twin_root) == tree(root)
+    assert len(records(root)) == 8  # open + committed per writeid
+    assert records(twin_root) == records(root)
+    assert table_rows(twin_root) == table_rows(root)
     out = mgr.handle(
         "s1",
         f"MERGE INTO {name} t USING parity_dup s ON t.k = s.k "
@@ -878,6 +913,133 @@ def test_exclusive_iow_lock_lifecycle(spark, mgr13):
     )
     assert out.startswith("DONE:"), out
     assert _view13(spark) == {(9, 9.0)}
+
+
+#: (winner's statements, loser's statements) over keys 1 and 3 in
+#: partition X, 2 and 4 in Y. Both blocks open before either commits
+#: (the loser buffers first); the winner commits, then the loser.
+_PROBE_SCENARIOS = {
+    "update_same_rows": (
+        ["UPDATE {t} SET price = 100.0 WHERE k = 1"],
+        ["UPDATE {t} SET price = 200.0 WHERE k = 1"],
+    ),
+    "update_disjoint_partitions": (
+        ["UPDATE {t} SET price = 100.0 WHERE k = 1"],
+        ["UPDATE {t} SET price = 200.0 WHERE k = 2"],
+    ),
+    "update_vs_delete": (
+        ["UPDATE {t} SET price = 0.0 WHERE k = 3"],
+        ["DELETE FROM {t} WHERE k = 3"],
+    ),
+    # the loser's UPDATE reads the table as of its COMMIT, finds no
+    # row and writes nothing, so nothing can conflict
+    "delete_vs_update": (
+        ["DELETE FROM {t} WHERE k = 3"],
+        ["UPDATE {t} SET price = 0.0 WHERE k = 3"],
+    ),
+    "mixed_insert_update": (
+        ["INSERT INTO {t} VALUES (10, 'n', 10.0{X})",
+         "UPDATE {t} SET price = 100.0 WHERE k = 2"],
+        ["INSERT INTO {t} VALUES (11, 'm', 11.0{Y})",
+         "UPDATE {t} SET price = 200.0 WHERE k = 99",
+         "UPDATE {t} SET price = 300.0 WHERE k = 4"],
+    ),
+    "key_moves_partition": (
+        ["DELETE FROM {t} WHERE k = 1",
+         "INSERT INTO {t} VALUES (1, 'moved', 1.0{Y})"],
+        ["UPDATE {t} SET price = 200.0 WHERE k = 1"],
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_abort_if_doomed_probe_matches_post_write_validation(
+    spark, tmp_path, monkeypatch, layout
+):
+    """The first-committer-wins pre-check only fast-fails a COMMIT
+    that the validation in ``commit_many`` would abort anyway. Each
+    scenario runs as is and with the pre-check stubbed out: the
+    loser's COMMIT outcome, the ledger entries and the rows must
+    agree, and a conflict found by the pre-check writes no loser
+    dirs."""
+    from layer_apache_hive_spark.acid import TransactionCatalog
+    from layer_apache_hive_spark.txn import TxnSessionManager
+
+    part = layout == "partitioned"
+    pcol = "p" if part else None
+    values = {v: f", '{v}'" if part else "" for v in "XY"}
+    seed = "INSERT INTO {t} VALUES " + ", ".join(
+        f"({k}, 's', {k}.0{values[v]})"
+        for k, v in [(1, "X"), (2, "Y"), (3, "X"), (4, "Y")]
+    )
+
+    def run(scenario, probe):
+        d = tmp_path / f"{scenario}_{probe}"
+        d.mkdir()
+        led = HiveWriteIdLedger(str(d / "ledger.jsonl"))
+        mgr = TxnSessionManager(
+            spark, TransactionCatalog(str(d / "cat")),
+            publish=False, ledger=led,
+        )
+        if not probe:
+            monkeypatch.setattr(mgr, "_abort_if_doomed", lambda *a: None)
+        root = str(d / "t")
+        os.makedirs(root)
+        mgr.enroll_hive_acid(
+            "probe_t", root, SCHEMA, _fields(), n_buckets=1,
+            partition_col=pcol,
+        )
+
+        def sql(text):
+            return text.format(t="probe_t", **values)
+
+        assert mgr.handle("s0", sql(seed)).startswith("DONE:")
+        winner, loser = _PROBE_SCENARIOS[scenario]
+        for sid, stmts in (("L", loser), ("W", winner)):
+            assert mgr.handle(sid, "BEGIN").startswith("ACTIVE:")
+            for text in stmts:
+                out = mgr.handle(sid, sql(text))
+                assert out.startswith("ACTIVE:Buffered"), (text, out)
+        assert mgr.handle("W", "COMMIT").startswith("DONE:")
+        out = mgr.handle("L", "COMMIT")
+        if out.startswith("ERR_ENDED:") and "conflict" in out:
+            outcome = "conflict"
+        else:
+            assert out.startswith("DONE:"), out
+            outcome = "DONE"
+        entries = led.entries(root)
+        loser_dirs = [
+            d for d, _, _ in os.walk(root)
+            if f"_{max(entries):07d}_" in os.path.basename(d)
+        ]
+        rows = sorted(
+            tuple(r) for r in read_hive_acid(
+                spark, root, SCHEMA,
+                valid_writeids=led.valid_writeids(root),
+                partition_col=pcol,
+            ).collect()
+        )
+        return outcome, entries, rows, loser_dirs
+
+    outcomes = {}
+    for scenario in _PROBE_SCENARIOS:
+        outcome, entries, rows, dirs = run(scenario, probe=True)
+        outcome2, entries2, rows2, dirs2 = run(scenario, probe=False)
+        assert (outcome, entries, rows) == (outcome2, entries2, rows2), (
+            scenario
+        )
+        if outcome == "conflict":
+            assert dirs == [] and dirs2 != [], (scenario, dirs, dirs2)
+        outcomes[scenario] = outcome
+    # the scenarios reach both outcomes on each layout
+    assert outcomes == {
+        "update_same_rows": "conflict",
+        "update_disjoint_partitions": "DONE" if part else "conflict",
+        "update_vs_delete": "conflict",
+        "delete_vs_update": "DONE",
+        "mixed_insert_update": "conflict",
+        "key_moves_partition": "DONE" if part else "conflict",
+    }
 
 
 # --- part 4: ledger-minted streaming ingest (r13 verdict task 3) -------------

@@ -205,3 +205,48 @@ def test_scoped_merge_may_name_the_partition_column(
         partition_col="p",
     ).collect()
     assert [(r.k, r.price, r.p) for r in rows] == [(2, 5.0, "Y")]
+
+
+def test_cte_prefixed_dml_is_refused_not_run(spark, tmp_path):
+    """DML behind a WITH clause parses to a CTE node over the DML node.
+    Its target is read from that child, and the statement is refused:
+    inside a block the block stays open, a bare statement on an
+    enrolled table ends with ERR_ENDED, and nothing is written."""
+    mgr, led, root, name = _enrolled(spark, tmp_path, "flat")
+    out = mgr.handle("s1", f"INSERT INTO {name} VALUES (1, 'a', 1.0)")
+    assert out.startswith("DONE:Committed writeid 1"), out
+
+    def tree():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, files in os.walk(root) for f in files + [""]
+        )
+
+    before = tree()
+    cte = "WITH c AS (SELECT 2L AS k, 'b' AS status, 2.0D AS price) "
+    statements = [
+        f"{cte}INSERT INTO {name} SELECT * FROM c",
+        f"{cte}UPDATE {name} SET price = 9.0 WHERE k IN (SELECT k FROM c)",
+        f"{cte}DELETE FROM {name} WHERE k IN (SELECT k FROM c)",
+        f"{cte}MERGE INTO {name} t USING c ON t.k = c.k "
+        "WHEN MATCHED THEN DELETE",
+    ]
+    assert mgr.handle("t1", "BEGIN").startswith("ACTIVE:")
+    for sql in statements:
+        out = mgr.handle("t1", sql)
+        assert out.startswith("ERR_ACTIVE:") and "WITH" in out, (sql, out)
+    out = mgr.handle("t1", f"DELETE FROM {name} WHERE k = 7")
+    assert out == f"ACTIVE:Buffered statement 1 for table '{name}'", out
+    assert mgr.handle("t1", "ROLLBACK").startswith("DONE:")
+    for sql in statements:
+        out = mgr.handle("s1", sql)
+        assert out.startswith("ERR_ENDED:") and "WITH" in out, (sql, out)
+    assert mgr.handle("s1", f"{cte}INSERT INTO plain_t SELECT * FROM c") == (
+        "PASS"
+    )
+    assert tree() == before
+    assert led.entries(root) == {1: "committed"}
+    rows = read_hive_acid(
+        spark, root, SCHEMA, valid_writeids=led.valid_writeids(root)
+    ).collect()
+    assert [(r.k, r.status, r.price) for r in rows] == [(1, "a", 1.0)]
