@@ -79,25 +79,22 @@ def _write_version_dirs(
     payload_fields,
 ) -> None:
     """Emit one writeid's insert (and, when given, delete) events into
-    ``data_dir`` / ``delete_dir`` in ONE job: the one-job writer over a
-    table with one implicit partition (``__pkey`` ''), writing the dirs
-    in place (scratch dir = final dir). Dirs of a kind with no rows are
-    never created (AcidUtils tolerates empty dirs, Hive never emits
-    them)."""
+    ``data_dir`` / ``delete_dir`` (siblings under one parent) in ONE
+    job: the one-job writer over a table with one implicit partition
+    (``__pkey`` ''), so the dirs are staged and renamed into place
+    like every DML write. Dirs of a kind with no rows are never
+    created (AcidUtils tolerates empty dirs, Hive never emits them)."""
     types = dict(events.dtypes)
-    dirs = {False: data_dir, True: delete_dir}
-
-    def in_place(_pkey, is_del):
-        return dirs[is_del]
-
     _write_acid_dirs_one_job(
         _union_insert_delete(
             events.withColumn("__pkey", F.lit("")),
             None if dels is None else dels.withColumn("__pkey", F.lit("")),
             [(n, types[n]) for n, _ in payload_fields],
         ),
-        in_place,
-        in_place,
+        os.path.dirname(data_dir),
+        None,
+        os.path.basename(data_dir),
+        None if delete_dir is None else os.path.basename(delete_dir),
         payload_fields,
     )
 
@@ -163,27 +160,48 @@ _CARD_MSG = (
 )
 
 
+def _scratch_of(final: str) -> str:
+    """Where ``final`` is staged: ``.scratch_<name>`` beside it. The
+    dot keeps it out of every election, listing and Cleaner pass."""
+    return os.path.join(
+        os.path.dirname(final), ".scratch_" + os.path.basename(final)
+    )
+
+
+def _move_into_place(scratch: str, final: str) -> None:
+    """Rename a staged dir to its final name. A ``base_*`` replaces a
+    same-named dir (INSERT OVERWRITE, a re-run fold); a delta or
+    delete_delta never does (the rename fails on a non-empty one)."""
+    if os.path.basename(final).startswith("base_"):
+        shutil.rmtree(final, ignore_errors=True)
+    os.rename(scratch, final)
+
+
 def _write_acid_dirs_one_job(
     unioned: DataFrame,
-    scratch_of,
-    final_of,
+    root: str,
+    partition_col: str | None,
+    ins_name: str,
+    del_name: str | None,
     payload_fields,
-    replace_final: bool = False,
     synth_rid: "tuple[str, int] | None" = None,
 ) -> list[str]:
     """Write EVERY (partition, kind, bucket) group of one writeid's
     events in ONE distributed job (guide §2.4: the per-partition /
     per-kind write loop was one full Spark job per dir — a
-    P-partition UPDATE paid 2·P jobs; this pays one). Tasks group by
-    (__pkey, __del, __bucket), create their scratch dir on demand and
-    write ``bucket_NNNNN`` via pyarrow.orc with the same sorted-run
-    contract as ``_write_version_dirs``; the driver then atomically
-    renames each TOUCHED scratch dir into place (a crash mid-job
-    leaves only invisible scratch dirs — the protocol is unchanged,
-    just batched). ``scratch_of``/``final_of`` map
-    (pkey, is_del) → absolute dir. Returns the renamed final dirs,
-    delete_delta before delta within each partition, partitions in
-    sorted order (NULL's token sorts as its literal spelling).
+    P-partition UPDATE paid 2·P jobs; this pays one), and the only
+    code that makes an ACID dir visible. Each group's dir is
+    ``root[/<partition_col>=<token>]/<ins_name | del_name>``; tasks
+    group by (__pkey, __del, __bucket), write ``bucket_NNNNN`` via
+    pyarrow.orc sorted by (otid, rid) into that dir's scratch
+    (_scratch_of), and the driver renames each TOUCHED scratch dir
+    into place (_move_into_place). A stale scratch dir of the same
+    name is cleared first; a failed job or a fired MERGE cardinality
+    guard removes this write's scratch dirs and renames nothing, so
+    a crash or failure never leaves a partial dir under a live name.
+    Returns the renamed final dirs, delete_delta before delta within
+    each partition, partitions in sorted order (NULL's token sorts
+    as its literal spelling).
 
     ``synth_rid`` = (bucket_col, rid_offset): insert events arrive
     with NULL ``__rid`` and each task assigns write-order ordinals
@@ -194,6 +212,26 @@ def _write_acid_dirs_one_job(
     row_number partitioned by exactly this group ordered by the same
     column."""
     import pandas as pd  # noqa: F401  (imported for executors' env)
+
+    def final_of(pkey: str, is_del: bool) -> str:
+        pdir = (
+            root
+            if partition_col is None
+            else os.path.join(root, f"{partition_col}={pkey}")
+        )
+        return os.path.join(pdir, del_name if is_del else ins_name)
+
+    def clear_scratch() -> None:
+        pdirs = (
+            [root]
+            if partition_col is None
+            else [d for _v, d in partition_dirs(root, partition_col)]
+        )
+        for pdir in pdirs:
+            for name in filter(None, (ins_name, del_name)):
+                shutil.rmtree(
+                    _scratch_of(os.path.join(pdir, name)), ignore_errors=True
+                )
 
     def write_one(key, pdf):
         import numpy as np
@@ -211,7 +249,7 @@ def _write_acid_dirs_one_job(
             pdf = pdf.sort_values(bcol, kind="mergesort")
             pdf["__rid"] = np.arange(len(pdf), dtype="int64") + roff
         pdf = pdf.sort_values(["__otid", "__rid"])
-        sdir = scratch_of(pkey, is_del)
+        sdir = _scratch_of(final_of(pkey, is_del))
         os.makedirs(sdir, exist_ok=True)
         pa_orc.write_table(
             _acid_arrow_table(pdf, payload_fields, is_del),
@@ -221,27 +259,30 @@ def _write_acid_dirs_one_job(
             {"pkey": [pkey], "is_del": [is_del], "rows": [len(pdf)]}
         )
 
-    manifest = (
-        unioned.groupBy("__pkey", "__del", "__bucket")
-        .applyInPandas(write_one, "pkey string, is_del boolean, rows long")
-        .collect()
-    )
-    if any(r["pkey"] == _CARD_SENTINEL and r["rows"] for r in manifest):
-        # a MERGE cardinality guard fired: no rename happens, the
-        # scratch dirs stay invisible, the caller aborts the writeid —
-        # exactly the pre-write take() path's outcome
-        raise ValueError(_CARD_MSG)
+    os.makedirs(root, exist_ok=True)
+    clear_scratch()
+    try:
+        manifest = (
+            unioned.groupBy("__pkey", "__del", "__bucket")
+            .applyInPandas(
+                write_one, "pkey string, is_del boolean, rows long"
+            )
+            .collect()
+        )
+        if any(r["pkey"] == _CARD_SENTINEL and r["rows"] for r in manifest):
+            # a MERGE cardinality guard fired: the caller aborts the
+            # writeid — exactly the pre-write take() path's outcome
+            raise ValueError(_CARD_MSG)
+    except BaseException:
+        clear_scratch()
+        raise
     touched = sorted(
         {(r["pkey"], r["is_del"]) for r in manifest if r["rows"]},
         key=lambda t: (t[0], not t[1]),  # per pkey: deletes first
     )
-    written: list[str] = []
-    for pkey, is_del in touched:
-        final = final_of(pkey, is_del)
-        if replace_final:
-            shutil.rmtree(final, ignore_errors=True)
-        os.rename(scratch_of(pkey, is_del), final)
-        written.append(final)
+    written = [final_of(pkey, is_del) for pkey, is_del in touched]
+    for final in written:
+        _move_into_place(_scratch_of(final), final)
     return written
 
 
@@ -1171,7 +1212,7 @@ def minor_compact_hive_acid(
         "__op int, __otid long, __bucket int, __rid long, __ctid long"
     )
     # both kinds in ONE write job; with no delta to merge, the insert
-    # side is empty and the writer removes its dir again
+    # side is empty and no delta dir is written
     _write_version_dirs(
         paths_df(deltas).mapInPandas(
             read_raw_inserts, f"{meta_ddl}, {payload_ddl}"
@@ -1948,43 +1989,6 @@ def next_writeid(root: str) -> int:
     return w + 1
 
 
-def append_delta(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    stmt: int | None = None,
-    n_buckets: int = 4,
-    bucket_col: str | None = None,
-) -> str | None:
-    """One committed INSERT transaction — or one STATEMENT of a
-    multi-statement transaction (``stmt`` names the dir
-    ``delta_W_W_ssss``) — as an ACID delta: identity assignment is
-    the exporter's per-bucket window inside the batch, and the commit
-    is scratch-write + atomic rename, the
-    evt_stream_hive_acid_ingest protocol (a crash mid-write leaves
-    only an invisible scratch dir). Statement dirs rely on disjoint
-    identity spaces across statements; Hive packs the statement id
-    into BucketCodec — here the rowId space is offset by
-    stmt × 2^40, same collision-freedom, raw-bucket storage model.
-    Returns the final dir path, or None when ``df`` is empty (Hive
-    writes no dir for an empty statement)."""
-    written = _write_acid_events(
-        root,
-        None,
-        df,
-        payload_schema,
-        payload_fields,
-        writeid,
-        stmt=stmt,
-        n_buckets=n_buckets,
-        bucket_col=bucket_col,
-    )
-    return written[0] if written else None
-
-
 # --- writeid ledger: the metastore TXNS analog (r12 verdict task 3) ---------
 
 
@@ -2354,7 +2358,6 @@ def _write_acid_events(
     n_buckets: int = 4,
     bucket_col: str | None = None,
     kind: str = "delta",
-    replace_final: bool = False,
     guard: DataFrame | None = None,
     partition_col: str | None = None,
 ) -> list[str]:
@@ -2367,7 +2370,7 @@ def _write_acid_events(
     token, kind, bucket); rowIds are write-order ordinals per
     (partition, bucket), offset by stmt × 2^40 for statement dirs.
     ``kind`` names the insert dir family (``delta`` | ``base`` for
-    INSERT OVERWRITE, with ``replace_final``). ``guard`` (one column,
+    INSERT OVERWRITE). ``guard`` (one column,
     any name): rows that must NOT exist — unioned into the write frame
     under _CARD_SENTINEL so the check rides the same job; any
     surviving row fails the statement before renames (the MERGE
@@ -2408,52 +2411,18 @@ def _write_acid_events(
             .withColumn("__op", F.lit(_OP_INSERT))
         )
     sfx = f"_{stmt:04d}" if stmt is not None else ""
-    del_scratch = f".scratch_dd_{writeid:07d}{sfx}"
-    ins_scratch = f".scratch_{kind}_{writeid:07d}{sfx}"
-    ins_final = (
-        f"base_{writeid:07d}"
-        if kind == "base"
-        else f"delta_{writeid:07d}_{writeid:07d}{sfx}"
-    )
-
-    def part_dir(pkey: str) -> str:
-        if partition_col is None:
-            return root
-        return os.path.join(root, f"{partition_col}={pkey}")
-
-    def scratch_of(pkey: str, is_del: bool) -> str:
-        return os.path.join(
-            part_dir(pkey), del_scratch if is_del else ins_scratch
-        )
-
-    def final_of(pkey: str, is_del: bool) -> str:
-        name = (
-            f"delete_delta_{writeid:07d}_{writeid:07d}{sfx}"
-            if is_del
-            else ins_final
-        )
-        return os.path.join(part_dir(pkey), name)
-
-    # stale-scratch hygiene: existing partition dirs only — new
-    # partitions can't hold debris
-    os.makedirs(root, exist_ok=True)
-    existing = (
-        [root]
-        if partition_col is None
-        else [d for _v, d in partition_dirs(root, partition_col)]
-    )
-    for pdir in existing:
-        for name in (del_scratch, ins_scratch):
-            shutil.rmtree(os.path.join(pdir, name), ignore_errors=True)
     unioned = _union_insert_delete(events, dels, payload_schema)
     if guard is not None:
         unioned = unioned.unionByName(_guard_rows(guard, payload_schema))
     return _write_acid_dirs_one_job(
         unioned,
-        scratch_of,
-        final_of,
+        root,
+        partition_col,
+        f"base_{writeid:07d}"
+        if kind == "base"
+        else f"delta_{writeid:07d}_{writeid:07d}{sfx}",
+        f"delete_delta_{writeid:07d}_{writeid:07d}{sfx}",
         payload_fields,
-        replace_final=replace_final,
         synth_rid=(bucket_col, rid_offset),
     )
 
@@ -2488,54 +2457,44 @@ def hive_acid_insert(
     ``overwrite=True`` writes a ``base_W`` instead of a delta — per
     touched partition for a dynamic IOW, so it overwrites exactly the
     partitions present in the output (Hive's nonstrict dynamic-
-    overwrite rule). Returns the written dir paths."""
-    if partition_col is not None and static_value is None:
-        if partition_col not in df.columns:
+    overwrite rule). An overwrite of ONE partition with no rows still
+    writes an empty ``base_W`` (the old rows must hide: an empty base
+    elects like any other `[upstream: hive ql/io/AcidUtils
+    baseDir(writeId) — IOW-on-transactional, HIVE-14988]`). Returns
+    the written dir paths."""
+    if partition_col is not None:
+        if static_value is not None:
+            df = df.withColumn(partition_col, F.lit(str(static_value)))
+        elif partition_col not in df.columns:
             raise ValueError(
                 f"dynamic partitioned INSERT needs '{partition_col}' "
                 "in the SELECT output (Hive's last-column rule)"
             )
-        return _write_acid_events(
-            root,
-            None,
-            df,
-            payload_schema,
-            payload_fields,
-            writeid,
-            stmt=None if overwrite else stmt,
-            n_buckets=n_buckets,
-            bucket_col=bucket_col,
-            kind="base" if overwrite else "delta",
-            replace_final=overwrite,
-            partition_col=partition_col,
-        )
-    if partition_col is not None:
-        root = partition_subdir(root, partition_col, static_value)
-    if overwrite:
-        return [
-            hive_acid_overwrite(
-                spark,
-                root,
-                df,
-                payload_schema,
-                payload_fields,
-                writeid,
-                n_buckets=n_buckets,
-                bucket_col=bucket_col,
-            )
-        ]
-    p = append_delta(
-        spark,
+    written = _write_acid_events(
         root,
+        None,
         df,
         payload_schema,
         payload_fields,
         writeid,
-        stmt=stmt,
+        stmt=None if overwrite else stmt,
         n_buckets=n_buckets,
         bucket_col=bucket_col,
+        kind="base" if overwrite else "delta",
+        partition_col=partition_col,
     )
-    return [p] if p is not None else []
+    if overwrite and not written and (
+        partition_col is None or static_value is not None
+    ):
+        pdir = (
+            root
+            if partition_col is None
+            else partition_subdir(root, partition_col, static_value)
+        )
+        written = [os.path.join(pdir, f"base_{writeid:07d}")]
+        shutil.rmtree(written[0], ignore_errors=True)
+        os.makedirs(written[0])
+    return written
 
 
 def _target_snapshot(
@@ -2956,64 +2915,6 @@ def hive_acid_merge(
     )
 
 
-def hive_acid_overwrite(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    payload_schema: list[tuple[str, str]],
-    payload_fields,
-    writeid: int,
-    n_buckets: int = 4,
-    bucket_col: str | None = None,
-) -> str:
-    """``INSERT OVERWRITE`` on a transactional table: Hive writes a
-    NEW ``base_W`` (not a delta) whose election suppresses every
-    prior dir `[upstream: hive ql/io/AcidUtils baseDir(writeId) —
-    IOW-on-transactional, HIVE-14988]`; the Cleaner later drops the
-    superseded dirs. The base is written even when ``df`` is empty
-    (overwrite-to-empty must still hide the old rows — an empty base
-    elects like any other). Scratch + atomic rename."""
-    final = os.path.join(root, f"base_{writeid:07d}")
-    written = _write_acid_events(
-        root,
-        None,
-        df,
-        payload_schema,
-        payload_fields,
-        writeid,
-        n_buckets=n_buckets,
-        bucket_col=bucket_col,
-        kind="base",
-        replace_final=True,
-    )
-    if not written:  # empty overwrite: empty base (old rows must hide)
-        shutil.rmtree(final, ignore_errors=True)
-        os.makedirs(final, exist_ok=True)
-    return final
-
-
-def hive_mm_overwrite(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    writeid: int,
-    fmt: str = "parquet",
-) -> str:
-    """``INSERT OVERWRITE`` on an insert-only (MM) table: the new
-    state lands as a ``base_W`` of PLAIN format files (same IOW
-    semantics as full ACID, no event algebra — HIVE-14535's format
-    economy). Scratch + atomic rename; an empty overwrite writes an
-    empty base (the old rows must disappear)."""
-    os.makedirs(root, exist_ok=True)
-    final = os.path.join(root, f"base_{writeid:07d}")
-    scratch = os.path.join(root, f".mm_scratch_base_{writeid:07d}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    df.write.format(fmt).save(scratch)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(scratch, final)
-    return final
-
-
 # --- partitioned transactional layouts (r13 verdict task 1) ------------------
 #
 # Hive's transactional tables are overwhelmingly PARTITIONED: the layout is
@@ -3194,22 +3095,18 @@ def minor_compact_hive_mm(
         for f in sorted(os.listdir(d))
         if not f.startswith((".", "_"))
     ]
+    if files:
+        df = spark.read.format(fmt).load(files)
+    elif empty_schema is None:
+        return None
+    else:
+        df = spark.createDataFrame([], empty_schema)
     vsuffix = (
         f"_v{visibility_txn:07d}" if visibility_txn is not None else ""
     )
-    scratch = os.path.join(root, f".mm_minor_{lo:07d}_{hi:07d}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    if files:
-        spark.read.format(fmt).load(files).write.format(fmt).save(scratch)
-    else:
-        if empty_schema is None:
-            return None
-        spark.createDataFrame([], empty_schema).write.format(fmt).save(
-            scratch
-        )
-    final = os.path.join(root, f"delta_{lo:07d}_{hi:07d}{vsuffix}")
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(scratch, final)
+    _write_mm_dir(
+        df, os.path.join(root, f"delta_{lo:07d}_{hi:07d}{vsuffix}"), fmt
+    )
     return lo, hi
 
 
@@ -3246,9 +3143,9 @@ def compact_hive_mm(
 ) -> int:
     """MAJOR compaction of an insert-only table: rewrite the elected
     files into ``base_W`` `[upstream: hive ql/txn/compactor MM major
-    — a file merge, no event algebra]`. Scratch-write + atomic rename
-    (the delta-commit protocol); the Cleaner then drops superseded
-    dirs. Returns W (0 = nothing elected)."""
+    — a file merge, no event algebra]`, staged by _write_mm_dir; the
+    Cleaner then drops superseded dirs. Returns W (0 = nothing
+    elected)."""
     max_writeid, invalid = _effective_bounds(max_writeid, valid_writeids)
     data_dirs, _dels, _orig, bounds = _elect_dirs(
         root, max_writeid, invalid
@@ -3272,13 +3169,25 @@ def compact_hive_mm(
     vsuffix = (
         f"_v{visibility_txn:07d}" if visibility_txn is not None else ""
     )
-    scratch = os.path.join(root, f".mm_compact_{w:07d}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    df.write.format(fmt).save(scratch)
-    final = os.path.join(root, f"base_{w:07d}{vsuffix}")
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(scratch, final)
+    _write_mm_dir(df, os.path.join(root, f"base_{w:07d}{vsuffix}"), fmt)
     return w
+
+
+def _write_mm_dir(df: DataFrame, final: str, fmt: str) -> str:
+    """Write ``df`` as one insert-only (MM) dir of plain ``fmt`` files:
+    the MM twin of _write_acid_dirs_one_job's commit — the same
+    scratch name (a stale one is cleared; a failed write removes its
+    own) and the same replace rule (_move_into_place)."""
+    scratch = _scratch_of(final)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    shutil.rmtree(scratch, ignore_errors=True)
+    try:
+        df.write.format(fmt).save(scratch)
+    except BaseException:
+        shutil.rmtree(scratch, ignore_errors=True)
+        raise
+    _move_into_place(scratch, final)
+    return final
 
 
 def append_mm_delta(
@@ -3288,20 +3197,22 @@ def append_mm_delta(
     writeid: int,
     fmt: str = "parquet",
     stmt: int | None = None,
+    overwrite: bool = False,
 ) -> str:
     """One committed INSERT into an MM table: the batch lands as a
-    whole ``delta_W_W[_ssss]`` dir of plain format files —
-    scratch-write + atomic rename, same commit protocol as the ACID
-    writer but with NO identity assignment (insert-only rows carry no
-    ACID struct)."""
-    os.makedirs(root, exist_ok=True)
-    suffix = f"_{stmt:04d}" if stmt is not None else ""
-    final = os.path.join(root, f"delta_{writeid:07d}_{writeid:07d}{suffix}")
-    scratch = os.path.join(root, f".mm_scratch_{writeid:07d}{suffix}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    df.write.format(fmt).save(scratch)
-    os.rename(scratch, final)
-    return final
+    whole ``delta_W_W[_ssss]`` dir of plain format files, with NO
+    identity assignment (insert-only rows carry no ACID struct).
+    ``overwrite=True`` is ``INSERT OVERWRITE``: a ``base_W`` instead
+    (same IOW semantics as full ACID, no event algebra — HIVE-14535's
+    format economy); an empty overwrite writes an empty base, so the
+    old rows disappear."""
+    sfx = f"_{stmt:04d}" if stmt is not None else ""
+    name = (
+        f"base_{writeid:07d}"
+        if overwrite
+        else f"delta_{writeid:07d}_{writeid:07d}{sfx}"
+    )
+    return _write_mm_dir(df, os.path.join(root, name), fmt)
 
 
 def hive_stream_commit_batch(
@@ -3351,7 +3262,7 @@ def hive_stream_commit_batch(
         if insert_only:
             append_mm_delta(spark, root, batch_df, w, fmt=fmt)
         else:
-            append_delta(
+            hive_acid_insert(
                 spark,
                 root,
                 batch_df,
@@ -3737,7 +3648,7 @@ def scan_hive_acid_crash_recovery(
 
     ledger = HiveWriteIdLedger(ledger_path)
     w1 = ledger.allocate(root)
-    append_delta(
+    hive_acid_insert(
         spark, root, orders.filter(k % 3 == 0), _ORDERS_SCHEMA, fields, w1
     )
     ledger.commit(root, w1)
@@ -3745,11 +3656,11 @@ def scan_hive_acid_crash_recovery(
     # record — the exact on-disk state a crash between the last
     # rename and the ledger append leaves behind
     w2 = ledger.allocate(root)
-    append_delta(
+    hive_acid_insert(
         spark, root, orders.filter(k % 3 == 1),
         _ORDERS_SCHEMA, fields, w2, stmt=0,
     )
-    append_delta(
+    hive_acid_insert(
         spark, root, orders.filter(k % 3 == 2),
         _ORDERS_SCHEMA, fields, w2, stmt=1,
     )
@@ -4184,9 +4095,11 @@ class HiveAcidInitiator:
 
     Hive-compactor semantics kept:
 
-    * **Non-blocking.** Compaction writes NEW directories
-      (scratch-then-rename inside the workers); writers appending
-      later deltas are never blocked, readers keep electing.
+    * **Non-blocking.** A fold stages its output and renames it into
+      place; writers appending later deltas are never blocked,
+      readers keep electing, and a failed fold leaves the table as
+      it was. Its explicit request is marked 'failed' (Hive's
+      COMPACTION_QUEUE state) with the error as detail.
     * **The Cleaner defers for pinned readers.** A reader's plan pins
       the elected FILES at construction; dropping subsumed dirs under
       it is Hive's ValidTxnList violation. ``pin(root)`` registers an
@@ -4241,10 +4154,10 @@ class HiveAcidInitiator:
         self._lock = threading.RLock()
         #: compaction log rows — SHOW COMPACTIONS lifecycle: an
         #: explicit request enters as 'initiated' and flips to
-        #: 'succeeded' when its fold runs (Hive's COMPACTION_QUEUE
-        #: initiated→working→succeeded states, collapsed to the two
-        #: a synchronous fold can observe); threshold-elected folds
-        #: enter directly as 'succeeded'
+        #: 'succeeded' or 'failed' when its fold runs (Hive's
+        #: COMPACTION_QUEUE initiated→working→succeeded|failed states,
+        #: without the 'working' a synchronous fold never shows);
+        #: threshold-elected folds enter directly as 'succeeded'
         self.compactions: list[dict] = []
         #: root -> pending explicit request (ALTER TABLE ... COMPACT)
         self._requests: dict[str, dict] = {}
@@ -4435,48 +4348,54 @@ class HiveAcidInitiator:
             vw = self._vw(t)
             vfn = t.get("visibility_fn")
             vis = vfn() if (vfn is not None and kind) else None
-            if kind == "major":
-                detail = (
-                    compact_hive_mm(
-                        self.spark,
-                        root,
-                        t["fmt"],
-                        empty_schema=mm_schema,
-                        valid_writeids=vw,
-                        visibility_txn=vis,
+            try:
+                if kind == "major":
+                    detail = (
+                        compact_hive_mm(
+                            self.spark,
+                            root,
+                            t["fmt"],
+                            empty_schema=mm_schema,
+                            valid_writeids=vw,
+                            visibility_txn=vis,
+                        )
+                        if mm
+                        else compact_hive_acid(
+                            self.spark,
+                            root,
+                            t["schema"],
+                            t["fields"],
+                            valid_writeids=vw,
+                            visibility_txn=vis,
+                        )
                     )
-                    if mm
-                    else compact_hive_acid(
-                        self.spark,
-                        root,
-                        t["schema"],
-                        t["fields"],
-                        valid_writeids=vw,
-                        visibility_txn=vis,
+                    changed = True
+                elif kind == "minor":
+                    detail = (
+                        minor_compact_hive_mm(
+                            self.spark,
+                            root,
+                            t["fmt"],
+                            empty_schema=mm_schema,
+                            valid_writeids=vw,
+                            visibility_txn=vis,
+                        )
+                        if mm
+                        else minor_compact_hive_acid(
+                            self.spark,
+                            root,
+                            t["schema"],
+                            t["fields"],
+                            valid_writeids=vw,
+                            visibility_txn=vis,
+                        )
                     )
-                )
-                changed = True
-            elif kind == "minor":
-                detail = (
-                    minor_compact_hive_mm(
-                        self.spark,
-                        root,
-                        t["fmt"],
-                        empty_schema=mm_schema,
-                        valid_writeids=vw,
-                        visibility_txn=vis,
-                    )
-                    if mm
-                    else minor_compact_hive_acid(
-                        self.spark,
-                        root,
-                        t["schema"],
-                        t["fields"],
-                        valid_writeids=vw,
-                        visibility_txn=vis,
-                    )
-                )
-                changed = detail is not None
+                    changed = detail is not None
+            except Exception as e:
+                if req is not None:
+                    req["detail"], req["state"] = str(e), "failed"
+                    self._publish_compactions()
+                raise
             if changed:
                 done.append((root, kind, detail))
                 if req is not None:

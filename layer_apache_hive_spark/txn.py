@@ -1371,7 +1371,6 @@ class TxnSessionManager:
             hive_acid_insert,
             hive_acid_merge,
             hive_acid_update,
-            hive_mm_overwrite,
         )
 
         root = ent["root"]
@@ -1417,17 +1416,18 @@ class TxnSessionManager:
                     partition_col=pc,
                     **layout,
                 )
-            elif op[1] == "overwrite":
+            else:
                 paths = [
-                    hive_mm_overwrite(
-                        self.spark, root, df, w, fmt=ent["fmt"]
+                    append_mm_delta(
+                        self.spark,
+                        root,
+                        df,
+                        w,
+                        fmt=ent["fmt"],
+                        stmt=stmt,
+                        overwrite=op[1] == "overwrite",
                     )
                 ]
-            else:
-                p = append_mm_delta(
-                    self.spark, root, df, w, fmt=ent["fmt"], stmt=stmt
-                )
-                paths = [p] if p is not None else []
             empty = "empty statement, no delta"
         elif kind == "delete":
             paths = hive_acid_delete(

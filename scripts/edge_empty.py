@@ -24,13 +24,14 @@ import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from layer_apache_hive_spark.catalog import TABLES  # noqa: E402
 from layer_apache_hive_spark.registry import all_queries  # noqa: E402
 from layer_apache_hive_spark.session import get_spark  # noqa: E402
 
-EMPTY_DIR = "/root/repo/.tmp/empty_sf"
+EMPTY_DIR = f"{REPO}/.tmp/empty_sf"
 SRC_DIR = "/root/testdata/sf0.001"
 
 
@@ -73,7 +74,7 @@ def main() -> int:
     if not sys.argv[1:]:  # full runs record the committed artifact
         import json
 
-        with open("/root/repo/EMPTYCHECK.json", "w") as fh:
+        with open(f"{REPO}/EMPTYCHECK.json", "w") as fh:
             json.dump(
                 {
                     "total": len(ids),
@@ -88,7 +89,7 @@ def main() -> int:
                 fh,
                 indent=1,
             )
-        print("wrote /root/repo/EMPTYCHECK.json")
+        print(f"wrote {REPO}/EMPTYCHECK.json")
     return 1 if failures else 0
 
 

@@ -16,7 +16,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from layer_apache_hive_spark.plan_audit import audit, explain_formatted  # noqa: E402
 from layer_apache_hive_spark.registry import all_queries  # noqa: E402
@@ -93,7 +94,7 @@ def main() -> int:
     print(f"\n{bad} flagged / {len(ids)} audited")
 
     if write_summary and not args:
-        with open("/root/repo/PLAN_AUDIT.md", "w") as fh:
+        with open(f"{REPO}/PLAN_AUDIT.md", "w") as fh:
             fh.write(
                 "# PLAN_AUDIT — physical-plan fingerprints (sf0.01)\n\n"
                 "Generated by `scripts/explain_audit.py --summary`; the\n"
@@ -135,7 +136,7 @@ def main() -> int:
                     f" {fp['n_ops']} |"
                     f" {'; '.join(flags) if flags else 'ok'} |\n"
                 )
-        print("wrote /root/repo/PLAN_AUDIT.md")
+        print(f"wrote {REPO}/PLAN_AUDIT.md")
     return 0
 
 

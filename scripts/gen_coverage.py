@@ -6,9 +6,11 @@ Run after adding operators: `python scripts/gen_coverage.py`.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from layer_apache_hive_spark.registry import _REGISTRY, _load_all_modules  # noqa: E402
 
@@ -68,7 +70,7 @@ def main() -> None:
         f"\n**{len(_REGISTRY)} queries total; {n_oracle} oracle-verified, "
         f"{len(_REGISTRY) - n_oracle} rows-only.**",
     )
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(f"{REPO}/COVERAGE.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"COVERAGE.md: {len(_REGISTRY)} queries, {n_oracle} with oracles")
 

@@ -55,7 +55,8 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from layer_apache_hive_spark.extensions.similarity import (  # noqa: E402
     _lsh_params,
@@ -136,7 +137,7 @@ def main() -> int:
         if k == 1:
             corpus = args.sf_dir
         else:
-            corpus = f"/root/repo/.tmp/stress/{label}x{k}"
+            corpus = f"{REPO}/.tmp/stress/{label}x{k}"
             print(f"building {k}x corpus at {corpus} ...", flush=True)
             build_corpus(spark, args.sf_dir, corpus, k)
         t0 = time.monotonic()
@@ -171,7 +172,7 @@ def main() -> int:
         )
     spark.stop()
 
-    stress_path = "/root/repo/STRESS.json"
+    stress_path = f"{REPO}/STRESS.json"
     out = {}
     if os.path.exists(stress_path):
         with open(stress_path) as fh:

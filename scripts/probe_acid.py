@@ -30,7 +30,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -73,7 +74,7 @@ def main() -> int:
         " 'org.apache.spark.sql.delta.catalog.DeltaCatalog')"
         ".config('spark.ui.enabled', 'false').getOrCreate())\n"
         "s.range(3).write.format('delta').mode('overwrite')"
-        ".save('/root/repo/.tmp/probe_delta')\n"
+        f".save('{REPO}/.tmp/probe_delta')\n"
         "print('DELTA_WRITE_OK')\n"
     )
     try:
@@ -106,7 +107,7 @@ def main() -> int:
         )
     )
 
-    with open("/root/repo/PROBE_acid.json", "w") as f:
+    with open(f"{REPO}/PROBE_acid.json", "w") as f:
         json.dump(result, f)
     print(json.dumps(result))
     return 0

@@ -24,9 +24,11 @@ Usage: python scripts/probe_avro.py
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from layer_apache_hive_spark.session import get_spark  # noqa: E402
 
@@ -37,14 +39,14 @@ def main() -> int:
               "read_err": None}
     try:
         spark.range(3).write.mode("overwrite").format("avro").save(
-            "/root/repo/.tmp/probe_avro"
+            f"{REPO}/.tmp/probe_avro"
         )
         result["available"] = True
     except Exception as e:
         result["write_err"] = f"{type(e).__name__}: {str(e)[:300]}"
     if result["available"]:
         try:
-            spark.read.format("avro").load("/root/repo/.tmp/probe_avro").count()
+            spark.read.format("avro").load(f"{REPO}/.tmp/probe_avro").count()
         except Exception as e:
             result["available"] = False
             result["read_err"] = f"{type(e).__name__}: {str(e)[:300]}"

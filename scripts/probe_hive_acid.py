@@ -34,7 +34,8 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 _HELPER = r"""
 import glob, json, os, sys, tempfile, traceback
@@ -252,7 +253,7 @@ def main() -> int:
             " read-merge work in this sandbox; item closed in"
             " SURVEY.md §7"
         )
-    with open("/root/repo/PROBE_hive_acid.json", "w") as fh:
+    with open(f"{REPO}/PROBE_hive_acid.json", "w") as fh:
         json.dump(result, fh, indent=2)
         fh.write("\n")
     print(json.dumps(result, indent=2))

@@ -13,10 +13,12 @@ Usage: python scripts/profile_jobs.py <query_id> [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 

@@ -35,7 +35,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -164,7 +165,7 @@ def main() -> int:
     spark = get_spark()
     qs = all_queries()
     label = os.path.basename(args.sf_dir.rstrip("/"))
-    big_dir = f"/root/repo/.tmp/stress/{label}x{args.k}"
+    big_dir = f"{REPO}/.tmp/stress/{label}x{args.k}"
     print(f"building {args.k}x corpus at {big_dir} ...", flush=True)
     build_corpus(spark, args.sf_dir, big_dir, args.k)
 
@@ -226,8 +227,8 @@ def main() -> int:
         "n_superlinear": sum(r["superlinear"] for r in results.values()),
         "queries": results,
     }
-    if args.ids and os.path.exists("/root/repo/STRESS.json"):
-        with open("/root/repo/STRESS.json") as fh:
+    if args.ids and os.path.exists(f"{REPO}/STRESS.json"):
+        with open(f"{REPO}/STRESS.json") as fh:
             out = json.load(fh)
         # Legacy rows predate per-row k: stamp them with the file's
         # recorded k so the merged record states how EVERY row was
@@ -241,7 +242,7 @@ def main() -> int:
         )
         out["k"] = {rec["k"] for rec in out["queries"].values()}
         out["k"] = sorted(out["k"])[0] if len(out["k"]) == 1 else "per-row"
-    with open("/root/repo/STRESS.json", "w") as fh:
+    with open(f"{REPO}/STRESS.json", "w") as fh:
         json.dump(out, fh, indent=1)
     print(f"\nwrote STRESS.json — {out['n_superlinear']} superlinear")
     return 1 if out["n_superlinear"] else 0

@@ -34,7 +34,8 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -63,7 +64,7 @@ def main() -> int:
         if k == 1:
             corpus = args.sf_dir
         else:
-            corpus = f"/root/repo/.tmp/stress/{label}x{k}"
+            corpus = f"{REPO}/.tmp/stress/{label}x{k}"
             print(f"building {k}x corpus at {corpus} ...", flush=True)
             build_corpus(spark, args.sf_dir, corpus, k)
         t0 = time.monotonic()
@@ -112,7 +113,7 @@ def main() -> int:
         "ok": slope <= EXPONENT_CUT,
     }
 
-    stress_path = "/root/repo/STRESS.json"
+    stress_path = f"{REPO}/STRESS.json"
     out = {}
     if os.path.exists(stress_path):
         with open(stress_path) as fh:

@@ -39,7 +39,8 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from layer_apache_hive_spark.registry import all_queries  # noqa: E402
 from layer_apache_hive_spark.session import get_spark  # noqa: E402
@@ -152,7 +153,7 @@ def main() -> int:
     spark = get_spark(app_name="stress-recall")
     qs = all_queries()
     label = os.path.basename(args.sf_dir.rstrip("/"))
-    corpus = f"/root/repo/.tmp/stress/{label}x{args.k}"
+    corpus = f"{REPO}/.tmp/stress/{label}x{args.k}"
     print(f"building {args.k}x corpus at {corpus} ...", flush=True)
     build_corpus(spark, args.sf_dir, corpus, args.k)
 
@@ -238,7 +239,7 @@ def main() -> int:
     )
 
     t0 = time.monotonic()
-    base = "/root/repo/.tmp/stress/clustered"
+    base = f"{REPO}/.tmp/stress/clustered"
     pos = build_clustered_embeddings(args.sf_dir, f"{base}/pos")
     neg = build_clustered_embeddings(
         args.sf_dir, f"{base}/neg", scramble_labels=True
@@ -293,7 +294,7 @@ def main() -> int:
     )
     spark.stop()
 
-    stress_path = "/root/repo/STRESS.json"
+    stress_path = f"{REPO}/STRESS.json"
     out = {}
     if os.path.exists(stress_path):
         with open(stress_path) as fh:

@@ -22,13 +22,15 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from layer_apache_hive_spark.catalog import TABLES, table_path  # noqa: E402
@@ -40,7 +42,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--skip-smoke", action="store_true")
-    ap.add_argument("--json-out", default="/root/repo/CORRECTNESS_local.json")
+    ap.add_argument("--json-out", default=f"{REPO}/CORRECTNESS_local.json")
     ap.add_argument("ids", nargs="*")
     args = ap.parse_args()
 

@@ -32,7 +32,8 @@ import traceback
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from layer_apache_hive_spark.catalog import TABLES, table_path  # noqa: E402
@@ -67,7 +68,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument(
-        "--json-out", default="/root/repo/CORRECTNESS_driver_session.json"
+        "--json-out", default=f"{REPO}/CORRECTNESS_driver_session.json"
     )
     ap.add_argument("ids", nargs="*")
     args = ap.parse_args()

@@ -33,7 +33,7 @@ import tempfile
 import time
 import traceback
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SLICE = [

@@ -15,7 +15,7 @@ engine did not write itself, plus the wire DML/COMPACT surface.
 5. Statement dirs of one transaction are elected together, never
    subsume each other, and a stmt-less same-range delta (the minor
    compactor's output) subsumes them.
-6. append_delta/next_writeid — the wire-DML commit primitives.
+6. hive_acid_insert/next_writeid — the wire-DML commit primitives.
 7. TxnSessionManager's served-acid surface: bare INSERT auto-commits
    one delta, BEGIN/INSERT×2/COMMIT writes statement dirs, ROLLBACK
    leaves no dir, store mixing is refused, ALTER TABLE COMPACT
@@ -45,9 +45,9 @@ from layer_apache_hive_spark.sources.hive_acid import (
     _fixture_done,
     _fixture_ready,
     _parse_acid_name,
-    append_delta,
     clean_hive_acid,
     compact_hive_acid,
+    hive_acid_insert,
     minor_compact_hive_acid,
     next_writeid,
     read_hive_acid,
@@ -387,14 +387,14 @@ def test_append_delta_and_next_writeid(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "A", 1.0), (2, "A", 2.0)], "k long, status string, price double"
     )
-    p = append_delta(spark, root, df, SCHEMA, _fields(), 1, n_buckets=2)
+    [p] = hive_acid_insert(spark, root, df, SCHEMA, _fields(), 1, n_buckets=2)
     assert os.path.basename(p) == "delta_0000001_0000001"
     assert next_writeid(root) == 2
     # statement dirs: same writeid, disjoint rid spaces
-    p0 = append_delta(
+    [p0] = hive_acid_insert(
         spark, root, df.filter("k = 1"), SCHEMA, _fields(), 2, stmt=0
     )
-    p1 = append_delta(
+    [p1] = hive_acid_insert(
         spark, root, df.filter("k = 2"), SCHEMA, _fields(), 2, stmt=1
     )
     assert os.path.basename(p0) == "delta_0000002_0000002_0000"
@@ -405,8 +405,8 @@ def test_append_delta_and_next_writeid(spark, tmp_path):
     assert rids == {(2, 0), (2, 1 << 40)}
     # empty statement: no dir, no error
     assert (
-        append_delta(spark, root, df.limit(0), SCHEMA, _fields(), 3)
-        is None
+        hive_acid_insert(spark, root, df.limit(0), SCHEMA, _fields(), 3)
+        == []
     )
     assert next_writeid(root) == 3  # nothing on disk consumed id 3
     # an aborted dir still advances the allocator (monotone writeids)
@@ -439,7 +439,7 @@ def acid_mgr(spark, tmp_path):
     seed = spark.createDataFrame(
         [(1, "A", 1.0), (2, "A", 2.0)], "k long, status string, price double"
     )
-    append_delta(spark, root, seed, SCHEMA, _fields(), 1, n_buckets=2)
+    hive_acid_insert(spark, root, seed, SCHEMA, _fields(), 1, n_buckets=2)
     mgr.enroll_hive_acid("acid_orders", root, SCHEMA, _fields(), n_buckets=2)
     return mgr, root
 

@@ -36,12 +36,10 @@ from pyspark.sql import functions as F
 from layer_apache_hive_spark.sources.hive_acid import (
     HiveWriteIdLedger,
     ValidWriteIdList,
-    append_delta,
     append_mm_delta,
     clean_hive_acid,
     compact_hive_mm,
-    hive_acid_overwrite,
-    hive_mm_overwrite,
+    hive_acid_insert,
     next_writeid,
     read_hive_acid,
     read_hive_mm,
@@ -50,6 +48,16 @@ from layer_apache_hive_spark.sources.hive_acid import (
 from tests.test_round10_properties import SCHEMA, _fields
 
 MM_DDL = "k long, status string, price double"
+
+
+def _scratch_entries(root: str) -> list[str]:
+    """Every ``.scratch_*`` entry anywhere under ``root``."""
+    return [
+        os.path.join(d, e)
+        for d, dirs, files in os.walk(root)
+        for e in dirs + files
+        if e.startswith(".scratch_")
+    ]
 
 
 # --- 1. the writeid ledger ----------------------------------------------------
@@ -140,10 +148,10 @@ def test_ledger_in_flight_writeid_invisible_to_election(spark, tmp_path):
         [(1, "A", 1.0), (2, "B", 2.0)], MM_DDL
     )
     w1 = led.allocate(root)
-    append_delta(spark, root, df, SCHEMA, _fields(), w1)
+    hive_acid_insert(spark, root, df, SCHEMA, _fields(), w1)
     led.commit(root, w1)
     w2 = led.allocate(root)
-    append_delta(spark, root, df.withColumn("k", F.col("k") + 10), SCHEMA, _fields(), w2)
+    hive_acid_insert(spark, root, df.withColumn("k", F.col("k") + 10), SCHEMA, _fields(), w2)
     vw = led.valid_writeids(root)
     ks = {r.k for r in read_hive_acid(spark, root, SCHEMA, valid_writeids=vw).collect()}
     assert ks == {1, 2}  # w2 in flight: invisible
@@ -256,7 +264,7 @@ def mgr12(spark, tmp_path):
         [(1, "A", 1.0), (2, "A", 2.0), (3, "B", 3.0)], MM_DDL
     )
     w = led.allocate(root)
-    append_delta(spark, root, seed, SCHEMA, _fields(), w, n_buckets=2)
+    hive_acid_insert(spark, root, seed, SCHEMA, _fields(), w, n_buckets=2)
     led.commit(root, w)
     mgr.enroll_hive_acid("acid12", root, SCHEMA, _fields(), n_buckets=2)
     return mgr, root
@@ -429,7 +437,7 @@ def test_mm_wire_insert_casts_to_declared_schema(spark, mm_mgr12):
     """r11 advisor item 1: `INSERT ... VALUES (2, 'B', 2)` analyzes as
     int/int — written raw it lands incompatible parquet next to
     long/double files; the insert path must cast to the declared
-    schema for MM tables exactly as append_delta does for full ACID."""
+    schema for MM tables exactly as hive_acid_insert does for full ACID."""
     mgr, root = mm_mgr12
     out = mgr.handle(
         "m1", "INSERT INTO mm12 SELECT 2 AS k, 'B' AS s, 2 AS p"
@@ -506,6 +514,7 @@ def test_wire_merge_cardinality_violation_aborts(spark, mgr12):
     assert out.startswith("ERR_ENDED:") and "cardinality" in out, out
     assert mgr.ledger.aborted_ids(root) == frozenset({2})
     assert _view12(spark) == {(1, 1.0), (2, 2.0), (3, 3.0)}  # untouched
+    assert _scratch_entries(root) == []  # the aborted write's staging
 
 
 def test_wire_merge_in_txn_and_refusals(spark, mgr12, mm_mgr12):
@@ -668,14 +677,15 @@ def test_hive_acid_overwrite_elects_over_prior_dirs(spark, tmp_path):
     root = str(tmp_path / "t")
     os.makedirs(root)
     df = spark.createDataFrame([(1, "A", 1.0), (2, "B", 2.0)], MM_DDL)
-    append_delta(spark, root, df, SCHEMA, _fields(), 1)
-    hive_acid_overwrite(
+    hive_acid_insert(spark, root, df, SCHEMA, _fields(), 1)
+    hive_acid_insert(
         spark,
         root,
         df.withColumn("k", F.col("k") + 5),
         SCHEMA,
         _fields(),
         2,
+        overwrite=True,
     )
     ks = {r.k for r in read_hive_acid(spark, root, SCHEMA).collect()}
     assert ks == {6, 7}
@@ -683,13 +693,45 @@ def test_hive_acid_overwrite_elects_over_prior_dirs(spark, tmp_path):
     assert removed == ["delta_0000001_0000001"]
 
 
-def test_hive_mm_overwrite_empty_hides_rows(spark, tmp_path):
+@pytest.mark.parametrize("shape", ["acid", "acid_static", "mm"])
+def test_empty_overwrite_hides_rows(spark, tmp_path, shape):
+    """INSERT OVERWRITE with no rows still writes an empty base_W, so
+    the old rows hide: on a full-ACID table, on one static partition
+    of a full-ACID table (the other partitions keep their rows) and
+    on an MM table."""
     root = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "A", 1.0)], MM_DDL)
-    append_mm_delta(spark, root, df, 1)
-    hive_mm_overwrite(spark, root, df.limit(0), 2)
-    got = read_hive_mm(spark, root, empty_schema=MM_DDL)
-    assert got.count() == 0
+    if shape == "mm":
+        append_mm_delta(spark, root, df, 1)
+        append_mm_delta(spark, root, df.limit(0), 2, overwrite=True)
+        got = read_hive_mm(spark, root, empty_schema=MM_DDL)
+        assert got.count() == 0
+        return
+    pc = "p" if shape == "acid_static" else None
+    seed = df
+    if pc:
+        parts = spark.createDataFrame([("X",), ("Y",)], "p string")
+        seed = df.crossJoin(parts)
+    hive_acid_insert(
+        spark, root, seed, SCHEMA, _fields(), 1, partition_col=pc
+    )
+    [base] = hive_acid_insert(
+        spark,
+        root,
+        df.limit(0),
+        SCHEMA,
+        _fields(),
+        2,
+        overwrite=True,
+        partition_col=pc,
+        static_value="X" if pc else None,
+    )
+    assert os.path.basename(base) == "base_0000002"
+    assert os.listdir(base) == []
+    got = read_hive_acid(spark, root, SCHEMA, partition_col=pc).collect()
+    assert {(r.k, r.p if pc else None) for r in got} == (
+        {(1, "Y")} if pc else set()
+    )
 
 
 # --- 8. IVF × PQ residual (r11 verdict next-round task 8) ----------------------

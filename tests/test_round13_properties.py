@@ -34,13 +34,13 @@ from pyspark.sql import functions as F
 from layer_apache_hive_spark.sources.hive_acid import (
     HiveWriteIdLedger,
     ValidWriteIdList,
-    append_delta,
     clean_hive_acid,
-    hive_acid_overwrite,
+    hive_acid_insert,
     read_hive_acid,
     _elect_dirs,
 )
 from tests.test_round10_properties import SCHEMA, _fields
+from tests.test_round12_properties import _scratch_entries
 
 MM_DDL = "k long, status string, price double"
 
@@ -55,16 +55,17 @@ def _seed_delta_then_aborted_base(spark, tmp_path):
     os.makedirs(root)
     df = spark.createDataFrame([(1, "A", 1.0), (2, "B", 2.0)], MM_DDL)
     w1 = led.allocate(root)
-    append_delta(spark, root, df, SCHEMA, _fields(), w1)
+    hive_acid_insert(spark, root, df, SCHEMA, _fields(), w1)
     led.commit(root, w1)
     w2 = led.allocate(root)
-    hive_acid_overwrite(
+    hive_acid_insert(
         spark,
         root,
         df.withColumn("k", F.col("k") + 100),
         SCHEMA,
         _fields(),
         w2,
+        overwrite=True,
     )
     led.abort(root, w2)  # the IOW never committed
     return led, root, w1, w2
@@ -96,12 +97,12 @@ def test_open_base_not_elected_until_commit(spark, tmp_path):
     os.makedirs(root)
     df = spark.createDataFrame([(1, "A", 1.0)], MM_DDL)
     w1 = led.allocate(root)
-    append_delta(spark, root, df, SCHEMA, _fields(), w1)
+    hive_acid_insert(spark, root, df, SCHEMA, _fields(), w1)
     led.commit(root, w1)
     w2 = led.allocate(root)
-    hive_acid_overwrite(
+    hive_acid_insert(
         spark, root, df.withColumn("k", F.lit(9).cast("long")),
-        SCHEMA, _fields(), w2,
+        SCHEMA, _fields(), w2, overwrite=True,
     )
     mid = {
         r.k
@@ -128,12 +129,12 @@ def test_aborted_base_falls_back_to_next_valid_base(spark, tmp_path):
     os.makedirs(root)
     df = spark.createDataFrame([(5, "A", 5.0)], MM_DDL)
     w1 = led.allocate(root)
-    hive_acid_overwrite(spark, root, df, SCHEMA, _fields(), w1)
+    hive_acid_insert(spark, root, df, SCHEMA, _fields(), w1, overwrite=True)
     led.commit(root, w1)
     w2 = led.allocate(root)
-    hive_acid_overwrite(
+    hive_acid_insert(
         spark, root, df.withColumn("k", F.lit(6).cast("long")),
-        SCHEMA, _fields(), w2,
+        SCHEMA, _fields(), w2, overwrite=True,
     )
     led.abort(root, w2)
     got = {
@@ -197,7 +198,7 @@ def mgr13(spark, tmp_path):
         [(1, "A", 1.0), (2, "A", 2.0), (3, "B", 3.0)], MM_DDL
     )
     w = led.allocate(root)
-    append_delta(spark, root, seed, SCHEMA, _fields(), w, n_buckets=2)
+    hive_acid_insert(spark, root, seed, SCHEMA, _fields(), w, n_buckets=2)
     led.commit(root, w)
     mgr.enroll_hive_acid("acid13", root, SCHEMA, _fields(), n_buckets=2)
     return mgr, root
@@ -633,6 +634,7 @@ def test_wire_partitioned_merge_refuses_partition_set_and_cardinality(
         "WHEN MATCHED THEN UPDATE SET price = s.price",
     )
     assert out.startswith("ERR_ENDED:") and "cardinality" in out, out
+    assert _scratch_entries(root) == []  # the aborted write's staging
     out = mgr.handle(
         "s1",
         "MERGE INTO pt13 t USING r13_pmerge_dup s ON t.k = s.k "
@@ -1089,7 +1091,7 @@ def test_stream_crash_mid_batch_reads_pre_batch_state(spark, tmp_path):
     ) == 1
     # batch 1 crashes AFTER the rename, BEFORE the commit record:
     w = led.allocate(root)
-    append_delta(spark, root, df1, SCHEMA, _fields(), w)
+    hive_acid_insert(spark, root, df1, SCHEMA, _fields(), w)
     del led  # the manager dies here; writeid w is OPEN on disk
 
     succ = HiveWriteIdLedger(path)
@@ -1165,7 +1167,7 @@ def test_major_recompaction_elects_later_visibility_suffix(
     df = spark.createDataFrame([(1, "A", 1.0), (2, "B", 2.0)], MM_DDL)
     for i in range(2):
         w = led.allocate(root)
-        append_delta(
+        hive_acid_insert(
             spark, root,
             df.withColumn("k", F.col("k") + 10 * i),
             SCHEMA, _fields(), w,
@@ -1202,7 +1204,7 @@ def test_minor_recompaction_same_range_suffix_dedup(spark, tmp_path):
     df = spark.createDataFrame([(1, "A", 1.0)], MM_DDL)
     for i in range(2):
         w = led.allocate(root)
-        append_delta(
+        hive_acid_insert(
             spark, root,
             df.withColumn("k", F.lit(i + 1).cast("long")),
             SCHEMA, _fields(), w,
@@ -1250,3 +1252,59 @@ def test_visibility_counter_durable_and_separate_from_writeids(
     assert led.allocate(root) == w1 + 1
     succ = HiveWriteIdLedger(p)
     assert succ.next_visibility_txn() == 3  # durable counter
+
+
+# --- part 6: a failed fold leaves the table as it was ------------------------
+
+
+@pytest.mark.parametrize("kind", ["major", "minor"])
+def test_failed_fold_leaves_table_unchanged(spark, tmp_path, kind):
+    """A fold whose write job fails part-way (one bucket's task
+    raises, the other's file lands) must not leave a partial dir under
+    a live name: the election would pick it as the newest and read a
+    fraction of the rows, and the Cleaner would drop the dirs it seems
+    to cover. The table reads the same rows from the same dirs, no
+    staging is left, and the explicit request shows 'failed'."""
+    import pyarrow as pa
+
+    from layer_apache_hive_spark.sources.hive_acid import (
+        HiveAcidInitiator,
+        _parse_acid_name,
+    )
+
+    root = str(tmp_path / "t")
+    os.makedirs(root)
+    batches = [range(0, 6), range(6, 12), [1 << 40]]
+    for w, keys in enumerate(batches, start=1):
+        df = spark.createDataFrame(
+            [(k, "A", float(w)) for k in keys], MM_DDL
+        )
+        hive_acid_insert(spark, root, df, SCHEMA, _fields(), w, n_buckets=2)
+
+    def state():
+        rows = sorted(
+            tuple(r) for r in read_hive_acid(spark, root, SCHEMA).collect()
+        )
+        dirs = sorted(e for e in os.listdir(root) if _parse_acid_name(e))
+        return rows, dirs
+
+    before = state()
+    assert len(before[0]) == 13
+    # an int32 key field: the bucket holding 1 << 40 fails its write
+    # task, the other bucket's task writes its file
+    narrow = [("k", pa.int32())] + _fields()[1:]
+    init = HiveAcidInitiator(
+        spark,
+        delta_num_threshold=100,
+        delta_pct_threshold=100.0,
+        serve_compactions_as="r13_failed_folds",
+    )
+    init.enroll(root, SCHEMA, narrow)
+    row = init.request_compaction(root, kind)
+    with pytest.raises(Exception):
+        init.run_once()
+    assert state() == before
+    assert _scratch_entries(root) == []
+    assert row["state"] == "failed" and row["detail"], row
+    shown = spark.table("global_temp.r13_failed_folds").collect()
+    assert [(r.kind, r.state) for r in shown] == [(kind, "failed")]

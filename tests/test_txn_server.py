@@ -299,7 +299,7 @@ from layer_apache_hive_spark.txn import (
     TxnSessionManager, install_txn_handler, txn_session_conf)
 from layer_apache_hive_spark.acid import TransactionCatalog
 from layer_apache_hive_spark.sources.hive_acid import (
-    HiveAcidInitiator, append_delta, read_hive_acid)
+    HiveAcidInitiator, hive_acid_insert, read_hive_acid)
 
 port = {port}
 conf = txn_session_conf()
@@ -315,7 +315,7 @@ root = {root!r}
 os.makedirs(root)
 seed = spark.createDataFrame(
     [(1, "A", 1.0), (2, "A", 2.0)], "k long, status string, price double")
-append_delta(spark, root, seed, SCHEMA, FIELDS, 1, n_buckets=2)
+hive_acid_insert(spark, root, seed, SCHEMA, FIELDS, 1, n_buckets=2)
 
 init = HiveAcidInitiator(
     spark, delta_num_threshold=100, delta_pct_threshold=100.0,
