@@ -6,17 +6,26 @@ catalog; for this repo the in-memory catalog + temp views over parquet
 is the equivalent of Hive EXTERNAL TABLEs (schema over an existing
 path, drop keeps data).
 
+A table's schema is inferred from its parquet footers once per file
+identity and kept in-process (``parquet_schema``), the stand-in for
+the schema a metastore stores: later reads of an unchanged file pass
+it to ``spark.read.schema(...)`` and run no inference job.
+
 At 100 TB the same function body becomes
 ``spark.read.parquet('s3://…/table/')`` over a partitioned layout —
 partition discovery + pruning are built into the source; nothing here
-is scale-sensitive.
+is scale-sensitive. (A path this process cannot stat, such as an
+object-store URI, is inferred on every read, as before.)
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # The ten driver-generated tables (FIXTURES.md).
 TABLES = [
@@ -49,15 +58,92 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
+# Session confs under which the same parquet footers infer a different
+# schema; their values are part of the schema cache's key.
+INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# Inferred schemas by (path, file identities, inference confs). Entries
+# are small; the cap only bounds a process that opens many scratch
+# files, and reaching it starts the cache afresh.
+_SCHEMAS: dict[tuple, StructType] = {}
+_MAX_SCHEMAS = 256
+
+
+def _file_identities(path: str) -> tuple | None:
+    """(name, size, mtime_ns, inode) of every file ``path`` resolves to
+    (itself, or every file under it for a directory table), or None
+    when it is not a local path this process can stat."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_size, st.st_mtime_ns, st.st_ino),)
+        files = []
+        for d, dirs, names in os.walk(path):
+            dirs.sort()
+            for n in sorted(names):
+                f = os.path.join(d, n)
+                st = os.stat(f)
+                files.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+        return tuple(files)
+    except OSError:  # missing, or raced with a rewrite: Spark reports it
+        return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    file identity and inference conf.
+
+    Each inference is a Spark job that opens the footers. Hive's
+    metastore keeps a table's schema instead; here the schema of a
+    file that has not changed is kept, and a rewrite (new size, mtime
+    or inode, or a new part file in a directory) infers again."""
+    files = _file_identities(path)
+    if files is None:
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        files,
+        tuple(spark.conf.get(c) for c in INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if len(_SCHEMAS) >= _MAX_SCHEMAS:
+            _SCHEMAS.clear()
+        _SCHEMAS[key] = schema
+    return schema
+
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` physical-type normalization: nanosecond int64 (read
+    as long under nanosAsLong) or µs TIMESTAMP_NTZ → plain TimestampType.
+    Under the UTC session timezone the wall-clock values match DuckDB's
+    naive read either way."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table without registering a view (operator-level use).
+
+    The schema comes from ``parquet_schema``, so a file already opened
+    in this process is read without a schema-inference job; only the
+    first read of each file (or of a rewrite of it) infers.
 
     ``events.ts`` has shipped as either nanosecond int64 (needs
     spark.sql.legacy.parquet.nanosAsLong + µs truncation) or µs
     timestamp with isAdjustedToUTC=false (which Spark ≥3.4 infers as
     TIMESTAMP_NTZ by default — rejected by streaming watermarks). Both
-    are normalized here to plain TimestampType; under the UTC session
-    timezone the wall-clock values match DuckDB's naive read either way.
+    are normalized by ``normalize_ts`` to plain TimestampType.
     """
     # Hive semantics are non-ANSI (CAST('x' AS INT) -> NULL, overflow
     # wraps). session.py sets this for sessions we build, but queries
@@ -90,13 +176,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         df = spark.table(f"{corpus_db(sf_dir)}.{name}")
     else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        path = table_path(sf_dir, name)
+        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
-        from pyspark.sql import functions as F
-
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_ts(df)
     return df

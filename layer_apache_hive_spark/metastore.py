@@ -44,7 +44,7 @@ import os
 from pyspark.sql import SparkSession
 
 from layer_apache_hive_spark.catalog import TABLES, table_path
-from layer_apache_hive_spark.session import TMP_ROOT, WORKER_CONF
+from layer_apache_hive_spark.session import SESSION_CONF, TMP_ROOT
 
 DEFAULT_METASTORE_DIR = os.path.join(TMP_ROOT, "metastore")
 DEFAULT_HIVE_WAREHOUSE = os.path.join(TMP_ROOT, "hive_warehouse")
@@ -110,7 +110,7 @@ def hive_session(
         "spark.sql.shuffle.partitions": "32",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.ui.enabled": "false",
-        **WORKER_CONF,
+        **SESSION_CONF,
     }
     merged.update(extra_conf)
     builder = (

@@ -9,7 +9,7 @@ no ``.pyc`` cache, and every task's ``importlib.invalidate_caches()``
 ``zipimporter`` re-read its archive's whole directory. The jar holds no
 Python at all.
 
-``session.WORKER_CONF`` names this module as ``spark.python.daemon.module``.
+``session.SESSION_CONF`` names this module as ``spark.python.daemon.module``.
 Run as ``python -m``, it removes those archives from ``sys.path`` and their
 importers from ``sys.path_importer_cache`` before anything imports pyspark,
 then runs ``pyspark.daemon.manager()``; the workers it forks inherit the

@@ -24,13 +24,20 @@ PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Scratch space for fixtures, sinks and compiled classes (gitignored).
 TMP_ROOT = os.path.join(PACKAGE_ROOT, ".tmp")
 
-# Python workers fork from ``pyworker``'s daemon, which drops Spark's
-# bundled pyspark/py4j zips and the spark-core jar from their path (see
-# its docstring). PYTHONPATH lets the daemon import this package from
-# any working directory. Every session factory applies these.
-WORKER_CONF = {
+# Confs every session factory applies (get_spark here,
+# metastore.hive_session).
+SESSION_CONF = {
+    # Python workers fork from ``pyworker``'s daemon, which drops
+    # Spark's bundled pyspark/py4j zips and the spark-core jar from
+    # their path (see its docstring). PYTHONPATH lets the daemon import
+    # this package from any working directory.
     "spark.python.daemon.module": "layer_apache_hive_spark.pyworker",
     "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
+    # Generated classes kept, keyed by source text (a static conf). The
+    # olap_read benchmark's ten ids compile 101 distinct classes, just
+    # over Spark's default of 100, so its LRU evicted and recompiled
+    # 27-39 classes per pass; 1000 holds ten such working sets.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -83,6 +90,6 @@ def get_spark(
         # kept under the gitignored scratch dir
         .config("spark.sql.warehouse.dir", os.path.join(PACKAGE_ROOT, ".tmp", "warehouse"))
     )
-    for key, value in WORKER_CONF.items():
+    for key, value in SESSION_CONF.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

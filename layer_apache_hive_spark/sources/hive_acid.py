@@ -4099,7 +4099,8 @@ class HiveAcidInitiator:
       place; writers appending later deltas are never blocked,
       readers keep electing, and a failed fold leaves the table as
       it was. Its explicit request is marked 'failed' (Hive's
-      COMPACTION_QUEUE state) with the error as detail.
+      COMPACTION_QUEUE state) with the error as detail, and the pass
+      goes on with the next enrolled table.
     * **The Cleaner defers for pinned readers.** A reader's plan pins
       the elected FILES at construction; dropping subsumed dirs under
       it is Hive's ValidTxnList violation. ``pin(root)`` registers an
@@ -4329,26 +4330,32 @@ class HiveAcidInitiator:
         """One initiator pass: run explicit requests, elect + fold
         every enrolled layout over threshold, retry deferred cleans,
         re-publish served views. Returns this pass's (root, kind,
-        detail) compactions."""
+        detail) compactions.
+
+        A table whose fold raises is skipped for the rest of the pass
+        (its request, if any, is marked ``'failed'``) and the pass goes
+        on with the next table. After the pass the first such error is
+        re-raised, carrying the pass's completed rows as ``e.done``."""
         with self._lock:
             return self._run_once_locked()
 
     def _run_once_locked(self) -> list[tuple[str, str, object]]:
         done: list[tuple[str, str, object]] = []
+        errors: list[Exception] = []
         for t in self.tables:
             root = t["root"]
             req = self._requests.pop(root, None)
-            kind = req["kind"] if req else self._elect_kind(root)
             changed = False
             detail: object = None
             mm = t.get("insert_only")
             mm_schema = ", ".join(
                 f"{n} {typ}" for n, typ in t["schema"]
             )
-            vw = self._vw(t)
-            vfn = t.get("visibility_fn")
-            vis = vfn() if (vfn is not None and kind) else None
             try:
+                kind = req["kind"] if req else self._elect_kind(root)
+                vw = self._vw(t)
+                vfn = t.get("visibility_fn")
+                vis = vfn() if (vfn is not None and kind) else None
                 if kind == "major":
                     detail = (
                         compact_hive_mm(
@@ -4394,8 +4401,8 @@ class HiveAcidInitiator:
             except Exception as e:
                 if req is not None:
                     req["detail"], req["state"] = str(e), "failed"
-                    self._publish_compactions()
-                raise
+                errors.append(e)
+                continue
             if changed:
                 done.append((root, kind, detail))
                 if req is not None:
@@ -4447,6 +4454,9 @@ class HiveAcidInitiator:
                 # files
                 t["republish_fn"]()
         self._publish_compactions()
+        if errors:
+            errors[0].done = done
+            raise errors[0]
         return done
 
     def _publish_compactions(self) -> None:

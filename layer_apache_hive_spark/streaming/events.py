@@ -26,7 +26,12 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from layer_apache_hive_spark.catalog import read_table
+from layer_apache_hive_spark.catalog import (
+    normalize_ts,
+    parquet_schema,
+    read_table,
+    table_path,
+)
 from layer_apache_hive_spark.functions.numeric import dsum, sql_dsum
 from layer_apache_hive_spark.registry import register
 from layer_apache_hive_spark.session import TMP_ROOT
@@ -179,17 +184,6 @@ def _pin_stream_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
-def _normalize_ts(df: DataFrame) -> DataFrame:
-    """events.ts physical-type normalization (ns-int64 or µs-NTZ →
-    plain TIMESTAMP), shared by both stream sources and tests."""
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
-
-
 def _stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over a .tmp copy of events.parquet (file source needs
     a directory it can list; /root/testdata stays untouched)."""
@@ -208,9 +202,9 @@ def _stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Use the RAW parquet schema (ts arrives as nanos-long or µs-NTZ),
     # then normalize below.
     _pin_stream_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, table_path(sf_dir, "events"))
     raw = spark.readStream.schema(schema).parquet(src_dir)
-    return _normalize_ts(raw)
+    return normalize_ts(raw)
 
 
 @contextmanager
@@ -467,13 +461,13 @@ def _stream_source_parts(spark: SparkSession, sf_dir: str, n_parts: int = 2) -> 
         spark.read.parquet(f"{sf_dir}/events.parquet").repartition(
             n_parts
         ).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(f"{src_dir}").schema
+    schema = parquet_schema(spark, src_dir)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    return _normalize_ts(raw)
+    return normalize_ts(raw)
 
 
 @register(
@@ -562,7 +556,7 @@ def _stream_source_tsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not (os.path.exists(tag_file) and open(tag_file).read() == tag):
         shutil.rmtree(src_dir, ignore_errors=True)
     if not glob.glob(f"{src_dir}/*.parquet"):
-        e = _normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+        e = read_table(spark, sf_dir, "events")
         med_row = e.select(
             F.expr("CAST(percentile(unix_micros(ts), 0.5) AS LONG)").alias("m")
         ).collect()[0]["m"]
@@ -585,13 +579,13 @@ def _stream_source_tsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (1_000_000_000 + 100 * i, 1_000_000_000 + 100 * i))
         with open(tag_file, "w") as fh:
             fh.write(tag)
-    schema = spark.read.parquet(src_dir).schema
+    schema = parquet_schema(spark, src_dir)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    return _normalize_ts(raw)
+    return normalize_ts(raw)
 
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000
@@ -2357,7 +2351,7 @@ def evt_stream_acid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # at-least-once delivery simulated: replay batch 0 after success —
     # the guard must drop it without writing a third version
-    commit_batch(_normalize_ts(spark.read.parquet(
+    commit_batch(normalize_ts(spark.read.parquet(
         f"{TMP_ROOT}/stream_src_parts/{label}")), 0)
 
     head = vt.current_version()
@@ -2824,7 +2818,7 @@ def evt_stream_hive_acid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at-least-once delivery simulated: replay batch 0 after success —
     # the rename guard must drop it without a third delta
     commit_batch(
-        _normalize_ts(
+        normalize_ts(
             spark.read.parquet(
                 f"{TMP_ROOT}/stream_src_parts/{label}"
             )
@@ -2926,7 +2920,7 @@ def evt_stream_hive_mm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at-least-once delivery simulated: replay batch 0 after success —
     # the existence guard must drop it without a third delta
     commit_batch(
-        _normalize_ts(
+        normalize_ts(
             spark.read.parquet(
                 f"{TMP_ROOT}/stream_src_parts/{label}"
             )

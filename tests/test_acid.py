@@ -17,9 +17,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-from layer_apache_hive_spark.acid import CommitConflict, VersionedTable  # noqa: E402
+from layer_apache_hive_spark.acid import CommitConflict, VersionedTable
+from layer_apache_hive_spark.session import PACKAGE_ROOT, TMP_ROOT
 
 
 def _df(spark, rows):
@@ -144,7 +143,6 @@ def test_vacuum_keeps_referenced_snapshots(spark, tmp_path):
 
 _WRITER = """
 import os, sys, time
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 from layer_apache_hive_spark.acid import CommitConflict, VersionedTable
 
@@ -207,7 +205,7 @@ def test_two_concurrent_writers_serialize(spark, tmp_path):
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,
-            cwd="/root/repo",
+            cwd=PACKAGE_ROOT,
         )
         for name in ("A", "B")
     }
@@ -254,7 +252,7 @@ def test_ddl_history_vacuum_retires_expired_version(spark):
     }
     assert [rows[v]["retained"] for v in (1, 2, 3)] == [False, True, True]
     label = SF_DIR.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    vt = VersionedTable(f"/root/repo/.tmp/acid_history/{label}")
+    vt = VersionedTable(f"{TMP_ROOT}/acid_history/{label}")
     assert vt.versions() == [2, 3]
     with _pytest.raises(FileNotFoundError):
         vt.manifest(1)

@@ -16,7 +16,9 @@ import os
 
 import pytest
 
-REPO = "/root/repo"
+from layer_apache_hive_spark.session import PACKAGE_ROOT
+
+REPO = PACKAGE_ROOT
 
 # The full-registry replicate artifacts (Makefile `replicates`).
 _ARTIFACTS = [

@@ -12,7 +12,7 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,7 +23,7 @@ def _run(script: str, timeout: int = 600) -> str:
         capture_output=True,
         text=True,
         timeout=timeout,
-        cwd="/root/repo",
+        cwd=PACKAGE_ROOT,
     )
     assert proc.returncode == 0, (
         f"subprocess failed rc={proc.returncode}\n"
@@ -34,7 +34,6 @@ def _run(script: str, timeout: int = 600) -> str:
 
 _COLGRANT_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import corpus_db
 db = corpus_db({sf!r})
 os.environ["SPARK_GRAFT_HS2_CREDENTIALS"] = (
@@ -195,7 +194,6 @@ def test_thrift_server_column_level_and_db_qualified_grants():
 
 _GRANT_WIRE_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import corpus_db
 db = corpus_db({sf!r})
 os.environ["SPARK_GRAFT_HS2_CREDENTIALS"] = (

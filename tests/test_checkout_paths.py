@@ -1,10 +1,11 @@
-"""The package, bench.py and scripts/ locate the checkout, never
-hard-code it.
+"""The package, bench.py, scripts/ and tests/ locate the checkout,
+never hard-code it.
 
 Every path under the checkout (the ``.tmp`` scratch root, compiled
 classes, the metastore, ``BENCH_local.json``, the artifacts the
-scripts write) derives from ``session.PACKAGE_ROOT`` or the script's
-own ``__file__``, so a clone elsewhere on disk writes into its own
+scripts write, the tests' fixtures and subprocess working directory)
+derives from ``session.PACKAGE_ROOT`` or the script's own
+``__file__``, so a clone elsewhere on disk imports and writes its own
 tree. Run from this checkout, the test fails on any source line
 spelling the checkout's absolute path, bare or with a suffix."""
 
@@ -19,7 +20,8 @@ from layer_apache_hive_spark.session import PACKAGE_ROOT
 
 def _sources():
     yield os.path.join(PACKAGE_ROOT, "bench.py")
-    yield from sorted(glob.glob(os.path.join(PACKAGE_ROOT, "scripts", "*.py")))
+    for d in ("scripts", "tests"):
+        yield from sorted(glob.glob(os.path.join(PACKAGE_ROOT, d, "*.py")))
     pkg = os.path.join(PACKAGE_ROOT, "layer_apache_hive_spark")
     for d, _, files in os.walk(pkg):
         yield from (os.path.join(d, f) for f in files if f.endswith(".py"))

@@ -5,13 +5,9 @@ reject-before-write contract."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from layer_apache_hive_spark.constraints import (  # noqa: E402
+from layer_apache_hive_spark.constraints import (
     Constraint,
     ConstraintViolation,
     check,

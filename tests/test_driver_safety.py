@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql.types import ArrayType, MapType
 
 from layer_apache_hive_spark.registry import _load_all_modules, _REGISTRY
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 from tests.conftest import SF_DIR
 
 _load_all_modules()
@@ -122,7 +123,7 @@ def test_vanilla_driver_session_subprocess():
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=PACKAGE_ROOT,
     )
     assert proc.returncode == 0, (
         f"driver-identical session run failed:\n{proc.stdout[-3000:]}\n"

@@ -13,15 +13,11 @@ exit 0 required).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from scripts.edge_empty import EMPTY_DIR, build_empty
 
-from scripts.edge_empty import EMPTY_DIR, build_empty  # noqa: E402
-
-from layer_apache_hive_spark.registry import all_queries  # noqa: E402
+from layer_apache_hive_spark.registry import all_queries
 
 # the ids the round-3 sweep caught raising on empty input
 ONCE_BROKEN = [

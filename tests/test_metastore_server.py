@@ -20,7 +20,7 @@ import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,7 +31,7 @@ def _run(script: str, timeout: int = 300) -> str:
         capture_output=True,
         text=True,
         timeout=timeout,
-        cwd="/root/repo",
+        cwd=PACKAGE_ROOT,
     )
     assert proc.returncode == 0, (
         f"subprocess failed rc={proc.returncode}\n"
@@ -42,7 +42,6 @@ def _run(script: str, timeout: int = 300) -> str:
 
 _WRITER = """
 import sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import hive_session, provision_corpus
 spark = hive_session(app_name="metastore-writer", master="local[4]",
                      metastore_dir={ms!r}, warehouse_dir={wh!r})
@@ -60,7 +59,6 @@ spark.stop()
 
 _READER = """
 import sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import (
     hive_session, is_provisioned, corpus_db, TABLES)
 spark = hive_session(app_name="metastore-fresh-reader", master="local[4]",
@@ -97,7 +95,6 @@ def test_metastore_survives_jvm_restart():
 
 _SERVER = """
 import sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import hive_session, provision_corpus
 from layer_apache_hive_spark.server import (
     start_thrift_server, wait_for_port, beeline_query)
@@ -147,7 +144,6 @@ spark.stop()
 
 _PART_WRITER = """
 import sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import (
     hive_session, provision_partitioned_events)
 spark = hive_session(app_name="part-writer", master="local[4]",
@@ -161,7 +157,6 @@ spark.stop()
 
 _PART_READER = """
 import sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import hive_session, corpus_db
 spark = hive_session(app_name="part-fresh-reader", master="local[4]",
                      metastore_dir={ms!r}, warehouse_dir={wh!r})
@@ -202,7 +197,6 @@ def test_partitioned_metastore_table_prunes_cross_jvm():
 
 _AUTH_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 os.environ["SPARK_GRAFT_HS2_CREDENTIALS"] = "analyst:s3cret,etl:pipeline"
 from layer_apache_hive_spark.auth import auth_session_conf
 from layer_apache_hive_spark.metastore import hive_session, provision_corpus
@@ -349,7 +343,6 @@ def test_thrift_server_serves_registered_query():
 
 _AUTHZ_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 os.environ["SPARK_GRAFT_HS2_CREDENTIALS"] = (
     "analyst:s3cret,etl:pipeline,intern:readonly")
 # etl reads everything; intern reads ONLY nation; analyst (a valid
@@ -476,7 +469,6 @@ def test_thrift_server_sql_std_authorization():
 
 _ACID_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.acid import VersionedTable, publish_to_catalog
 from layer_apache_hive_spark.metastore import hive_session
 from layer_apache_hive_spark.server import (
@@ -578,7 +570,6 @@ def test_thrift_server_serves_versioned_tables():
 
 _GRANT_SERVER = """
 import os, sys, tempfile
-sys.path.insert(0, "/root/repo")
 acl_file = {ms!r} + "_acl"
 open(acl_file, "w").write("etl=*\\n")
 os.environ["SPARK_GRAFT_HS2_CREDENTIALS"] = "etl:pipeline,intern:readonly"
@@ -685,7 +676,6 @@ def test_thrift_server_live_grant_revoke():
 
 _HIVE_LAYOUT_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 import pyarrow as pa
 from pyspark.sql import functions as F
 from layer_apache_hive_spark.metastore import hive_session

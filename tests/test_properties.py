@@ -25,6 +25,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from layer_apache_hive_spark.functions.numeric import dsum
+from layer_apache_hive_spark.session import TMP_ROOT
 from tests.conftest import SF_DIR
 
 _SETTINGS = dict(
@@ -458,6 +459,7 @@ def test_sessionize_state_matches_per_batch_fold(spark):
     from collections import defaultdict
 
     import layer_apache_hive_spark.streaming.events as ev
+    from layer_apache_hive_spark.catalog import normalize_ts
 
     def to_us(dt):
         return int(
@@ -481,17 +483,17 @@ def test_sessionize_state_matches_per_batch_fold(spark):
 
     label = os.path.basename(SF_DIR.rstrip("/"))
     files = sorted(
-        globmod.glob(f"/root/repo/.tmp/stream_src_tsplit/{label}/*.parquet"),
+        globmod.glob(f"{TMP_ROOT}/stream_src_tsplit/{label}/*.parquet"),
         key=os.path.getmtime,
     )
     assert len(files) == 2
     # the time-split invariant the oracle rests on: every event in the
     # second batch is strictly later than every event in the first
     ev._pin_stream_confs(spark)
-    max0 = ev._normalize_ts(spark.read.parquet(files[0])).agg(
+    max0 = normalize_ts(spark.read.parquet(files[0])).agg(
         {"ts": "max"}
     ).collect()[0][0]
-    min1 = ev._normalize_ts(spark.read.parquet(files[1])).agg(
+    min1 = normalize_ts(spark.read.parquet(files[1])).agg(
         {"ts": "min"}
     ).collect()[0][0]
     assert max0 < min1
@@ -499,7 +501,7 @@ def test_sessionize_state_matches_per_batch_fold(spark):
     per_file: list[dict] = []
     for f in files:
         by_user = defaultdict(list)
-        for r in ev._normalize_ts(spark.read.parquet(f)).select(
+        for r in normalize_ts(spark.read.parquet(f)).select(
             "user_id", "ts"
         ).collect():
             by_user[r["user_id"]].append(to_us(r["ts"]))

@@ -274,9 +274,7 @@ def test_initiator_folds_live_streaming_chain(spark, tmp_path):
             .withColumn("__ctid", F.lit(w).cast("long"))
             .withColumn("__op", F.lit(_OP_INSERT))
         )
-        scratch = os.path.join(root, f".scratch_delta_{w:07d}")
-        _write_version_dirs(events, None, scratch, None, _fields())
-        os.rename(scratch, final)
+        _write_version_dirs(events, None, final, None, _fields())
 
     def batch_rows(ws):
         return {

@@ -40,6 +40,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from layer_apache_hive_spark.session import TMP_ROOT
 from layer_apache_hive_spark.sources.hive_acid import (
     ValidWriteIdList,
     _fixture_done,
@@ -627,7 +628,7 @@ def test_pq_training_beats_untrained_codebook_on_clustered(spark):
         return len(got & exact) / len(exact)
 
     clustered = build_clustered_embeddings(
-        "/root/testdata/sf0.001", "/root/repo/.tmp/r11_pq_clustered"
+        "/root/testdata/sf0.001", f"{TMP_ROOT}/r11_pq_clustered"
     )
     exact_c = exact_pairs(clustered)
     r_trained = recall(clustered, _PQT_ITERS, exact_c)

@@ -33,6 +33,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from layer_apache_hive_spark.session import TMP_ROOT
 from layer_apache_hive_spark.sources.hive_acid import (
     HiveWriteIdLedger,
     ValidWriteIdList,
@@ -762,7 +763,7 @@ def test_ivfpq_residual_recall_and_cell_bound(spark):
     )
 
     clustered = build_clustered_embeddings(
-        "/root/testdata/sf0.001", "/root/repo/.tmp/r12_ivfr_clustered"
+        "/root/testdata/sf0.001", f"{TMP_ROOT}/r12_ivfr_clustered"
     )
     emb = (
         read_table(spark, clustered, "embeddings")

@@ -1308,3 +1308,42 @@ def test_failed_fold_leaves_table_unchanged(spark, tmp_path, kind):
     assert row["state"] == "failed" and row["detail"], row
     shown = spark.table("global_temp.r13_failed_folds").collect()
     assert [(r.kind, r.state) for r in shown] == [(kind, "failed")]
+
+
+def test_failed_fold_does_not_stop_the_pass(spark, tmp_path):
+    """Two enrolled tables, the first one's fold failing: the pass
+    still folds the second, marks only the first request 'failed', and
+    re-raises the first error afterwards with the pass's completed rows
+    as ``e.done``."""
+    import pyarrow as pa
+
+    from layer_apache_hive_spark.sources.hive_acid import HiveAcidInitiator
+
+    roots = [str(tmp_path / n) for n in ("bad", "good")]
+    for root, big in zip(roots, (1 << 40, 7)):
+        os.makedirs(root)
+        for w, keys in enumerate([range(0, 6), [big]], start=1):
+            df = spark.createDataFrame(
+                [(k, "A", float(w)) for k in keys], MM_DDL
+            )
+            hive_acid_insert(spark, root, df, SCHEMA, _fields(), w)
+    init = HiveAcidInitiator(
+        spark,
+        delta_num_threshold=100,
+        delta_pct_threshold=100.0,
+        serve_compactions_as="r13_failed_pass",
+    )
+    # the first table's int32 key field cannot hold 1 << 40
+    init.enroll(roots[0], SCHEMA, [("k", pa.int32())] + _fields()[1:])
+    init.enroll(roots[1], SCHEMA, _fields())
+    rows = [init.request_compaction(r, "major") for r in roots]
+    with pytest.raises(Exception) as exc:
+        init.run_once()
+    assert exc.value.done == [(roots[1], "major", 2)]
+    assert [r["state"] for r in rows] == ["failed", "succeeded"]
+    assert not any(e.startswith("base_") for e in os.listdir(roots[0]))
+    assert "base_0000002" in os.listdir(roots[1])
+    got = sorted(r.k for r in read_hive_acid(spark, roots[1], SCHEMA).collect())
+    assert got == [0, 1, 2, 3, 4, 5, 7]
+    shown = spark.table("global_temp.r13_failed_pass").collect()
+    assert [r.state for r in shown] == ["failed", "succeeded"]

@@ -18,13 +18,10 @@ VALUES; these check the PROPERTIES that justify the designs).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from layer_apache_hive_spark.registry import all_queries  # noqa: E402
+from layer_apache_hive_spark.registry import all_queries
+from layer_apache_hive_spark.session import TMP_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -161,7 +158,7 @@ def test_zorder_files_skip_on_both_dimensions(spark):
 
     all_queries()["sink_zorder"](spark, SF_DIR).count()  # (re)write
     files = sorted(
-        glob.glob("/root/repo/.tmp/sinks/sf0.001/zorder/part-*.parquet")
+        glob.glob(f"{TMP_ROOT}/sinks/sf0.001/zorder/part-*.parquet")
     )
     assert len(files) >= 4
     spans = {}

@@ -13,16 +13,12 @@
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
-
-from layer_apache_hive_spark.server import parse_beeline_csv2  # noqa: E402
+from layer_apache_hive_spark.server import parse_beeline_csv2
 
 
 def _pct_scaled100(vals: list[int], q: int) -> int | None:

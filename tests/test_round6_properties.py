@@ -26,15 +26,12 @@ plain pandas, so a bug that happened to be mirrored in the SQL twin
 from __future__ import annotations
 
 import hashlib
-import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+from tests.conftest import SF_DIR
 
-from tests.conftest import SF_DIR  # noqa: E402
-
-from layer_apache_hive_spark.registry import (  # noqa: E402
+from layer_apache_hive_spark.registry import (
     _load_all_modules,
     all_queries,
 )

@@ -17,10 +17,11 @@ from layer_apache_hive_spark.extensions.fixtures import (
     build_clustered_embeddings,
 )
 from layer_apache_hive_spark.registry import all_queries
+from layer_apache_hive_spark.session import PACKAGE_ROOT, TMP_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
-POS_DIR = "/root/repo/.tmp/clustered/pos"
-NEG_DIR = "/root/repo/.tmp/clustered/neg"
+POS_DIR = f"{TMP_ROOT}/clustered/pos"
+NEG_DIR = f"{TMP_ROOT}/clustered/neg"
 
 
 @pytest.fixture(scope="module")
@@ -168,14 +169,14 @@ def test_serve_cli_rejects_misconfigured_acl():
     r = subprocess.run(
         [sys.executable, "-m", "layer_apache_hive_spark", "serve",
          "--acl", "--auth"],
-        capture_output=True, text=True, timeout=60, cwd="/root/repo",
+        capture_output=True, text=True, timeout=60, cwd=PACKAGE_ROOT,
         env={**env, "SPARK_GRAFT_HS2_CREDENTIALS": "u:p"},
     )
     assert r.returncode == 2 and "SPARK_GRAFT_HS2_ACL" in r.stdout
 
     r2 = subprocess.run(
         [sys.executable, "-m", "layer_apache_hive_spark", "serve", "--acl"],
-        capture_output=True, text=True, timeout=60, cwd="/root/repo",
+        capture_output=True, text=True, timeout=60, cwd=PACKAGE_ROOT,
         env={**env, "SPARK_GRAFT_HS2_ACL": "u=nation"},
     )
     assert r2.returncode == 2 and "--auth" in r2.stdout

@@ -23,10 +23,11 @@ from layer_apache_hive_spark.extensions.fixtures import (
     build_clustered_embeddings,
 )
 from layer_apache_hive_spark.registry import all_queries
+from layer_apache_hive_spark.session import TMP_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
-POS_DIR = "/root/repo/.tmp/clustered/pos"
-NEG_DIR = "/root/repo/.tmp/clustered/neg"
+POS_DIR = f"{TMP_ROOT}/clustered/pos"
+NEG_DIR = f"{TMP_ROOT}/clustered/neg"
 
 N_QUERIES = 20
 K = 5
@@ -118,7 +119,7 @@ def test_hive_acid_directory_election_ignores_compacted_deltas(spark):
 
     from layer_apache_hive_spark.sources import scans
 
-    root = "/root/repo/.tmp/hive_acid_election"
+    root = f"{TMP_ROOT}/hive_acid_election"
     shutil.rmtree(root, ignore_errors=True)
 
     def write(dirname, keys, otid, op=0, with_row=True):

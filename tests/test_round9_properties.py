@@ -4,6 +4,7 @@ COVERAGE freshness, and the determinism self-check."""
 from __future__ import annotations
 
 from layer_apache_hive_spark import auth
+from layer_apache_hive_spark.session import TMP_ROOT
 
 
 def test_service_principal_reads_jvm_user_name(spark):
@@ -24,7 +25,7 @@ def _clustered_pos():
     )
 
     return build_clustered_embeddings(
-        "/root/testdata/sf0.001", "/root/repo/.tmp/clustered/pos"
+        "/root/testdata/sf0.001", f"{TMP_ROOT}/clustered/pos"
     )
 
 
@@ -278,7 +279,7 @@ def test_ivf_trained_full_recall_on_scrambled_labels(spark):
     for scramble in (False, True):
         d = build_clustered_embeddings(
             "/root/testdata/sf0.001",
-            f"/root/repo/.tmp/clustered/{'neg' if scramble else 'pos'}",
+            f"{TMP_ROOT}/clustered/{'neg' if scramble else 'pos'}",
             scramble_labels=scramble,
         )
         t = pq.read_table(f"{d}/embeddings.parquet").to_pandas()

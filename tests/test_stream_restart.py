@@ -29,9 +29,10 @@ from pyspark.sql.utils import StreamingQueryException
 
 from layer_apache_hive_spark.acid import CommitConflict, VersionedTable
 from layer_apache_hive_spark.functions.numeric import dsum
+from layer_apache_hive_spark.session import TMP_ROOT
 
 SF_DIR = "/root/testdata/sf0.001"
-ROOT = "/root/repo/.tmp/stream_restart"
+ROOT = f"{TMP_ROOT}/stream_restart"
 
 
 def _four_file_source(spark, name: str) -> str:
@@ -273,11 +274,7 @@ def test_hive_acid_ingest_exactly_once_across_kill_and_restart(spark):
                 .withColumn("__ctid", F.lit(w).cast("long"))
                 .withColumn("__op", F.lit(_OP_INSERT))
             )
-            scratch = os.path.join(table, f".scratch_{w:07d}")
-            shutil.rmtree(scratch, ignore_errors=True)
-            _write_version_dirs(events, None, scratch, None, fields)
-            if os.path.exists(scratch):
-                os.rename(scratch, final)
+            _write_version_dirs(events, None, final, None, fields)
         if batch_id == 1 and not crashed["done"]:
             crashed["done"] = True
             raise RuntimeError("injected crash after delta rename of batch 1")

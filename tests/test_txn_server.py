@@ -11,7 +11,7 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+from layer_apache_hive_spark.session import PACKAGE_ROOT
 
 
 def _run(script: str, timeout: int = 600) -> str:
@@ -20,7 +20,7 @@ def _run(script: str, timeout: int = 600) -> str:
         capture_output=True,
         text=True,
         timeout=timeout,
-        cwd="/root/repo",
+        cwd=PACKAGE_ROOT,
     )
     assert proc.returncode == 0, (
         f"subprocess failed rc={proc.returncode}\n"
@@ -31,7 +31,6 @@ def _run(script: str, timeout: int = 600) -> str:
 
 _TXN_SERVER = """
 import sys
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import hive_session
 from layer_apache_hive_spark.server import (
     start_thrift_server, wait_for_port, beeline_query, beeline_script)
@@ -193,7 +192,6 @@ def test_thrift_server_multi_statement_transactions():
 
 _TXN_RACE = """
 import sys, threading
-sys.path.insert(0, "/root/repo")
 from layer_apache_hive_spark.metastore import hive_session
 from layer_apache_hive_spark.server import (
     start_thrift_server, wait_for_port, beeline_query, beeline_script)
@@ -290,7 +288,6 @@ def test_thrift_server_concurrent_transaction_rebases():
 
 _ACID_DML_SERVER = """
 import os, sys
-sys.path.insert(0, "/root/repo")
 import pyarrow as pa
 from layer_apache_hive_spark.metastore import hive_session
 from layer_apache_hive_spark.server import (
